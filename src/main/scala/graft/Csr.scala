@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{Dataset, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftinternal.Internals
 import scala.collection.mutable.ArrayBuffer
 
 /** CSR-blocked, hash-partitioned adjacency (BASELINE.json:6, SURVEY §2.B E3).
@@ -140,7 +141,8 @@ object Csr {
     // block rows ≪ entries — that routes 10^8+-entry graphs to the
     // serialized level where object-form rows would tax GC tracing
     Superstep.cut(
-      build(edges, numPartitions, mode, maxDegPerBlock).toDF(),
+      build(Internals.cachedLeaf(edges), numPartitions, mode, maxDegPerBlock)
+        .toDF(),
       approxEntries)
       .as[AdjBlock]
   }

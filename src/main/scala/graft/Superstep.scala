@@ -52,6 +52,8 @@ object Superstep {
     * preserves partitioning/ordering for the next round's exchange-free
     * joins. Used by the algorithms whose loop control needs per-round
     * scalars (WCC's convergence count + comp-image estimate).
+    * The checkpoint's size estimate is capped, or it compounds every round
+    * ([[org.apache.spark.sql.graftinternal.Internals.capCheckpointStats]]).
     */
   def cutAndAgg(
       df: org.apache.spark.sql.DataFrame,
@@ -62,7 +64,8 @@ object Superstep {
       if (approxRows > SerializedCutThreshold)
         org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER
       else org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val cp = df.localCheckpoint(false, level)
+    val cp = org.apache.spark.sql.graftinternal.Internals
+      .capCheckpointStats(df.localCheckpoint(false, level))
     val row = cp.agg(aggs.head, aggs.tail: _*).head()
     (cp, row)
   }

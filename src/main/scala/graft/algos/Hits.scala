@@ -3,6 +3,7 @@ package graft.algos
 import graft._
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftinternal.Internals
 import org.apache.spark.storage.StorageLevel
 
 final case class HitsResult(
@@ -70,15 +71,18 @@ object Hits {
 
     // persist the caller's edge pipeline once: the two CSR builds and the
     // vertex set each traverse it (the sf0.1 co-occurrence build re-runs
-    // 3x per call otherwise — same lesson as Eigen/Ppr)
-    val base = edges.persist(StorageLevel.MEMORY_AND_DISK)
+    // 3x per call otherwise — same lesson as Eigen/Ppr), then read it
+    // through the cache leaf; release goes through `edges`, which owns
+    // the cache entry
+    val base =
+      Internals.cachedLeaf(edges.persist(StorageLevel.MEMORY_AND_DISK))
     // |E| in WeightMode.One equals the adjacency entry count, so this one
     // count doubles as the old Csr.edgeCount job AND the partition-sizing
     // input: message volume per half-step is |E|, so the loop's
     // partitions follow the data, capped by the session conf (Tuning)
     val edgeCnt = base.count()
     if (edgeCnt == 0) {
-      base.unpersist(false)
+      edges.unpersist(false)
       return HitsResult(
         spark.emptyDataset[ScoreState].toDF()
           .select(col("vid"), col("score").as("hub"), col("score").as("auth")),
@@ -150,7 +154,7 @@ object Hits {
         .join(
           auth.select(col("vid"), (col("score") / lit(aTot)).as("auth")),
           Seq("vid"))
-      fwd.unpersist(false); rev.unpersist(false); base.unpersist(false)
+      fwd.unpersist(false); rev.unpersist(false); edges.unpersist(false)
       HitsResult(out, iter, edgeCnt, wall)
     }
   }

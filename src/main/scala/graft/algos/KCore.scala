@@ -3,6 +3,7 @@ package graft.algos
 import graft._
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftinternal.Internals
 import org.apache.spark.storage.StorageLevel
 
 final case class KCoreResult(core: DataFrame, iterations: Int)
@@ -54,7 +55,7 @@ object KCore {
     // skip that aggregation — see EdgeBuilder.symmetrizeDistinct), no
     // self-loops: the degree a message round measures is then exactly
     // |active neighbors|
-    val simple = edges.filter(col("src") =!= col("dst"))
+    val simple = Internals.cachedLeaf(edges).filter(col("src") =!= col("dst"))
     val sym =
       (if (distinctCanonical) EdgeBuilder.symmetrizeDistinct(simple)
        else EdgeBuilder.symmetrize(simple))

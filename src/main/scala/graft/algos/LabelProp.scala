@@ -3,6 +3,7 @@ package graft.algos
 import graft._
 import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftinternal.Internals
 import org.apache.spark.storage.StorageLevel
 
 /** Synchronous label propagation (B3, BASELINE.json:6,14).
@@ -50,10 +51,13 @@ object LabelProp {
     // persisted: the CSR build and the init-state cut both traverse the
     // derived base (see Eigen for the measurement).
     // distinctCanonical inputs take the shuffle-free symmetrize.
+    // the unsymmetrized base persists the caller's own frame: persisting
+    // its cache leaf would copy the cache
+    val input = Internals.cachedLeaf(edges)
     val base =
       (if (!cfg.symmetrize) edges
-       else if (cfg.distinctCanonical) EdgeBuilder.symmetrizeDistinct(edges)
-       else EdgeBuilder.symmetrize(edges))
+       else if (cfg.distinctCanonical) EdgeBuilder.symmetrizeDistinct(input)
+       else EdgeBuilder.symmetrize(input))
         .persist(StorageLevel.MEMORY_AND_DISK)
     val adjCount = base.count() // = adjacency entries; also sizes pEff
     val pEff = Tuning.adaptivePartitions(spark, adjCount)

@@ -3,6 +3,7 @@ package graft.algos
 import graft._
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftinternal.Internals
 import org.apache.spark.storage.StorageLevel
 
 final case class PprResult(
@@ -66,13 +67,15 @@ object Ppr {
     // the caller's seed pipeline (usually derived from the SAME edge
     // plan — the cache is matched by plan fragment) each traverse them;
     // without the cache a cold PPR re-ran the sf0.1 co-occurrence build
-    // ~7× (measured 158 s → ~30 s)
-    val base = edges.persist(StorageLevel.MEMORY_AND_DISK)
+    // ~7× (measured 158 s → ~30 s). Read through the cache leaf; release
+    // goes through `edges`, which owns the cache entry
+    val base =
+      Internals.cachedLeaf(edges.persist(StorageLevel.MEMORY_AND_DISK))
     // base rows = adjacency entries (Norm modes keep every row), so the
     // count replaces the old Csr.edgeCount job and sizes pEff
     val edgeCnt = base.count()
     if (edgeCnt == 0) {
-      base.unpersist(false)
+      edges.unpersist(false)
       return PprResult(spark.emptyDataset[RankState], 0, 0L, 0.0)
     }
     val pEff = Tuning.adaptivePartitions(spark, edgeCnt)
@@ -157,7 +160,7 @@ object Ppr {
       .select(col("vid"), col("rank"), col("dangling"))
       .as[RankState]
     adj.unpersist(false)
-    base.unpersist(false)
+    edges.unpersist(false)
     PprResult(ranks, iter, edgeCnt, wall)
     } // withShufflePartitions
   }

@@ -3,6 +3,7 @@ package graft.algos
 import graft._
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftinternal.Internals
 import org.apache.spark.storage.StorageLevel
 
 final case class WccResult(comps: Dataset[CompState], iterations: Int)
@@ -74,7 +75,7 @@ object Wcc {
     // multi-edges, self-loops) cannot change any min — so the general
     // symmetrize's merge aggregation (one full 2|E| exchange) is pure
     // overhead here for ANY input, not just canonical ones.
-    val sym = EdgeBuilder.symmetrizeDistinct(edges)
+    val sym = EdgeBuilder.symmetrizeDistinct(Internals.cachedLeaf(edges))
       .persist(StorageLevel.MEMORY_AND_DISK)
     val adjCount = sym.count() // = adjacency entries; also sizes pEff
     val pEff = Tuning.adaptivePartitions(spark, adjCount)

@@ -14,6 +14,56 @@ import org.apache.spark.sql.execution.LogicalRDD
   */
 object Internals {
 
+  /** `ds` read through its cache: when `ds` is cached, a Dataset whose
+    * plan is that cache's `InMemoryRelation` with `ds`'s own output
+    * attributes (columns resolved against `ds` still resolve); otherwise
+    * `ds` itself.
+    *
+    * `persist` does not shorten a plan: every frame derived from a cached
+    * `ds` re-embeds its whole lineage, which Catalyst re-analyzes and
+    * re-matches against the cache per frame (per embedded copy, in a
+    * self-join). Cache substitution ends at this same `InMemoryRelation`,
+    * so optimized plans do not change; only the analyzed plan shrinks.
+    *
+    * Frames derived from the result read the cache even if `ds` is
+    * unpersisted before they run: the cache is then rebuilt outside the
+    * CacheManager, as for any dependent Spark has already planned. Never
+    * `persist` the result: its plan matches no cache entry, so that
+    * caches a copy of the cache.
+    */
+  def cachedLeaf[T](
+      ds: org.apache.spark.sql.Dataset[T],
+  ): org.apache.spark.sql.Dataset[T] = {
+    val d = ds.asInstanceOf[Dataset[T]]
+    d.sparkSession.sharedState.cacheManager.lookupCachedData(d) match {
+      case Some(cached) =>
+        val leaf = cached.cachedRepresentation
+          .withOutput(d.queryExecution.analyzed.output)
+        new Dataset[T](d.sparkSession, leaf, d.encoder)
+      case None => ds
+    }
+  }
+
+  /** `df` with its checkpoint's size estimate capped at `Long.MaxValue`.
+    *
+    * A localCheckpoint keeps its input's optimized-plan statistics. A
+    * state joined with messages derived from itself multiplies those
+    * `BigInt` sizes again every round, so the estimate compounds round
+    * over round and, in a long run, computing it dominates the driver. Any
+    * estimate that large is far above every broadcast threshold, so the
+    * cap changes no planning decision. Other frames are returned as is.
+    */
+  def capCheckpointStats(df: DataFrame): DataFrame = {
+    val d = df.asInstanceOf[Dataset[org.apache.spark.sql.Row]]
+    d.logicalPlan match {
+      case r: LogicalRDD if r.stats.sizeInBytes > Long.MaxValue =>
+        val capped = r.stats.copy(sizeInBytes = BigInt(Long.MaxValue))
+        Dataset.ofRows(d.sparkSession,
+          r.copy()(d.sparkSession, Some(capped), Some(r.constraints)))
+      case _ => df
+    }
+  }
+
   /** Wrap `df`'s physical RDD in a scan that declares
     * `HashPartitioning(hashCol, n)` and `[sortCols ASC]` WITHOUT moving
     * any data.
