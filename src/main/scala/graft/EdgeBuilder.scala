@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftinternal.Internals
 
 /** Source table → vertex dictionary + co-occurrence edge table.
   *
@@ -128,10 +127,6 @@ object EdgeBuilder {
     * vertices sharing a group get an edge weighted by the number of shared
     * groups (the public operator behind the SPARQL-BGP translation; also
     * used for the lineitem part-co-occurrence test graph, FIXTURES.md §3).
-    * The lazy result reads a cached `rel` through its cache
-    * ([[org.apache.spark.sql.graftinternal.Internals.cachedLeaf]]), even
-    * if `rel` is unpersisted before the result runs, like any dependent
-    * Spark has already planned.
     */
   def cooccurrence(
       rel: DataFrame,
@@ -144,8 +139,7 @@ object EdgeBuilder {
     // chain (guide §2.4 — two operations keyed the same way share one
     // exchange; measured r6: the old shape paid 4-5 exchanges + an
     // |E|-row sort-merge self-join per build)
-    val mem = Internals.cachedLeaf(rel)
-      .select(col(grpCol).as("grp"), col(vidCol).as("vid"))
+    val mem = rel.select(col(grpCol).as("grp"), col(vidCol).as("vid"))
     pairsFromMembership(mem, maxGroup, preDistinct = false)
       .groupBy("src", "dst")
       .agg(count(lit(1)).as("weight"))
@@ -210,7 +204,7 @@ object EdgeBuilder {
       "EdgeConfig must enable at least one grouping (byCommit and/or byPath)",
     )
     import src.sparkSession.implicits._
-    val base = Internals.cachedLeaf(src).select(
+    val base = src.select(
       col("commit"),
       col("path"),
       col("repo"),

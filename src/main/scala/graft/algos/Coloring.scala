@@ -4,7 +4,6 @@ import graft._
 import graft.functions.Hash64
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftinternal.Internals
 import org.apache.spark.storage.StorageLevel
 
 final case class ColoringResult(colors: DataFrame, rounds: Int)
@@ -80,7 +79,7 @@ object Coloring {
     import spark.implicits._
 
     // distinctCanonical callers take the shuffle-free symmetrize
-    val simple = Internals.cachedLeaf(edges).filter(col("src") =!= col("dst"))
+    val simple = edges.filter(col("src") =!= col("dst"))
     val sym =
       (if (distinctCanonical) EdgeBuilder.symmetrizeDistinct(simple)
        else EdgeBuilder.symmetrize(simple))
@@ -191,7 +190,7 @@ object Coloring {
     // undirected simple graph, no self-loops (a self-loop could never be
     // properly colored) — the Mis/KCore base build
     val sym = EdgeBuilder
-      .symmetrize(Internals.cachedLeaf(edges).filter(col("src") =!= col("dst")))
+      .symmetrize(edges.filter(col("src") =!= col("dst")))
       .select(col("src"), col("dst"), lit(1.0).as("weight"))
       .as[Edge]
       .persist(StorageLevel.MEMORY_AND_DISK)

@@ -3,7 +3,6 @@ package graft.algos
 import graft._
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftinternal.Internals
 import org.apache.spark.storage.StorageLevel
 
 final case class EigenResult(
@@ -60,13 +59,10 @@ object Eigen {
     // (measured: the sf0.1 co-occurrence build re-ran 3× per call).
     // distinctCanonical inputs take the shuffle-free symmetrize.
     val tCsr = System.nanoTime()
-    // the unsymmetrized base persists the caller's own frame: persisting
-    // its cache leaf would copy the cache
-    val input = Internals.cachedLeaf(edges)
     val base =
       (if (!cfg.symmetrize) edges
-       else if (cfg.distinctCanonical) EdgeBuilder.symmetrizeDistinct(input)
-       else EdgeBuilder.symmetrize(input))
+       else if (cfg.distinctCanonical) EdgeBuilder.symmetrizeDistinct(edges)
+       else EdgeBuilder.symmetrize(edges))
         .persist(StorageLevel.MEMORY_AND_DISK)
     // base rows = adjacency entries (no dedup in Csr.build), so this one
     // count replaces the old Csr.edgeCount job AND sizes the loop's

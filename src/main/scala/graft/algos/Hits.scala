@@ -73,7 +73,8 @@ object Hits {
     // vertex set each traverse it (the sf0.1 co-occurrence build re-runs
     // 3x per call otherwise — same lesson as Eigen/Ppr), then read it
     // through the cache leaf; release goes through `edges`, which owns
-    // the cache entry
+    // the cache entry, and only if this call made it
+    val owned = edges.storageLevel == StorageLevel.NONE
     val base =
       Internals.cachedLeaf(edges.persist(StorageLevel.MEMORY_AND_DISK))
     // |E| in WeightMode.One equals the adjacency entry count, so this one
@@ -82,7 +83,7 @@ object Hits {
     // partitions follow the data, capped by the session conf (Tuning)
     val edgeCnt = base.count()
     if (edgeCnt == 0) {
-      edges.unpersist(false)
+      if (owned) edges.unpersist(false)
       return HitsResult(
         spark.emptyDataset[ScoreState].toDF()
           .select(col("vid"), col("score").as("hub"), col("score").as("auth")),
@@ -154,7 +155,8 @@ object Hits {
         .join(
           auth.select(col("vid"), (col("score") / lit(aTot)).as("auth")),
           Seq("vid"))
-      fwd.unpersist(false); rev.unpersist(false); edges.unpersist(false)
+      fwd.unpersist(false); rev.unpersist(false)
+      if (owned) edges.unpersist(false)
       HitsResult(out, iter, edgeCnt, wall)
     }
   }

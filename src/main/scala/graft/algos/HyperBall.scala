@@ -4,7 +4,6 @@ import graft._
 import graft.functions.Hash64
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftinternal.Internals
 
 final case class HyperBallResult(
     sketches: DataFrame, // (vid, idx, val) — sparse HLL registers
@@ -113,7 +112,7 @@ object HyperBall {
     // merging is a max — idempotent — so duplicate adjacency entries
     // (two-direction inputs, multi-edges) cannot change any register,
     // the same argument as Wcc's min (round 6)
-    val base = EdgeBuilder.symmetrizeDistinct(Internals.cachedLeaf(edges))
+    val base = EdgeBuilder.symmetrizeDistinct(edges)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val symCnt = base.count()
     ph(s"base count=$symCnt")

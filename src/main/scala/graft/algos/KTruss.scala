@@ -3,7 +3,6 @@ package graft.algos
 import graft._
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftinternal.Internals
 import org.apache.spark.storage.StorageLevel
 
 /** One peeling round's audit row: how many edges dropped, how many
@@ -80,7 +79,7 @@ object KTruss {
 
     // canonical simple edge set, materialized with its count in one job
     val (base, bRow) = Superstep.cutAndAgg(
-      Internals.cachedLeaf(edges).toDF()
+      edges.toDF()
         .select(
           least(col("src"), col("dst")).as("a"),
           greatest(col("src"), col("dst")).as("b"),

@@ -3,7 +3,6 @@ package graft.algos
 import graft._
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftinternal.Internals
 import org.apache.spark.storage.StorageLevel
 
 final case class KatzResult(
@@ -56,10 +55,9 @@ object Katz {
       val spark = edges.sparkSession
       import spark.implicits._
 
-      val input = Internals.cachedLeaf(edges)
       val base =
-        (if (distinctCanonical) EdgeBuilder.symmetrizeDistinct(input)
-         else EdgeBuilder.symmetrize(input))
+        (if (distinctCanonical) EdgeBuilder.symmetrizeDistinct(edges)
+         else EdgeBuilder.symmetrize(edges))
           .persist(StorageLevel.MEMORY_AND_DISK)
       // = adjacency entry count (One mode); also sizes the adaptive
       // partitions — message volume per round is |E|

@@ -3,7 +3,6 @@ package graft.algos
 import graft._
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftinternal.Internals
 
 /** Link prediction by the resource-allocation index (Zhou, Lü, Zhang,
   * "Predicting missing links via local information", EPJ B 2009 — the
@@ -52,11 +51,10 @@ object LinkPred {
     // non-adjacency anti-join — without the cut each reference re-ran
     // the caller's whole edge pipeline (the co-occurrence build) through
     // the lazy plan
-    val input = Internals.cachedLeaf(edges).toDF()
     val und = Superstep.cut(
       if (distinctCanonical)
-        input.select(col("src").as("a"), col("dst").as("b"))
-      else input
+        edges.toDF().select(col("src").as("a"), col("dst").as("b"))
+      else edges.toDF()
         .select(
           least(col("src"), col("dst")).as("a"),
           greatest(col("src"), col("dst")).as("b"),

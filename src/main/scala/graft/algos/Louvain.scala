@@ -3,7 +3,6 @@ package graft.algos
 import graft._
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftinternal.Internals
 import org.apache.spark.storage.StorageLevel
 
 /** Deterministic one-level Louvain move pass (Blondel et al. 2008, "Fast
@@ -80,10 +79,9 @@ object Louvain {
       import spark.implicits._
       // distinctCanonical callers (one row per undirected src<dst pair)
       // take the shuffle-free symmetrize — see EdgeBuilder
-      val input = Internals.cachedLeaf(edges)
       val base =
-        (if (distinctCanonical) EdgeBuilder.symmetrizeDistinct(input)
-         else EdgeBuilder.symmetrize(input))
+        (if (distinctCanonical) EdgeBuilder.symmetrizeDistinct(edges)
+         else EdgeBuilder.symmetrize(edges))
           .persist(StorageLevel.MEMORY_AND_DISK)
       // sym entries = 2m; m = |undirected simple edges|. The one count
       // also sizes the adaptive partitions (candidate volume per round

@@ -4,7 +4,6 @@ import graft._
 import graft.functions.Hash64
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftinternal.Internals
 import org.apache.spark.storage.StorageLevel
 
 final case class MisResult(mis: DataFrame, rounds: Int)
@@ -57,7 +56,7 @@ object Mis {
     // self-loops (a self-loop would make a vertex its own neighbor and
     // empty the MIS) — the KCore base build; distinctCanonical callers
     // take the shuffle-free symmetrize
-    val simple = Internals.cachedLeaf(edges).filter(col("src") =!= col("dst"))
+    val simple = edges.filter(col("src") =!= col("dst"))
     val sym =
       (if (distinctCanonical) EdgeBuilder.symmetrizeDistinct(simple)
        else EdgeBuilder.symmetrize(simple))

@@ -3,7 +3,6 @@ package graft.algos
 import graft._
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftinternal.Internals
 
 /** Newman modularity of a vertex partition (Newman & Girvan 2004) — the
   * standard "how good are these communities" score for the labels that
@@ -39,7 +38,7 @@ object Modularity {
     // whose lineage would otherwise re-run per scan — measured 4x the
     // build cost at sf0.1 before this cut
     val und = Superstep.cut(
-      Internals.cachedLeaf(edges).toDF()
+      edges.toDF()
         .select(
           least(col("src"), col("dst")).as("a"),
           greatest(col("src"), col("dst")).as("b"),

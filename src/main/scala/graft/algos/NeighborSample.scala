@@ -5,7 +5,6 @@ import graft.Edge
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftinternal.Internals
 
 /** Deterministic fixed-fanout neighbor sampling — the minibatch
   * subgraph-construction op for GNN training (GraphSAGE, Hamilton et
@@ -41,8 +40,7 @@ object NeighborSample {
     * @param fanouts per-hop sample sizes, hop 1 first (GraphSAGE S_1,
     *                S_2, ...).
     * @return (seed, hop, src, dst) — the sampled message-flow edges,
-    *         hop 1 rows have src == seed. Lazy; a cached `edges` is
-    *         read through its cache (see [[graft.EdgeBuilder.cooccurrence]]).
+    *         hop 1 rows have src == seed.
     */
   def run(
       edges: Dataset[Edge],
@@ -55,7 +53,7 @@ object NeighborSample {
       fanouts.nonEmpty && fanouts.forall(_ >= 1),
       s"fanouts must be non-empty positives, got $fanouts",
     )
-    val und = Internals.cachedLeaf(edges).toDF()
+    val und = edges.toDF()
       .select(
         least(col("src"), col("dst")).as("a"),
         greatest(col("src"), col("dst")).as("b"),

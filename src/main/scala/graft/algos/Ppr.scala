@@ -68,14 +68,16 @@ object Ppr {
     // plan — the cache is matched by plan fragment) each traverse them;
     // without the cache a cold PPR re-ran the sf0.1 co-occurrence build
     // ~7× (measured 158 s → ~30 s). Read through the cache leaf; release
-    // goes through `edges`, which owns the cache entry
+    // goes through `edges`, which owns the cache entry, and only if this
+    // call made it
+    val owned = edges.storageLevel == StorageLevel.NONE
     val base =
       Internals.cachedLeaf(edges.persist(StorageLevel.MEMORY_AND_DISK))
     // base rows = adjacency entries (Norm modes keep every row), so the
     // count replaces the old Csr.edgeCount job and sizes pEff
     val edgeCnt = base.count()
     if (edgeCnt == 0) {
-      edges.unpersist(false)
+      if (owned) edges.unpersist(false)
       return PprResult(spark.emptyDataset[RankState], 0, 0L, 0.0)
     }
     val pEff = Tuning.adaptivePartitions(spark, edgeCnt)
@@ -160,7 +162,7 @@ object Ppr {
       .select(col("vid"), col("rank"), col("dangling"))
       .as[RankState]
     adj.unpersist(false)
-    edges.unpersist(false)
+    if (owned) edges.unpersist(false)
     PprResult(ranks, iter, edgeCnt, wall)
     } // withShufflePartitions
   }

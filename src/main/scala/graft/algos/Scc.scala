@@ -3,7 +3,6 @@ package graft.algos
 import graft._
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftinternal.Internals
 import org.apache.spark.storage.StorageLevel
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration.Duration
@@ -111,8 +110,7 @@ object Scc {
     // ONE materialization of the caller's (possibly expensive) edge
     // pipeline, BEFORE the self-loop filter so the vertex universe keeps
     // self-loop-only endpoints; everything downstream re-reads this cut
-    val raw = Superstep.cut(
-      Internals.cachedLeaf(edges).select(col("src"), col("dst")))
+    val raw = Superstep.cut(edges.select(col("src"), col("dst")))
     val allVerts = Superstep.cut(
       raw.select(col("src").as("vid"))
         .unionByName(raw.select(col("dst").as("vid"))).distinct())

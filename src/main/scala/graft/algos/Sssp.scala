@@ -3,7 +3,6 @@ package graft.algos
 import graft._
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftinternal.Internals
 import org.apache.spark.storage.StorageLevel
 
 final case class SsspResult(dists: DataFrame, iterations: Int)
@@ -50,7 +49,7 @@ object Sssp {
     // persisted: the CSR build, the vertex set, and the init-state cut
     // all traverse the symmetrized base (see Eigen for the measurement);
     // distinctCanonical callers take the shuffle-free symmetrize
-    val simple = Internals.cachedLeaf(edges).filter(col("src") =!= col("dst"))
+    val simple = edges.filter(col("src") =!= col("dst"))
     val sym =
       (if (distinctCanonical) EdgeBuilder.symmetrizeDistinct(simple)
        else EdgeBuilder.symmetrize(simple))

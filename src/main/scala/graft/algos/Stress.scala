@@ -3,7 +3,6 @@ package graft.algos
 import graft._
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftinternal.Internals
 import org.apache.spark.storage.StorageLevel
 
 final case class StressResult(
@@ -55,7 +54,7 @@ object Stress {
   ): StressResult = Superstep.withAqeOff(edges.sparkSession) {
     val spark = edges.sparkSession
     // distinctCanonical callers take the shuffle-free symmetrize
-    val simple = Internals.cachedLeaf(edges).filter(col("src") =!= col("dst"))
+    val simple = edges.filter(col("src") =!= col("dst"))
     val sym =
       (if (distinctCanonical) EdgeBuilder.symmetrizeDistinct(simple)
        else EdgeBuilder.symmetrize(simple))

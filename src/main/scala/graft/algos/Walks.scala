@@ -4,7 +4,6 @@ import graft._
 import graft.functions.Hash64
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftinternal.Internals
 
 /** Deterministic random-walk corpus over the co-occurrence graph — the
   * input-generation op for graph-embedding training (DeepWalk, Perozzi
@@ -34,9 +33,7 @@ object Walks {
 
   /** @param seeds one column `vid`; walks start there (walkId = seed).
     *              Seeds absent from the graph produce no rows.
-    * @return (wid, step, vid) — step 0 is the seed itself. Lazy; a
-    *         cached `edges` is read through its cache (see
-    *         [[graft.EdgeBuilder.cooccurrence]]).
+    * @return (wid, step, vid) — step 0 is the seed itself.
     */
   def run(
       edges: Dataset[Edge],
@@ -46,7 +43,7 @@ object Walks {
       hash: Hash64 = Hash64.Xx,
   ): DataFrame = {
     require(steps >= 1, s"steps must be >= 1, got $steps")
-    val und = Internals.cachedLeaf(edges).toDF()
+    val und = edges.toDF()
       .select(
         least(col("src"), col("dst")).as("a"),
         greatest(col("src"), col("dst")).as("b"),

@@ -25,11 +25,14 @@ object Internals {
     * self-join). Cache substitution ends at this same `InMemoryRelation`,
     * so optimized plans do not change; only the analyzed plan shrinks.
     *
-    * Frames derived from the result read the cache even if `ds` is
-    * unpersisted before they run: the cache is then rebuilt outside the
-    * CacheManager, as for any dependent Spark has already planned. Never
-    * `persist` the result: its plan matches no cache entry, so that
-    * caches a copy of the cache.
+    * Use it only where everything derived from the result runs before
+    * the call returns (results leave as checkpoints or scalars). A frame
+    * derived from the leaf that runs after `ds` is unpersisted rebuilds
+    * and persists `ds`'s cache outside the CacheManager, where neither
+    * `unpersist` nor `clearCache` reaches it; it stays until that frame
+    * is garbage-collected, or for as long as that frame's own cache
+    * entry lives. Never `persist` the result: its plan matches no cache
+    * entry, so that caches a copy of the cache.
     */
   def cachedLeaf[T](
       ds: org.apache.spark.sql.Dataset[T],

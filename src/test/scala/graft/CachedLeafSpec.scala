@@ -1,15 +1,17 @@
 package graft
 
-import graft.algos.{KCore, LabelProp, Triangles, Wcc}
+import graft.algos.{Hits, KCore, LabelProp, Ppr, Triangles, Wcc}
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftinternal.Internals
 
 /** Cached inputs are planned from their cache leaf
-  * (`Internals.cachedLeaf`): the leaf's shape, and every entry that takes
-  * a caller's frame giving the same result, and caching nothing it does
-  * not release, whether or not the caller persisted that frame.
+  * (`Internals.cachedLeaf`): the leaf's shape, and every entry that
+  * takes a caller's frame giving the same result, and caching nothing it
+  * does not release, whether or not the caller persisted that frame.
+  * Lazy results (cooccurrence) do not use the leaf: one evaluated after
+  * its input is unpersisted would keep a copy of that cache alive.
   */
 class CachedLeafSpec extends GraftSuite {
 
@@ -52,6 +54,11 @@ class CachedLeafSpec extends GraftSuite {
     cached.unpersist(true)
     assert(got == plain, s"$what differs on a persisted input")
   }
+
+  /** A score to 1e-9: sums over shuffled blocks may differ in the last
+    * bits from run to run.
+    */
+  private def near(x: Double): Long = math.round(x * 1e9)
 
   test("a cached input yields its InMemoryRelation with the input's output") {
     val ds = edgeDs(Fixtures.twoCliquesBridge).filter(col("weight") > 0)
@@ -110,6 +117,17 @@ class CachedLeafSpec extends GraftSuite {
             .toSet
         }
       }
+      // these two persist their input themselves and release only a
+      // cache they made, never the caller's
+      sameOnCached(s"hits/$seed")(make) { e =>
+        Hits.run(e, 6).scores.collect()
+          .map(x => x.getLong(0) -> (near(x.getDouble(1)), near(x.getDouble(2))))
+          .toMap
+      }
+      sameOnCached(s"ppr/$seed")(make) { e =>
+        Ppr.run(e, Seq(g.head._1).toDF("vid"), PrConfig(tol = 0.0, maxIter = 6))
+          .ranks.collect().map(r => r.vid -> near(r.rank)).toMap
+      }
       sameOnCached(s"cooccurrence/$seed")(() => relation(seed)) { rel =>
         cooc(EdgeBuilder.cooccurrence(rel, "grp", "vid", maxGroup = 8))
       }
@@ -129,12 +147,16 @@ class CachedLeafSpec extends GraftSuite {
   private def cooc(df: DataFrame): Set[(Long, Long, Long)] =
     df.collect().map(x => (x.getLong(0), x.getLong(1), x.getLong(2))).toSet
 
-  test("a cooccurrence result evaluated after rel.unpersist() is correct") {
+  test("a cooccurrence result evaluated after rel.unpersist() is correct " +
+    "and leaves no cache behind") {
     val want = cooc(EdgeBuilder.cooccurrence(relation(5), "grp", "vid", 8))
+    val before = caches
     val rel = relation(5).persist()
     rel.count()
-    val out = EdgeBuilder.cooccurrence(rel, "grp", "vid", 8)
+    val out = EdgeBuilder.cooccurrence(rel, "grp", "vid", 8).persist()
     rel.unpersist(true)
     assert(cooc(out) == want)
+    out.unpersist(true)
+    assert(caches == before, "a copy of rel's cache outlived both caches")
   }
 }
