@@ -69,12 +69,6 @@ object AlgoProbe {
       println(s"[algoprobe] coloring(speculative) sf=$sfDir minW=$minW " +
         s"rounds=${r.rounds} maxColor=${row.get(0)} verts=${row.getLong(1)}")
     }
-    if (which == "coloring-jp") {
-      val r = graft.algos.Coloring.run(edges, graft.functions.Hash64.Portable)
-      val row = r.colors.agg(max(col("color")), count(lit(1))).head()
-      println(s"[algoprobe] coloring(jp) sf=$sfDir minW=$minW " +
-        s"rounds=${r.rounds} maxColor=${row.get(0)} verts=${row.getLong(1)}")
-    }
     if (which == "ktruss") {
       // Incremental-vs-full support maintenance at scale (round-4 verdict
       // plan-audit item). Synthetic gradual-peel graph: `nCliques` disjoint

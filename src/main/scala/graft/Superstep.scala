@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftinternal.Internals
+import org.apache.spark.storage.StorageLevel
 
 /** Shared superstep plumbing for the iterative algorithms (SURVEY §2.B E4).
   *
@@ -84,6 +86,54 @@ object Superstep {
     spark.conf.set(key, "false")
     try body
     finally spark.conf.set(key, prev)
+  }
+
+  /** A kernel's graph inside [[onGraph]]: `base` read through its cache
+    * leaf, its row count `entries`, the loop's partition count `p`, and
+    * the lineage-cut adjacency `adj` packed from `base` at `p`.
+    */
+  final case class Graph(
+      base: Dataset[Edge],
+      entries: Long,
+      p: Int,
+      adj: Dataset[AdjBlock],
+  )
+
+  /** The setup and release every single-CSR kernel loop shares. With AQE
+    * off ([[withAqeOff]]), `base` is persisted (unless already cached)
+    * and counted; `body` then runs at `p` shuffle partitions, sized to a
+    * per-round volume of `entries * rowsPerEntry` rows
+    * ([[Tuning.adaptivePartitions]]), over the [[Csr.buildCut]] adjacency.
+    * The persist pays off because the count, the CSR build and the
+    * kernel's own base reads each traverse `base`: uncached, each re-ran
+    * the caller's edge pipeline (the sf0.1 co-occurrence build, 3x per
+    * Eigen call).
+    *
+    * On return or throw the adjacency's checkpoint blocks are freed
+    * ([[Internals.release]]) and `base` is unpersisted if this call cached
+    * it; a caller's cache stays. So the result must not read `g.adj` or
+    * `g.base`: results leave as round-state checkpoints or scalars.
+    */
+  def onGraph[R](
+      base: Dataset[Edge],
+      mode: Csr.WeightMode,
+      rowsPerEntry: Long = 1L,
+  )(body: Graph => R): R = {
+    val spark = base.sparkSession
+    withAqeOff(spark) {
+      val owned = base.storageLevel == StorageLevel.NONE
+      if (owned) base.persist(StorageLevel.MEMORY_AND_DISK)
+      try {
+        val leaf = Internals.cachedLeaf(base)
+        val entries = leaf.count()
+        val p = Tuning.adaptivePartitions(spark, entries * rowsPerEntry)
+        Tuning.withShufflePartitions(spark, p) {
+          val adj = Csr.buildCut(leaf, p, mode, approxEntries = entries)
+          try body(Graph(leaf, entries, p, adj))
+          finally Internals.release(adj)
+        }
+      } finally if (owned) base.unpersist(false)
+    }
   }
 
   /** Distinct vertex ids of an edge table, hash-partitioned by vid. */

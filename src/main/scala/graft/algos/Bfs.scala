@@ -3,7 +3,7 @@ package graft.algos
 import graft._
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
+import org.apache.spark.sql.graftinternal.Internals
 
 final case class BfsResult(dists: DataFrame, iterations: Int)
 
@@ -36,27 +36,16 @@ object Bfs {
       seeds: DataFrame,
       maxIter: Int = 200,
       distinctCanonical: Boolean = false,
-  ): BfsResult = Superstep.withAqeOff(edges.sparkSession) {
-    val spark = edges.sparkSession
-    import spark.implicits._
-
-    // persisted: the CSR build, the vertex set, and the init-state cut
-    // all traverse the symmetrized base (see Eigen for the measurement);
+  ): BfsResult = {
     // distinctCanonical callers take the shuffle-free symmetrize
     val simple = edges.filter(col("src") =!= col("dst"))
     val sym =
-      (if (distinctCanonical) EdgeBuilder.symmetrizeDistinct(simple)
-       else EdgeBuilder.symmetrize(simple))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    val symCnt = sym.count() // sizes the adaptive partitions
-    val pEff = Tuning.adaptivePartitions(spark, symCnt)
-    Tuning.withShufflePartitions(spark, pEff) {
-    val p = pEff
-    val adj = Csr.buildCut(sym, p, Csr.WeightMode.One, approxEntries = symCnt)
-
+      if (distinctCanonical) EdgeBuilder.symmetrizeDistinct(simple)
+      else EdgeBuilder.symmetrize(simple)
+    Superstep.onGraph(sym, Csr.WeightMode.One) { g =>
     // vertex universe from the packed blocks: exchange-free, ~|V| rows
     // instead of a 2|E| union+distinct (see Superstep.verticesFromAdj)
-    val verts = Superstep.verticesFromAdj(adj)
+    val verts = Superstep.verticesFromAdj(g.adj)
     // (vid, dist) — dist null until reached; seeds start at 0
     var state: DataFrame = verts
       .join(
@@ -77,7 +66,7 @@ object Bfs {
       // only the frontier scatters: one (vid) row per out-edge of a
       // vertex settled LAST round, aggregated to the distinct touched set
       val touched = Superstep
-        .scatter(adj, state.where(col("dist") === iter).select(col("vid")))
+        .scatter(g.adj, state.where(col("dist") === iter).select(col("vid")))
         .groupBy("vid").agg(count(lit(1)).as("hits"))
       iter += 1
       val next = state.join(touched, Seq("vid"), "left_outer")
@@ -93,13 +82,11 @@ object Bfs {
         nVerts,
         Seq(sum(when(col("dist") === iter, 1L).otherwise(0L))),
       )
+      Internals.release(state)
       state = cut
       frontier = if (r.isNullAt(0)) 0L else r.getLong(0)
     }
-    val dists = state.where(col("dist").isNotNull)
-    adj.unpersist(false)
-    sym.unpersist(false)
-    BfsResult(dists, iter)
-    } // withShufflePartitions
+    BfsResult(state.where(col("dist").isNotNull), iter)
+    } // onGraph
   }
 }

@@ -4,64 +4,39 @@ import graft._
 import graft.functions.Hash64
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
+import org.apache.spark.sql.graftinternal.Internals
 
 final case class ColoringResult(colors: DataFrame, rounds: Int)
 
-/** Distributed greedy graph coloring — Jones & Plassmann, "A Parallel
-  * Graph Coloring Heuristic" (SIAM J. Sci. Comput. 1993): the classic
-  * symmetry-broken parallelization of sequential greedy coloring, used
-  * for conflict-free scheduling (which vertices may update
-  * simultaneously) and register/channel assignment.
+/** Distributed graph coloring for conflict-free scheduling (which
+  * vertices may update simultaneously) and register/channel assignment.
   *
   * Each vertex gets a STATIC priority p(v) = (hash(v) & (2^60−1), v) —
   * the pluggable [[Hash64]], totally ordered with vid tie-break so
-  * adjacent vertices never tie. Per round, an uncolored vertex COLORS
-  * ITSELF iff no uncolored neighbor outranks it, taking the mex
-  * (minimum excluded value) of its already-colored neighbors' colors.
-  * Lower-priority neighbors color later and avoid it in turn, so the
-  * coloring is proper by construction, uses ≤ Δ+1 colors (a vertex sees
-  * ≤ deg colors when it picks), and reproduces EXACTLY the sequential
-  * greedy coloring along priority order — a pure function of the hash
-  * mode, replayable in DuckDB in portable mode (the q_mis contract).
-  *
-  * Rounds = the longest strictly-priority-decreasing path, O(log n /
-  * log log n) w.h.p. under uniform hashing (Johansson 1999). The
-  * globally max-priority uncolored vertex always colors, so every round
-  * makes progress unconditionally.
-  *
-  * Scale shape: the adjacency is CSR-built once and never rewritten.
-  * Per round, (1) still-uncolored vertices scatter their priority and a
-  * max-aggregate (map-side partial) decides readiness — the Luby/KCore
-  * "actives scatter, rest stay silent" shape, shrinking every round;
-  * (2) NEWLY-colored vertices scatter their color — a DELTA: each
-  * vertex's color crosses each of its edges exactly once, O(|E|) total
-  * notification traffic for the whole run. Per-vertex `used` state
-  * holds DISTINCT neighbor colors only (≤ min(deg, χ) ints, typically a
-  * handful even for hubs). The mex scan is a per-row array expression
-  * over that bounded set.
+  * adjacent vertices never tie. The adjacency is CSR-built once and never
+  * rewritten.
   */
 object Coloring {
 
   private val Mask60 = (1L << 60) - 1
 
-  /** Speculative coloring with priority conflict resolution — the
-    * PRODUCTION path (Gebremedhin & Manne, "Scalable Parallel Graph
-    * Coloring Algorithms", Concurrency 2000, made deterministic): every
-    * vertex starts on a hash palette color (h mod `palette`), then per
-    * round each vertex that shares its color with a HIGHER-priority
-    * neighbor recolors to the mex of all current neighbor colors.
-    * Stabilization is bounded by the priority-DAG depth like [[run]],
-    * but conflicts start at ~|E|/palette edges and cascades are local,
-    * so the measured round count is a HANDFUL regardless of clique
-    * structure — this is the variant that survives 100 TB, where
-    * JP-greedy's rounds (= DAG depth ≥ clique number) do not. Proper by
-    * the same argument (a recolor avoids every current neighbor color;
-    * higher-priority neighbors never move afterward), deterministic
-    * (synchronous rounds, pure function of the hash mode), replayable
-    * in DuckDB (portable mode). Colors are bounded by max(palette,
-    * Δ+1)-ish rather than JP's sequential-greedy quality — the standard
-    * speed/quality trade.
+  /** Speculative coloring with priority conflict resolution (Gebremedhin
+    * & Manne, "Scalable Parallel Graph Coloring Algorithms", Concurrency
+    * 2000, made deterministic): every vertex starts on a hash palette
+    * color (h mod `palette`), then per round each vertex that shares its
+    * color with a HIGHER-priority neighbor recolors to the mex (minimum
+    * excluded value) of all current neighbor colors. Stabilization is
+    * bounded by the priority-DAG depth, as in Jones & Plassmann's greedy
+    * coloring (SIAM J. Sci. Comput. 1993), but conflicts start at
+    * ~|E|/palette edges and cascades are local, so the measured round
+    * count is a HANDFUL regardless of clique structure — this is the
+    * variant that survives 100 TB, where JP-greedy's rounds (= DAG depth
+    * ≥ clique number) do not. Proper (a recolor avoids every current
+    * neighbor color; higher-priority neighbors never move afterward),
+    * deterministic (synchronous rounds, pure function of the hash mode),
+    * replayable in DuckDB (portable mode). Colors are bounded by
+    * max(palette, Δ+1)-ish rather than JP's sequential-greedy quality —
+    * the standard speed/quality trade.
     *
     * Per-round cost: ONE full color scatter (the LabelProp shape, map-
     * side partial per (dst, color)), then two bounded aggregates — work
@@ -73,7 +48,7 @@ object Coloring {
       hash: Hash64 = Hash64.Xx,
       maxRounds: Int = 64,
       distinctCanonical: Boolean = false,
-  ): ColoringResult = Superstep.withAqeOff(edges.sparkSession) {
+  ): ColoringResult = {
     require(palette >= 1, "palette >= 1")
     val spark = edges.sparkSession
     import spark.implicits._
@@ -85,26 +60,19 @@ object Coloring {
        else EdgeBuilder.symmetrize(simple))
         .select(col("src"), col("dst"), lit(1.0).as("weight"))
         .as[Edge]
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    val adjCount = sym.count() // = adjacency entries; also sizes pEff
-    if (adjCount == 0) {
-      sym.unpersist(false)
+    Superstep.onGraph(sym, Csr.WeightMode.One) { g =>
+    if (g.entries == 0)
       return ColoringResult(
         spark.emptyDataset[(Long, Long)].toDF("vid", "color"), 0)
-    }
-    val pEff = Tuning.adaptivePartitions(spark, adjCount)
-    Tuning.withShufflePartitions(spark, pEff) {
-    val p = pEff
-    val adj = Csr.buildCut(sym, p, Csr.WeightMode.One, approxEntries = adjCount)
 
     val h = hash.one(col("vid")).bitwiseAND(lit(Mask60))
     var state: DataFrame = Superstep.cut(
-      Superstep.verticesFromAdj(adj).select(
+      Superstep.verticesFromAdj(g.adj).select(
         col("vid"),
         h.as("h"),
         pmod(h, lit(palette.toLong)).as("color"),
       ),
-      adjCount,
+      g.entries,
     )
     var conflicts = 1L
     var iter = 0
@@ -116,7 +84,7 @@ object Coloring {
       // receiver's distinct-color count, not its degree)
       val perC = Superstep
         .scatter(
-          adj,
+          g.adj,
           state.select(
             col("vid"),
             struct(col("h").as("sh"), col("vid").as("sv"),
@@ -125,7 +93,7 @@ object Coloring {
         )
         .groupBy(col("vid"), col("m.sc").as("c"))
         .agg(max(struct(col("m.sh").as("h"), col("m.sv").as("pv"))).as("mx"))
-      val perCCut = Superstep.cut(perC, adjCount)
+      val perCCut = Superstep.cut(perC, g.entries)
       val used = perCCut.groupBy("vid")
         .agg(array_sort(collect_set(col("c"))).as("cols"))
       val next = state
@@ -152,21 +120,18 @@ object Coloring {
         )
       val (cut, r) = Superstep.cutAndAgg(
         next,
-        adjCount,
+        g.entries,
         Seq(sum(when(col("conf"), 1L).otherwise(0L))),
       )
+      Internals.release(state)
+      Internals.release(perCCut)
       state = cut.drop("conf")
       conflicts = if (r.isNullAt(0)) 0L else r.getLong(0)
-      if (sys.env.contains("GRAFT_DEBUG"))
-        System.err.println(s"[coloring-spec] iter=$iter conflicts=$conflicts")
     }
     require(conflicts == 0, s"speculative coloring: $conflicts conflicts " +
       s"left after $maxRounds rounds — raise maxRounds")
-    val out = state.select(col("vid"), col("color"))
-    adj.unpersist(false)
-    sym.unpersist(false)
-    ColoringResult(out, iter)
-    } // withShufflePartitions
+    ColoringResult(state.select(col("vid"), col("color")), iter)
+    } // onGraph
   }
 
   /** mex over a DISTINCT-element int array: the smallest k in
@@ -177,95 +142,4 @@ object Coloring {
       sequence(lit(0L), size(used).cast("long")),
       k => !array_contains(used, k),
     ).getItem(0)
-
-  def run(
-      edges: Dataset[Edge],
-      hash: Hash64 = Hash64.Xx,
-      maxRounds: Int = 512,
-  ): ColoringResult = Superstep.withAqeOff(edges.sparkSession) {
-    val spark = edges.sparkSession
-    import spark.implicits._
-    val p = spark.conf.get("spark.sql.shuffle.partitions").toInt
-
-    // undirected simple graph, no self-loops (a self-loop could never be
-    // properly colored) — the Mis/KCore base build
-    val sym = EdgeBuilder
-      .symmetrize(edges.filter(col("src") =!= col("dst")))
-      .select(col("src"), col("dst"), lit(1.0).as("weight"))
-      .as[Edge]
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val adj = Csr.buildCut(sym, p, Csr.WeightMode.One)
-    val adjCount = adj.count()
-    if (adjCount == 0) {
-      adj.unpersist(false)
-      sym.unpersist(false)
-      return ColoringResult(
-        spark.emptyDataset[(Long, Long)].toDF("vid", "color"), 0)
-    }
-
-    var state: DataFrame = Superstep.cut(
-      Superstep.verticesFromAdj(adj).select(
-        col("vid"),
-        hash.one(col("vid")).bitwiseAND(lit(Mask60)).as("h"),
-        lit(null).cast("long").as("color"),
-        array().cast("array<bigint>").as("used"),
-      ),
-      adjCount,
-    )
-    var uncolored = state.count()
-    var iter = 0
-    while (uncolored > 0 && iter < maxRounds) {
-      iter += 1
-      val unc = state.where(col("color").isNull)
-      // readiness: max uncolored-neighbor (priority, vid) per receiver —
-      // only uncolored vertices scatter, so arrivals are exactly the
-      // uncolored neighbors (the Mis shape with max instead of min)
-      val maxNbr = Superstep
-        .scatter(
-          adj,
-          unc.select(
-            col("vid"),
-            struct(col("h").as("h"), col("vid").as("pv")).as("pri"),
-          ),
-        )
-        .groupBy("vid").agg(max(col("pri")).as("mx"))
-      val ready = Superstep.cut(
-        unc.join(maxNbr, Seq("vid"), "left_outer")
-          .where(
-            col("mx").isNull ||
-              col("mx") < struct(col("h").as("h"), col("vid").as("pv"))
-          )
-          .select(col("vid"), mex(col("used")).as("newColor")),
-        uncolored,
-      )
-      // delta notification: each new color crosses each incident edge
-      // exactly once across the whole run
-      val colorMsgs = Superstep.scatter(adj, ready)
-        .groupBy("vid")
-        .agg(array_sort(collect_set(col("newColor"))).as("arr"))
-      val next = state
-        .join(ready, Seq("vid"), "left_outer")
-        .join(colorMsgs, Seq("vid"), "left_outer")
-        .select(
-          col("vid"),
-          col("h"),
-          coalesce(col("color"), col("newColor")).as("color"),
-          when(col("arr").isNull, col("used"))
-            .otherwise(array_union(col("used"), col("arr"))).as("used"),
-        )
-      val (cut, r) = Superstep.cutAndAgg(
-        next,
-        adjCount,
-        Seq(sum(when(col("color").isNull, 1L).otherwise(0L))),
-      )
-      state = cut
-      uncolored = if (r.isNullAt(0)) 0L else r.getLong(0)
-      if (sys.env.contains("GRAFT_DEBUG"))
-        System.err.println(s"[coloring] iter=$iter uncolored=$uncolored")
-    }
-    val out = state.select(col("vid"), col("color"))
-    adj.unpersist(false)
-    sym.unpersist(false)
-    ColoringResult(out, iter)
-  }
 }

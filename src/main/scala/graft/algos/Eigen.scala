@@ -3,7 +3,7 @@ package graft.algos
 import graft._
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
+import org.apache.spark.sql.graftinternal.Internals
 
 final case class EigenResult(
     scores: Dataset[ScoreState],
@@ -44,56 +44,26 @@ final case class EigenResult(
   */
 object Eigen {
 
-  private val debug = sys.env.contains("GRAFT_DEBUG")
-
   def run(
       edges: Dataset[Edge],
       cfg: EcConfig = EcConfig(),
-  ): EigenResult = Superstep.withAqeOff(edges.sparkSession) {
+  ): EigenResult = {
     val spark = edges.sparkSession
     import spark.implicits._
-
-    // persist the derived edge base: the CSR build, the vertex set, and
-    // the init-state cut all traverse it — without the cache each is a
-    // full recompute of the caller's (possibly expensive) edge pipeline
-    // (measured: the sf0.1 co-occurrence build re-ran 3× per call).
-    // distinctCanonical inputs take the shuffle-free symmetrize.
-    val tCsr = System.nanoTime()
+    // distinctCanonical inputs take the shuffle-free symmetrize
     val base =
-      (if (!cfg.symmetrize) edges
-       else if (cfg.distinctCanonical) EdgeBuilder.symmetrizeDistinct(edges)
-       else EdgeBuilder.symmetrize(edges))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    // base rows = adjacency entries (no dedup in Csr.build), so this one
-    // count replaces the old Csr.edgeCount job AND sizes the loop's
-    // adaptive partitions (message volume per superstep is |E|)
-    val edgeCnt = base.count()
-    if (debug) Console.err.println(
-      f"[eigen] base ${(System.nanoTime() - tCsr) / 1e9}%.2fs")
-    if (edgeCnt == 0) {
-      base.unpersist(false)
+      if (cfg.distinctCanonical) EdgeBuilder.symmetrizeDistinct(edges)
+      else EdgeBuilder.symmetrize(edges)
+    val mode = if (cfg.weighted) Csr.WeightMode.Raw else Csr.WeightMode.One
+    Superstep.onGraph(base, mode) { g =>
+    // base rows = adjacency entries (no dedup in Csr.build): |E|, the
+    // message volume per superstep
+    if (g.entries == 0)
       return EigenResult(spark.emptyDataset[ScoreState], 0, 0L, 0.0)
-    }
-    val pEff = Tuning.adaptivePartitions(spark, edgeCnt)
-    Tuning.withShufflePartitions(spark, pEff) {
-    val p = pEff
-    val mode =
-      if (cfg.weighted) Csr.WeightMode.Raw else Csr.WeightMode.One
-    // lineage-cut adjacency: see Csr.buildCut (kills the per-job ~2 MiB
-    // task-binary rebroadcast of the full build plan)
-    val adj = Csr.buildCut(base, p, mode, approxEntries = edgeCnt)
-
-    val tInit = System.nanoTime()
-    // symmetrized mode: vertex universe from the packed blocks —
-    // exchange-free, ~|V| rows instead of a 2|E| union+distinct;
-    // directed (symmetrize=false) inputs keep the endpoint union
-    // (pure sinks never appear as a block src)
-    val verts =
-      if (cfg.symmetrize) Superstep.verticesFromAdj(adj)
-      else Superstep.vertices(base)
+    // vertex universe from the packed blocks: exchange-free, ~|V| rows
+    // instead of a 2|E| union+distinct (see Superstep.verticesFromAdj)
+    val verts = Superstep.verticesFromAdj(g.adj)
     val nVerts = verts.count()
-    if (debug) Console.err.println(
-      f"[eigen] init verts=$nVerts edges=$edgeCnt ${(System.nanoTime() - tInit) / 1e9}%.2fs")
 
     // y0 = 1.0 everywhere → T0 = n exactly (same literal on both engines)
     var state: DataFrame =
@@ -104,31 +74,25 @@ object Eigen {
     val t0 = System.nanoTime()
     while (iter < cfg.iterations) {
       // per-edge term (w·y)/T: dividing inside the scatter keeps the
-      // oracle's arithmetic identical (see class doc); every vertex of a
-      // symmetrized graph has in-edges, but isolated directions in
-      // symmetrize=false mode can message nobody — keep the left join.
+      // oracle's arithmetic identical (see class doc)
       val msgs = Superstep
-        .scatter(adj, state.select(col("vid"), col("score")))
+        .scatter(g.adj, state.select(col("vid"), col("score")))
         .select(col("vid"), (col("w") * col("score") / lit(total)).as("m"))
         .groupBy("vid").agg(sum("m").as("msg"))
       val next = state.select("vid")
         .join(msgs, Seq("vid"), "left_outer")
         .select(col("vid"), coalesce(col("msg"), lit(0.0)).as("score"))
-      val it0 = System.nanoTime()
       val (cut, r) = Superstep.cutAndAgg(next, nVerts, Seq(sum("score")))
       total = r.getDouble(0)
+      Internals.release(state)
       state = cut
       iter += 1
-      if (debug) Console.err.println(
-        f"[eigen] iter=$iter total=$total%.6f ${(System.nanoTime() - it0) / 1e9}%.2fs")
     }
     val wall = (System.nanoTime() - t0) / 1e9
     val out = state
       .select(col("vid"), (col("score") / lit(total)).as("score"))
       .as[ScoreState]
-    adj.unpersist(false)
-    base.unpersist(false)
-    EigenResult(out, iter, edgeCnt, wall)
-    } // withShufflePartitions
+    EigenResult(out, iter, g.entries, wall)
+    } // onGraph
   }
 }

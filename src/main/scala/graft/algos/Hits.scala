@@ -4,7 +4,6 @@ import graft._
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftinternal.Internals
-import org.apache.spark.storage.StorageLevel
 
 final case class HitsResult(
     scores: DataFrame, // (vid, hub, auth) — L1-normalized at output
@@ -60,47 +59,32 @@ final case class HitsResult(
   */
 object Hits {
 
-  private val debug = sys.env.contains("GRAFT_DEBUG")
-
   def run(
       edges: Dataset[Edge],
       iterations: Int = 8,
-  ): HitsResult = Superstep.withAqeOff(edges.sparkSession) {
+  ): HitsResult = {
     val spark = edges.sparkSession
     import spark.implicits._
 
-    // persist the caller's edge pipeline once: the two CSR builds and the
-    // vertex set each traverse it (the sf0.1 co-occurrence build re-runs
-    // 3x per call otherwise — same lesson as Eigen/Ppr), then read it
-    // through the cache leaf; release goes through `edges`, which owns
-    // the cache entry, and only if this call made it
-    val owned = edges.storageLevel == StorageLevel.NONE
-    val base =
-      Internals.cachedLeaf(edges.persist(StorageLevel.MEMORY_AND_DISK))
-    // |E| in WeightMode.One equals the adjacency entry count, so this one
-    // count doubles as the old Csr.edgeCount job AND the partition-sizing
-    // input: message volume per half-step is |E|, so the loop's
-    // partitions follow the data, capped by the session conf (Tuning)
-    val edgeCnt = base.count()
-    if (edgeCnt == 0) {
-      if (owned) edges.unpersist(false)
-      return HitsResult(
-        spark.emptyDataset[ScoreState].toDF()
-          .select(col("vid"), col("score").as("hub"), col("score").as("auth")),
-        0, 0L, 0.0)
-    }
-    val pEff = Tuning.adaptivePartitions(spark, edgeCnt)
-    Tuning.withShufflePartitions(spark, pEff) {
-      val fwd = Csr.buildCut(base, pEff, Csr.WeightMode.One, approxEntries = edgeCnt)
+    // the caller's edges are the base: both CSR builds and the vertex set
+    // read it, and its |E| rows are the message volume per half-step
+    Superstep.onGraph(edges, Csr.WeightMode.One) { g =>
+      if (g.entries == 0)
+        return HitsResult(
+          spark.emptyDataset[ScoreState].toDF()
+            .select(col("vid"), col("score").as("hub"), col("score").as("auth")),
+          0, 0L, 0.0)
+      val fwd = g.adj
+      // the reversed adjacency, released before return like g.adj
       val rev = Csr.buildCut(
-        base.select(
+        g.base.select(
           col("dst").as("src"), col("src").as("dst"), col("weight"),
         ).as[Edge],
-        pEff, Csr.WeightMode.One,
-        approxEntries = edgeCnt,
+        g.p, Csr.WeightMode.One,
+        approxEntries = g.entries,
       )
 
-      val verts = Superstep.vertices(base)
+      val verts = Superstep.vertices(g.base)
       val nVerts = verts.count()
 
       var auth: DataFrame =
@@ -146,8 +130,7 @@ object Hits {
           auth = aCut
           aTot = aRow.getDouble(0)
         }
-        if (debug) Console.err.println(
-          f"[hits] iter=$iter hTot=$hTot%.6g aTot=$aTot%.6g")
+        Internals.release(u)
       }
       val wall = (System.nanoTime() - t0) / 1e9
 
@@ -155,9 +138,8 @@ object Hits {
         .join(
           auth.select(col("vid"), (col("score") / lit(aTot)).as("auth")),
           Seq("vid"))
-      fwd.unpersist(false); rev.unpersist(false)
-      if (owned) edges.unpersist(false)
-      HitsResult(out, iter, edgeCnt, wall)
+      Internals.release(rev)
+      HitsResult(out, iter, g.entries, wall)
     }
   }
 }

@@ -97,35 +97,19 @@ object HyperBall {
       edges: Dataset[Edge],
       rounds: Int,
       hash: Hash64 = Hash64.Xx,
-  ): HyperBallChain = Superstep.withAqeOff(edges.sparkSession) {
+  ): HyperBallChain = {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
-    val spark = edges.sparkSession
-    val debug = sys.env.contains("GRAFT_DEBUG")
-    var tPh = System.nanoTime()
-    def ph(label: String): Unit = if (debug) {
-      val now = System.nanoTime()
-      Console.err.println(f"[hyperball] $label ${(now - tPh) / 1e9}%.2fs")
-      tPh = now
-    }
-
     // union-only symmetrize is valid UNCONDITIONALLY here: register
     // merging is a max — idempotent — so duplicate adjacency entries
     // (two-direction inputs, multi-edges) cannot change any register,
     // the same argument as Wcc's min (round 6)
     val base = EdgeBuilder.symmetrizeDistinct(edges)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val symCnt = base.count()
-    ph(s"base count=$symCnt")
     // per-superstep message volume is ~Registers·|E| (one row per
     // (register, out-edge)); size the loop's partitions to that
-    val pEff = Tuning.adaptivePartitions(spark, symCnt * Registers)
-    Tuning.withShufflePartitions(spark, pEff) {
-    val p = pEff
-    val adj = Csr.buildCut(base, p, Csr.WeightMode.One, approxEntries = symCnt)
+    Superstep.onGraph(base, Csr.WeightMode.One, rowsPerEntry = Registers) { g =>
     // vertex universe from the packed blocks: exchange-free, ~|V| rows
     // instead of a 2|E| union+distinct (see Superstep.verticesFromAdj)
-    val nVerts = Superstep.verticesFromAdj(adj).count()
-    ph(s"verts count=$nVerts")
+    val nVerts = Superstep.verticesFromAdj(g.adj).count()
 
     // each vertex inserts ITSELF into its own sketch: index = low 4 hash
     // bits, rho over the remaining bits (shift, not divide — a double
@@ -133,7 +117,7 @@ object HyperBall {
     // xxhash64 can be negative, so mask to 60 bits first on BOTH paths.
     val h = hash.one(col("vid")).bitwiseAND(lit((1L << 60) - 1L))
     var state: DataFrame = Superstep.cut(
-      Superstep.verticesFromAdj(adj)
+      Superstep.verticesFromAdj(g.adj)
         .select(
           col("vid"),
           h.bitwiseAND(lit(15L)).cast("int").as("idx"),
@@ -141,27 +125,24 @@ object HyperBall {
         ),
       nVerts,
     )
-    ph("init cut")
     var perRound = Vector(estimateFrame(state))
     var iter = 0
     while (iter < rounds) {
       val msgs = Superstep
-        .scatter(adj, state)
+        .scatter(g.adj, state)
         .select(col("vid"), col("idx"), col("val"))
       val merged = msgs
         .unionByName(state)
-        .repartition(p, col("vid")) // the ONE exchange of the superstep
+        .repartition(g.p, col("vid")) // the ONE exchange of the superstep
         .groupBy("vid", "idx") // hash(vid) clusters (vid, idx): no re-exchange
         .agg(max("val").as("val"))
       state = Superstep.cut(merged, nVerts * Registers)
       iter += 1
-      ph(s"round $iter")
       perRound :+= estimateFrame(state)
     }
-    adj.unpersist(false)
-    base.unpersist(false)
+    // every round's state stays: the perRound frames read them lazily
     HyperBallChain(state, perRound, rounds)
-    } // withShufflePartitions
+    } // onGraph
   }
 
   def run(

@@ -4,7 +4,6 @@ import graft._
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftinternal.Internals
-import org.apache.spark.storage.StorageLevel
 
 final case class KCoreResult(core: DataFrame, iterations: Int)
 
@@ -45,7 +44,7 @@ object KCore {
       k: Int,
       maxIter: Int = 1000,
       distinctCanonical: Boolean = false,
-  ): KCoreResult = Superstep.withAqeOff(edges.sparkSession) {
+  ): KCoreResult = {
     require(k >= 1, s"k must be >= 1, got $k")
     val spark = edges.sparkSession
     import spark.implicits._
@@ -61,23 +60,14 @@ object KCore {
        else EdgeBuilder.symmetrize(simple))
         .select(col("src"), col("dst"), lit(1.0).as("weight"))
         .as[Edge]
-        // persisted: the CSR build and the init-state cut both traverse
-        // the symmetrized base (see Eigen for the measurement)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    val adjCount = sym.count() // = adjacency entries; also sizes pEff
-    if (adjCount == 0) {
-      sym.unpersist(false)
+    Superstep.onGraph(sym, Csr.WeightMode.One) { g =>
+    if (g.entries == 0)
       return KCoreResult(spark.emptyDataset[Long].toDF("vid"), 0)
-    }
-    val pEff = Tuning.adaptivePartitions(spark, adjCount)
-    Tuning.withShufflePartitions(spark, pEff) {
-    val p = pEff
-    val adj = Csr.buildCut(sym, p, Csr.WeightMode.One, approxEntries = adjCount)
 
     // (vid, active); everyone starts active
     var state: DataFrame = Superstep.cut(
-      Superstep.verticesFromAdj(adj).withColumn("active", lit(true)),
-      adjCount,
+      Superstep.verticesFromAdj(g.adj).withColumn("active", lit(true)),
+      g.entries,
     )
     var activeCnt = state.count()
     var iter = 0
@@ -87,7 +77,7 @@ object KCore {
       // full CSR block set is exchange-free (both sides vid/src-hash
       // partitioned), the filter prunes before the explode
       val msgs = Superstep
-        .scatter(adj, state.where(col("active")).select(col("vid")))
+        .scatter(g.adj, state.where(col("active")).select(col("vid")))
         .groupBy("vid").agg(count(lit(1)).as("activeDeg"))
       val next = state.join(msgs, Seq("vid"), "left_outer")
         .select(
@@ -97,20 +87,18 @@ object KCore {
         )
       val (cut, r) = Superstep.cutAndAgg(
         next,
-        adjCount,
+        g.entries,
         Seq(sum(when(col("active"), 1L).otherwise(0L))),
       )
       val newActive = if (r.isNullAt(0)) 0L else r.getLong(0)
+      Internals.release(state)
       state = cut
       iter += 1
       converged = newActive == activeCnt
       activeCnt = newActive
       if (activeCnt == 0) converged = true
     }
-    val core = state.where(col("active")).select(col("vid"))
-    adj.unpersist(false)
-    sym.unpersist(false)
-    KCoreResult(core, iter)
-    } // withShufflePartitions
+    KCoreResult(state.where(col("active")).select(col("vid")), iter)
+    } // onGraph
   }
 }

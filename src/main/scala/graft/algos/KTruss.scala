@@ -75,7 +75,6 @@ object KTruss {
     require(fullRecountFactor >= 1, "fullRecountFactor must be >= 1")
     val spark = edges.sparkSession
     val minSup = (k - 2).toLong
-    val debug = sys.env.get("GRAFT_DEBUG").contains("1")
 
     // canonical simple edge set, materialized with its count in one job
     val (base, bRow) = Superstep.cutAndAgg(
@@ -93,16 +92,12 @@ object KTruss {
     Tuning.withShufflePartitions(spark, pEff) {
     val p = pEff
     // seed: one full support pass over the whole graph
-    val tSeed = System.nanoTime()
     var cur: DataFrame = withSupports(base, p)
     var m = cur.count()
-    if (debug)
-      println(f"[ktruss] seed m=$m wall=${(System.nanoTime() - tSeed) / 1e9}%.2fs")
     var iter = 0
     var converged = m == 0
     val trace = Seq.newBuilder[KTrussRound]
     while (!converged && iter < maxIter) {
-      val tRound = System.nanoTime()
       val dropped = cur.where(col("sup") < minSup).select(col("a"), col("b"))
       val alive = cur.where(col("sup") >= minSup)
       val dCut = Superstep.cut(dropped)
@@ -115,13 +110,9 @@ object KTruss {
         // count-gated fallback: this round rewrites most of the graph —
         // a full recount over the survivors is cheaper than enumerating
         // nearly every triangle as "destroyed"
-        if (debug)
-          println(s"[ktruss] iter=$iter dropped=$d of $m -> FULL recount")
         cur = withSupports(alive.select(col("a"), col("b")), p)
         trace += KTrussRound(d, m - d, "full")
       } else {
-        if (debug)
-          println(s"[ktruss] iter=$iter dropped=$d of $m -> incremental")
         // round-start edges, both directions (cur still includes the
         // dropped rows: destroyed triangles existed BEFORE the removal)
         val symCur = cur.select(col("a").as("x"), col("b").as("w"))
@@ -190,8 +181,6 @@ object KTruss {
         )
         trace += KTrussRound(d, m - d, "incremental")
       }
-      if (debug)
-        println(f"[ktruss] iter=$iter roundWall=${(System.nanoTime() - tRound) / 1e9}%.2fs")
       // both paths keep exactly the alive rows, so the new edge count is
       // m − d by construction — no extra count action per round
       val m2 = if (converged) m else m - d

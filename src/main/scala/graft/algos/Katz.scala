@@ -3,7 +3,7 @@ package graft.algos
 import graft._
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
+import org.apache.spark.sql.graftinternal.Internals
 
 final case class KatzResult(
     scores: DataFrame,
@@ -50,31 +50,23 @@ object Katz {
       edges: Dataset[Edge],
       rounds: Int = 4,
       distinctCanonical: Boolean = false,
-  ): KatzResult =
-    Superstep.withAqeOff(edges.sparkSession) {
-      val spark = edges.sparkSession
-      import spark.implicits._
-
-      val base =
-        (if (distinctCanonical) EdgeBuilder.symmetrizeDistinct(edges)
-         else EdgeBuilder.symmetrize(edges))
-          .persist(StorageLevel.MEMORY_AND_DISK)
-      // = adjacency entry count (One mode); also sizes the adaptive
-      // partitions — message volume per round is |E|
-      val edgeCnt = base.count()
-      if (edgeCnt == 0) {
-        base.unpersist(false)
+  ): KatzResult = {
+    val spark = edges.sparkSession
+    import spark.implicits._
+    val base =
+      if (distinctCanonical) EdgeBuilder.symmetrizeDistinct(edges)
+      else EdgeBuilder.symmetrize(edges)
+    Superstep.onGraph(base, Csr.WeightMode.One) { g =>
+      // entries = |E| of the adjacency; message volume per round is |E|
+      if (g.entries == 0)
         return KatzResult(
           spark.emptyDataset[(Long, Long, Long)]
             .toDF("vid", "walks", "katz_scaled"),
           0, 0L)
-      }
-      val pEff = Tuning.adaptivePartitions(spark, edgeCnt)
-      Tuning.withShufflePartitions(spark, pEff) {
-      val adj = Csr.buildCut(base, pEff, Csr.WeightMode.One, approxEntries = edgeCnt)
+
       // vertex universe from the packed blocks: exchange-free, ~|V| rows
       // instead of a 2|E| union+distinct (see Superstep.verticesFromAdj)
-      val verts = Superstep.verticesFromAdj(adj)
+      val verts = Superstep.verticesFromAdj(g.adj)
       val nVerts = verts.count()
 
       // walks_0 = 1 (the empty walk), acc_0 = 0
@@ -93,7 +85,7 @@ object Katz {
         // acc joins back exchange-free (both sides hash-partitioned by
         // vid at p partitions)
         val msgs = Superstep
-          .scatter(adj, state.select(col("vid"), col("walks")))
+          .scatter(g.adj, state.select(col("vid"), col("walks")))
           .groupBy("vid").agg(sum("walks").as("w"))
         val next = state.select(col("vid"), col("acc"))
           .join(msgs, Seq("vid"), "left_outer")
@@ -110,14 +102,13 @@ object Katz {
         require(
           maxAcc < (1L << 62),
           s"katz_scaled overflow risk: max acc $maxAcc at round $iter")
+        Internals.release(state)
         state = cut
         iter += 1
       }
-      adj.unpersist(false)
-      base.unpersist(false)
       KatzResult(
         state.select(col("vid"), col("walks"), col("acc").as("katz_scaled")),
-        iter, edgeCnt)
-      } // withShufflePartitions
+        iter, g.entries)
     }
+  }
 }

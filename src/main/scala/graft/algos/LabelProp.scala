@@ -4,7 +4,6 @@ import graft._
 import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftinternal.Internals
-import org.apache.spark.storage.StorageLevel
 
 /** Synchronous label propagation (B3, BASELINE.json:6,14).
   *
@@ -45,28 +44,16 @@ object LabelProp {
       edges: Dataset[Edge],
       cfg: LpConfig = LpConfig(),
       store: Option[SnapshotStore] = None,
-  ): Dataset[LabelState] = Superstep.withAqeOff(edges.sparkSession) {
+  ): Dataset[LabelState] = {
     val spark = edges.sparkSession
     import spark.implicits._
-    // persisted: the CSR build and the init-state cut both traverse the
-    // derived base (see Eigen for the measurement).
-    // distinctCanonical inputs take the shuffle-free symmetrize.
-    // the unsymmetrized base persists the caller's own frame: persisting
-    // its cache leaf would copy the cache
+    // distinctCanonical inputs take the shuffle-free symmetrize
     val input = Internals.cachedLeaf(edges)
     val base =
-      (if (!cfg.symmetrize) edges
-       else if (cfg.distinctCanonical) EdgeBuilder.symmetrizeDistinct(input)
-       else EdgeBuilder.symmetrize(input))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    val adjCount = base.count() // = adjacency entries; also sizes pEff
-    val pEff = Tuning.adaptivePartitions(spark, adjCount)
-    Tuning.withShufflePartitions(spark, pEff) {
-    val p = pEff
-    val mode =
-      if (cfg.weighted) Csr.WeightMode.Raw else Csr.WeightMode.One
-    val adj = Csr.buildCut(base, p, mode, approxEntries = adjCount)
-
+      if (cfg.distinctCanonical) EdgeBuilder.symmetrizeDistinct(input)
+      else EdgeBuilder.symmetrize(input)
+    val mode = if (cfg.weighted) Csr.WeightMode.Raw else Csr.WeightMode.One
+    Superstep.onGraph(base, mode) { g =>
     val resumed = store.flatMap(_.latest(spark))
     var iter = resumed.map(_._1.iteration).getOrElse(0)
     // lineage truncated every superstep — see PageRank for the rationale.
@@ -78,17 +65,16 @@ object LabelProp {
     // PlanShapeSpec).
     var state = resumed match {
       case Some((_, df)) =>
-        Superstep.cut(df.repartition(p, col("vid")), adjCount)
+        Superstep.cut(df.repartition(g.p, col("vid")), g.entries)
       case None =>
-        Superstep.cut(
-          if (cfg.symmetrize) Superstep.verticesFromAdj(adj)
-          else Superstep.vertices(base),
-          adjCount)
+        Superstep.cut(Superstep.verticesFromAdj(g.adj), g.entries)
           .select(col("vid"), col("vid").as("label"))
     }
     while (iter < cfg.iterations) {
       val t0 = System.nanoTime()
-      state = Superstep.cut(superstep(adj, state, p), adjCount)
+      val next = Superstep.cut(superstep(g.adj, state, g.p), g.entries)
+      Internals.release(state)
+      state = next
       iter += 1
       val secs = (System.nanoTime() - t0) / 1e9
       val done = iter >= cfg.iterations
@@ -96,15 +82,12 @@ object LabelProp {
         s.write(
           iter,
           state,
-          Map("seconds" -> secs, "numPartitions" -> p.toDouble),
+          Map("seconds" -> secs, "numPartitions" -> g.p.toDouble),
         )
       }
     }
-    val out = state.select(col("vid"), col("label")).as[LabelState]
-    adj.unpersist(false)
-    base.unpersist(false)
-    out
-    } // withShufflePartitions
+    state.select(col("vid"), col("label")).as[LabelState]
+    } // onGraph
   }
 
   /** One synchronous superstep: (vid, label) state in, next state out.

@@ -3,7 +3,7 @@ package graft.algos
 import graft._
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
+import org.apache.spark.sql.graftinternal.Internals
 
 /** Deterministic one-level Louvain move pass (Blondel et al. 2008, "Fast
   * unfolding of communities in large networks", J. Stat. Mech. P10008) —
@@ -73,33 +73,25 @@ object Louvain {
       edges: Dataset[Edge],
       rounds: Int = 4,
       distinctCanonical: Boolean = false,
-  ): DataFrame =
-    Superstep.withAqeOff(edges.sparkSession) {
-      val spark = edges.sparkSession
-      import spark.implicits._
-      // distinctCanonical callers (one row per undirected src<dst pair)
-      // take the shuffle-free symmetrize — see EdgeBuilder
-      val base =
-        (if (distinctCanonical) EdgeBuilder.symmetrizeDistinct(edges)
-         else EdgeBuilder.symmetrize(edges))
-          .persist(StorageLevel.MEMORY_AND_DISK)
-      // sym entries = 2m; m = |undirected simple edges|. The one count
-      // also sizes the adaptive partitions (candidate volume per round
-      // is ~2m) and replaces the old separate adj.count job.
-      val m: Long = base.count() / 2
+  ): DataFrame = {
+    // distinctCanonical callers (one row per undirected src<dst pair)
+    // take the shuffle-free symmetrize — see EdgeBuilder
+    val base =
+      if (distinctCanonical) EdgeBuilder.symmetrizeDistinct(edges)
+      else EdgeBuilder.symmetrize(edges)
+    // sym entries = 2m, m = |undirected simple edges|: candidate volume
+    // per round is ~2m, so the entry count sizes the partitions
+    Superstep.onGraph(base, Csr.WeightMode.One) { g =>
+      val m: Long = g.entries / 2
       val adjCount = 2L * m
-      val pEff = Tuning.adaptivePartitions(spark, 2L * m)
-      Tuning.withShufflePartitions(spark, pEff) {
-      val p = pEff
-      val adj = Csr.buildCut(base, p, Csr.WeightMode.One, approxEntries = adjCount)
       // simple degree, hash(vid)-partitioned (groupBy src leaves it there)
       val degDf = Superstep.cut(
-        base.toDF().groupBy(col("src")).agg(count(lit(1)).as("deg"))
+        g.base.toDF().groupBy(col("src")).agg(count(lit(1)).as("deg"))
           .select(col("src").as("vid"), col("deg"))
       )
       val twoM = lit(2L * m).cast("decimal(38,0)")
 
-      var state = Superstep.cut(Superstep.verticesFromAdj(adj), adjCount)
+      var state = Superstep.cut(Superstep.verticesFromAdj(g.adj), adjCount)
         .select(col("vid"), col("vid").as("comm"))
       // Σtot has one row per community — bounded by the vertex count, so
       // the broadcast decision is a free, deterministic count gate (same
@@ -107,23 +99,20 @@ object Louvain {
       // 10^10-vertex graphs shuffle it
       val nVerts = state.count()
       val bcastTot = nVerts <= (4L << 20)
-      val debug = sys.env.get("GRAFT_DEBUG").contains("1")
       var r = 1
       while (r <= rounds) {
-        val t0 = System.nanoTime()
-        state = Superstep.cut(
-          moveRound(adj, state, degDf, twoM, p, r, bcastTot,
-            candRows = 2L * m + nVerts),
-          adjCount)
-        if (debug)
-          println(f"[louvain] round=$r wall=${(System.nanoTime() - t0) / 1e9}%.2fs")
+        val moved = moveRound(g.adj, state, degDf, twoM, g.p, r, bcastTot,
+          candRows = 2L * m + nVerts)
+        val next = Superstep.cut(moved, adjCount)
+        // the round's state and Σtot checkpoints
+        Internals.release(moved, g.adj, degDf)
+        state = next
         r += 1
       }
-      adj.unpersist(false)
-      base.unpersist(false)
+      Internals.release(degDf)
       state
-      } // withShufflePartitions
     }
+  }
 
   /** One synchronous gain-argmax move round. Package-visible for the
     * plan-shape suite.

@@ -4,7 +4,7 @@ import graft._
 import graft.functions.Hash64
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
+import org.apache.spark.sql.graftinternal.Internals
 
 final case class MisResult(mis: DataFrame, rounds: Int)
 
@@ -48,7 +48,7 @@ object Mis {
       hash: Hash64 = Hash64.Xx,
       maxRounds: Int = 256,
       distinctCanonical: Boolean = false,
-  ): MisResult = Superstep.withAqeOff(edges.sparkSession) {
+  ): MisResult = {
     val spark = edges.sparkSession
     import spark.implicits._
 
@@ -62,21 +62,11 @@ object Mis {
        else EdgeBuilder.symmetrize(simple))
         .select(col("src"), col("dst"), lit(1.0).as("weight"))
         .as[Edge]
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    val adjCount = sym.count() // = adjacency entries; also sizes pEff
-    if (adjCount == 0) {
-      sym.unpersist(false)
-      return MisResult(spark.emptyDataset[Long].toDF("vid"), 0)
-    }
-    val pEff = Tuning.adaptivePartitions(spark, adjCount)
-    Tuning.withShufflePartitions(spark, pEff) {
-    val p = pEff
-    val adj = Csr.buildCut(sym, p, Csr.WeightMode.One, approxEntries = adjCount)
-
+    Superstep.onGraph(sym, Csr.WeightMode.One) { g =>
     // status: 0 = active, 1 = in MIS, 2 = dominated (a neighbor won)
     var state: DataFrame = Superstep.cut(
-      Superstep.verticesFromAdj(adj).withColumn("status", lit(0)),
-      adjCount,
+      Superstep.verticesFromAdj(g.adj).withColumn("status", lit(0)),
+      g.entries,
     )
     var remaining = state.count()
     var iter = 0
@@ -90,7 +80,7 @@ object Mis {
       // vertices scatter, so arrivals are exactly the active neighbors
       val minNbr = Superstep
         .scatter(
-          adj,
+          g.adj,
           pri.select(
             col("vid"),
             struct(col("h").as("h"), col("vid").as("pvid")).as("pri"),
@@ -107,7 +97,7 @@ object Mis {
         remaining,
       )
       // winner notification: neighbors of winners become dominated
-      val hit = Superstep.scatter(adj, winners)
+      val hit = Superstep.scatter(g.adj, winners)
         .select(col("vid")).distinct()
       val next = state
         .join(winners.withColumn("won", lit(1)), Seq("vid"), "left_outer")
@@ -121,16 +111,15 @@ object Mis {
         )
       val (cut, r) = Superstep.cutAndAgg(
         next,
-        adjCount,
+        g.entries,
         Seq(sum(when(col("status") === 0, 1L).otherwise(0L))),
       )
+      Internals.release(state)
+      Internals.release(winners)
       state = cut
       remaining = if (r.isNullAt(0)) 0L else r.getLong(0)
     }
-    val mis = state.where(col("status") === 1).select(col("vid"))
-    adj.unpersist(false)
-    sym.unpersist(false)
-    MisResult(mis, iter)
-    } // withShufflePartitions
+    MisResult(state.where(col("status") === 1).select(col("vid")), iter)
+    } // onGraph
   }
 }

@@ -4,7 +4,6 @@ import graft._
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftinternal.Internals
-import org.apache.spark.storage.StorageLevel
 
 final case class PprResult(
     ranks: Dataset[RankState],
@@ -59,42 +58,29 @@ object Ppr {
       edges: Dataset[Edge],
       sources: DataFrame,
       cfg: PrConfig = PrConfig(),
-  ): PprResult = Superstep.withAqeOff(edges.sparkSession) {
+  ): PprResult = {
     val spark = edges.sparkSession
     import spark.implicits._
-
-    // persist the input edges: the CSR build, vertex set, out-set, and
-    // the caller's seed pipeline (usually derived from the SAME edge
-    // plan — the cache is matched by plan fragment) each traverse them;
-    // without the cache a cold PPR re-ran the sf0.1 co-occurrence build
-    // ~7× (measured 158 s → ~30 s). Read through the cache leaf; release
-    // goes through `edges`, which owns the cache entry, and only if this
-    // call made it
-    val owned = edges.storageLevel == StorageLevel.NONE
-    val base =
-      Internals.cachedLeaf(edges.persist(StorageLevel.MEMORY_AND_DISK))
-    // base rows = adjacency entries (Norm modes keep every row), so the
-    // count replaces the old Csr.edgeCount job and sizes pEff
-    val edgeCnt = base.count()
-    if (edgeCnt == 0) {
-      if (owned) edges.unpersist(false)
-      return PprResult(spark.emptyDataset[RankState], 0, 0L, 0.0)
-    }
-    val pEff = Tuning.adaptivePartitions(spark, edgeCnt)
-    Tuning.withShufflePartitions(spark, pEff) {
-    val p = pEff
     val mode =
       if (cfg.weighted) Csr.WeightMode.NormWeighted
       else Csr.WeightMode.NormUniform
-    val adj = Csr.buildCut(base, p, mode, approxEntries = edgeCnt)
+    // the input edges are the base: the CSR build, vertex set, out-set,
+    // and the caller's seed pipeline (usually derived from the SAME edge
+    // plan — the cache is matched by plan fragment) each traverse them;
+    // uncached, a cold PPR re-ran the sf0.1 co-occurrence build ~7×
+    // (measured 158 s → ~30 s)
+    Superstep.onGraph(edges, mode) { g =>
+    // base rows = adjacency entries (Norm modes keep every row)
+    if (g.entries == 0)
+      return PprResult(spark.emptyDataset[RankState], 0, 0L, 0.0)
 
-    val verts = Superstep.vertices(base)
+    val verts = Superstep.vertices(g.base)
     // vertices WITH out-edges = the block sources: already hash-
     // partitioned by the vertex key, so this distinct is exchange-free
     // and scans ~|V⁺| block rows instead of |E| edge rows (the same
     // argument as Superstep.verticesFromAdj; valid on a DIRECTED graph
     // here precisely because only the out-set is wanted)
-    val outs = Superstep.verticesFromAdj(adj)
+    val outs = Superstep.verticesFromAdj(g.adj)
       .withColumn("hasOut", lit(true))
     val nVerts = verts.count()
     // |S ∩ V| — the reset normalizer; seeds outside the graph carry no
@@ -131,7 +117,7 @@ object Ppr {
       // whole-stage codegen; only rank is needed downstream, so prune
       // dangling/reset before the explode to keep the shuffle rows thin
       val msgs = Superstep
-        .scatter(adj, state.select(col("vid"), col("rank")))
+        .scatter(g.adj, state.select(col("vid"), col("rank")))
         .select(col("vid"), (col("w") * col("rank")).as("m"))
         .groupBy("vid").agg(sum("m").as("msg"))
       val newRank = lit(1.0 - d) * col("reset") +
@@ -154,6 +140,7 @@ object Ppr {
       )
       delta = r.getDouble(0)
       dm = if (r.isNullAt(1)) 0.0 else r.getDouble(1)
+      Internals.release(state)
       state = cut.drop("delta")
       iter += 1
     }
@@ -161,9 +148,7 @@ object Ppr {
     val ranks = state
       .select(col("vid"), col("rank"), col("dangling"))
       .as[RankState]
-    adj.unpersist(false)
-    if (owned) edges.unpersist(false)
-    PprResult(ranks, iter, edgeCnt, wall)
-    } // withShufflePartitions
+    PprResult(ranks, iter, g.entries, wall)
+    } // onGraph
   }
 }

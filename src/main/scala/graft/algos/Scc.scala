@@ -89,8 +89,6 @@ final case class CondensationResult(
   */
 object Scc {
 
-  private val debug = sys.env.contains("GRAFT_DEBUG")
-
   /** @param edges DIRECTED edges (src → dst); self-loops are ignored
     *              (a self-loop never changes SCC membership). Vertex
     *              universe = ALL edge endpoints — including endpoints
@@ -305,9 +303,6 @@ object Scc {
           activeEdges = ar.getLong(0)
           fwd.unpersist(false)
           rev.unpersist(false)
-          if (debug) Console.err.println(
-            s"[scc] peel=$peels decided=$nDecided activeEdges=$activeEdges " +
-              s"propRounds=$propRounds trimRounds=$trimRounds")
         }
       }
       require(
@@ -396,7 +391,6 @@ object Scc {
         s"Scc.condense: levels did not converge in $maxRounds rounds — " +
           "contracted graph not acyclic (invariant broken) or deeper than " +
           "maxRounds")
-      if (debug) Console.err.println(s"[scc] condense rounds=$rounds")
       CondensationResult(lvl.join(sizes, Seq("scc")), rounds, sccRes)
     }
   }

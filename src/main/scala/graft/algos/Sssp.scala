@@ -3,7 +3,7 @@ package graft.algos
 import graft._
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
+import org.apache.spark.sql.graftinternal.Internals
 
 final case class SsspResult(dists: DataFrame, iterations: Int)
 
@@ -42,27 +42,16 @@ object Sssp {
       seeds: DataFrame,
       maxIter: Int = 200,
       distinctCanonical: Boolean = false,
-  ): SsspResult = Superstep.withAqeOff(edges.sparkSession) {
-    val spark = edges.sparkSession
-    import spark.implicits._
-
-    // persisted: the CSR build, the vertex set, and the init-state cut
-    // all traverse the symmetrized base (see Eigen for the measurement);
+  ): SsspResult = {
     // distinctCanonical callers take the shuffle-free symmetrize
     val simple = edges.filter(col("src") =!= col("dst"))
     val sym =
-      (if (distinctCanonical) EdgeBuilder.symmetrizeDistinct(simple)
-       else EdgeBuilder.symmetrize(simple))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    val symCnt = sym.count() // sizes the adaptive partitions
-    val pEff = Tuning.adaptivePartitions(spark, symCnt)
-    Tuning.withShufflePartitions(spark, pEff) {
-    val p = pEff
-    val adj = Csr.buildCut(sym, p, Csr.WeightMode.Raw, approxEntries = symCnt)
-
+      if (distinctCanonical) EdgeBuilder.symmetrizeDistinct(simple)
+      else EdgeBuilder.symmetrize(simple)
+    Superstep.onGraph(sym, Csr.WeightMode.Raw) { g =>
     // vertex universe from the packed blocks: exchange-free, ~|V| rows
     // instead of a 2|E| union+distinct (see Superstep.verticesFromAdj)
-    val verts = Superstep.verticesFromAdj(adj)
+    val verts = Superstep.verticesFromAdj(g.adj)
     // (vid, dist, improved) — dist null until reached; seeds start at 0
     // and form the first frontier
     var state: DataFrame = verts
@@ -86,7 +75,7 @@ object Sssp {
       // improved vertices scatter dist+w; one shuffle takes the min
       // candidate per touched vertex (map-side partial min combine)
       val cand = Superstep
-        .scatter(adj, state.where(col("improved")).select(col("vid"), col("dist")))
+        .scatter(g.adj, state.where(col("improved")).select(col("vid"), col("dist")))
         .groupBy("vid").agg(min(col("dist") + col("w")).as("cand"))
       val next = state.join(cand, Seq("vid"), "left_outer")
         .select(
@@ -104,13 +93,12 @@ object Sssp {
         nVerts,
         Seq(sum(when(col("improved"), 1L).otherwise(0L))),
       )
+      Internals.release(state)
       state = cut
       frontier = if (r.isNullAt(0)) 0L else r.getLong(0)
     }
     val dists = state.where(col("dist").isNotNull).select(col("vid"), col("dist"))
-    adj.unpersist(false)
-    sym.unpersist(false)
     SsspResult(dists, iter)
-    } // withShufflePartitions
+    } // onGraph
   }
 }

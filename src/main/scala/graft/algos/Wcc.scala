@@ -4,7 +4,6 @@ import graft._
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftinternal.Internals
-import org.apache.spark.storage.StorageLevel
 
 final case class WccResult(comps: Dataset[CompState], iterations: Int)
 
@@ -65,24 +64,16 @@ object Wcc {
       pointerJump: Boolean = true,
       checkpointEvery: Int = 8,
       broadcastJumpMax: Long = 1L << 20,
-  ): WccResult = Superstep.withAqeOff(edges.sparkSession) {
+  ): WccResult = {
     val spark = edges.sparkSession
     import spark.implicits._
-    // persisted: the CSR build and the init-state cut both traverse the
-    // symmetrized base (see Eigen for the measurement). Union-only
-    // symmetrize (round 6): min-label propagation is IDEMPOTENT in the
-    // adjacency — duplicate (u,v) entries (two-direction inputs,
+    // Union-only symmetrize (round 6): min-label propagation is IDEMPOTENT
+    // in the adjacency — duplicate (u,v) entries (two-direction inputs,
     // multi-edges, self-loops) cannot change any min — so the general
     // symmetrize's merge aggregation (one full 2|E| exchange) is pure
     // overhead here for ANY input, not just canonical ones.
     val sym = EdgeBuilder.symmetrizeDistinct(Internals.cachedLeaf(edges))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val adjCount = sym.count() // = adjacency entries; also sizes pEff
-    val pEff = Tuning.adaptivePartitions(spark, adjCount)
-    Tuning.withShufflePartitions(spark, pEff) {
-    val p = pEff
-    val adj = Csr.buildCut(sym, p, Csr.WeightMode.One, approxEntries = adjCount)
-
+    Superstep.onGraph(sym, Csr.WeightMode.One) { g =>
     val resumed = store.flatMap(_.latest(spark))
     var iter = resumed.map(_._1.iteration).getOrElse(0)
     val startIter = iter
@@ -92,9 +83,9 @@ object Wcc {
     // first element (hash(comp)) — see LabelProp.
     var state: DataFrame = resumed match {
       case Some((_, df)) =>
-        Superstep.cut(df.repartition(p, col("vid")), adjCount)
+        Superstep.cut(df.repartition(g.p, col("vid")), g.entries)
       case None =>
-        Superstep.cut(Superstep.verticesFromAdj(adj), adjCount)
+        Superstep.cut(Superstep.verticesFromAdj(g.adj), g.entries)
           .select(col("vid"), col("vid").as("comp"))
     }
     var changed = 1L // loop control; sentinel 1 to enter
@@ -131,7 +122,7 @@ object Wcc {
       val t0 = System.nanoTime()
       if (pointerJump && !jumpOn && chHist._1 >= 0 && chHist._2 >= 0 &&
         chHist._1 * 2 > chHist._2) jumpOn = true
-      val msgs = Superstep.scatter(adj, state)
+      val msgs = Superstep.scatter(g.adj, state)
         .groupBy("vid").agg(min("comp").as("mc"))
       val half = state.join(msgs, Seq("vid"), "left_outer")
         .select(
@@ -142,7 +133,7 @@ object Wcc {
       val next = if (!jumpOn) half
       else {
         // half feeds the jump twice (probe + lookup): materialize once
-        val h = Superstep.cut(half, adjCount)
+        val h = Superstep.cut(half, g.entries)
         val imgDf = h.select(col("comp")).distinct()
           .withColumnRenamed("comp", "vid")
         // lookup: comp(c) for c in the comp image, non-root rows only
@@ -168,7 +159,7 @@ object Wcc {
           col("comp"),
           (col("comp") < col("oldComp")).as("changed"),
         ),
-        adjCount,
+        g.entries,
         Seq(
           coalesce(sum(when(col("changed"), 1L).otherwise(0L)), lit(0L)),
           approx_count_distinct(col("comp")),
@@ -179,13 +170,11 @@ object Wcc {
       // approx (~2% rsd) is plenty for a broadcast-threshold decision;
       // 2x slack below keeps the decision safe against the estimate error
       img = (stats.getLong(1) * 2) min Long.MaxValue
+      Internals.release(state)
+      if (jumpOn) Internals.release(next) // reads only the jump's cut h
       state = mat.drop("changed")
       iter += 1
       val secs = (System.nanoTime() - t0) / 1e9
-      if (sys.env.contains("GRAFT_DEBUG"))
-        System.err.println(
-          f"[wcc] iter=$iter changed=$changed img~${stats.getLong(1)} " +
-            f"jumpOn=$jumpOn $secs%.2fs")
       val converged = changed == 0 || iter >= maxIter
       if (iter % checkpointEvery == 0 || converged) store.foreach { s =>
         s.write(
@@ -197,15 +186,13 @@ object Wcc {
             "jumpOn" -> (if (jumpOn) 1.0 else 0.0),
             "compImageApprox" -> stats.getLong(1).toDouble,
             "seconds" -> secs,
-            "numPartitions" -> p.toDouble,
+            "numPartitions" -> g.p.toDouble,
           ),
         )
       }
     }
     val out = state.select(col("vid"), col("comp")).as[CompState]
-    adj.unpersist(false)
-    sym.unpersist(false)
     WccResult(out, iter - startIter)
-    } // withShufflePartitions
+    } // onGraph
   }
 }

@@ -80,7 +80,6 @@ final case class PrConfig(
 final case class LpConfig(
     iterations: Int = 5,
     weighted: Boolean = true,
-    symmetrize: Boolean = true,
     checkpointEvery: Int = 8,
     // caller asserts the input has ONE row per undirected (src < dst)
     // pair (e.g. an EdgeBuilder.cooccurrence output): symmetrize then
@@ -96,7 +95,6 @@ final case class LpConfig(
 final case class EcConfig(
     iterations: Int = 8,
     weighted: Boolean = false,
-    symmetrize: Boolean = true,
     // see LpConfig.distinctCanonical
     distinctCanonical: Boolean = false,
 )

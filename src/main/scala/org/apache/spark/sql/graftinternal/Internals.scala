@@ -67,6 +67,30 @@ object Internals {
     }
   }
 
+  /** Free the checkpoint blocks `df` reads, except those `keep` reads:
+    * unpersist the RDD under each `LogicalRDD` leaf of its plan.
+    *
+    * A localCheckpoint is not a CacheManager entry, so
+    * `Dataset.unpersist` does not reach its blocks; without this they stay
+    * until the frame is garbage-collected. A released checkpoint cannot be
+    * recomputed: call it only once nothing reads `df` again.
+    */
+  def release(
+      df: org.apache.spark.sql.Dataset[_],
+      keep: org.apache.spark.sql.Dataset[_]*,
+  ): Unit = {
+    def checkpoints(d: org.apache.spark.sql.Dataset[_]) =
+      d.queryExecution.analyzed.collectLeaves().collect {
+        case r: LogicalRDD => r.rdd.id
+      }
+    val kept = keep.flatMap(checkpoints).toSet
+    // once per RDD (a self-join lists its leaf twice), and through the
+    // context: RDD.unpersist warns on every local checkpoint that it
+    // cannot be recomputed, which is the intent here
+    checkpoints(df).distinct.filterNot(kept)
+      .foreach(df.sparkSession.sparkContext.unpersistRDD(_, blocking = false))
+  }
+
   /** Wrap `df`'s physical RDD in a scan that declares
     * `HashPartitioning(hashCol, n)` and `[sortCols ASC]` WITHOUT moving
     * any data.

@@ -841,40 +841,7 @@ class GraphExtrasSpec extends GraftSuite {
     }
   }
 
-  // ---- Jones-Plassmann coloring ----
-
-  /** Sequential greedy coloring along DECREASING (portable-hash, vid)
-    * priority — exactly the fixpoint JP computes: when v is processed,
-    * precisely its higher-priority neighbors are colored.
-    */
-  private def jpOracle(g: Seq[(Long, Long, Double)]): Map[Long, Long] = {
-    val adj = g
-      .flatMap { case (a, b, _) =>
-        if (a == b) Nil else Seq(a -> b, b -> a)
-      }
-      .distinct.groupBy(_._1).map { case (v, ns) => v -> ns.map(_._2).toSet }
-    val pri = adj.keySet.iterator
-      .map(v => v -> (md5PortableHash(v.toString) & ((1L << 60) - 1)))
-      .toMap
-    val order = adj.keySet.toSeq.sortBy(v => (pri(v), v)).reverse
-    val color = scala.collection.mutable.Map.empty[Long, Long]
-    order.foreach { v =>
-      val used = adj(v).flatMap(color.get)
-      color(v) = Iterator.iterate(0L)(_ + 1L).find(k => !used.contains(k)).get
-    }
-    color.toMap
-  }
-
-  test("JP coloring matches sequential greedy along priority order") {
-    Seq(13L, 67L, 101L).foreach { seed =>
-      val g = seededRandomGraph(seed, 40, 120)
-      val r = graft.algos.Coloring
-        .run(edgeDs(g), graft.functions.Hash64.Portable)
-      val got = r.colors.collect()
-        .map(row => row.getLong(0) -> row.getLong(1)).toMap
-      assert(got == jpOracle(g), s"seed $seed")
-    }
-  }
+  // ---- coloring ----
 
   /** Plain-Scala replay of Coloring.speculative: hash-palette init, then
     * synchronous recolor-if-outranked-same-color with mex over distinct
@@ -925,27 +892,6 @@ class GraphExtrasSpec extends GraftSuite {
       g.foreach { case (a, b, _) =>
         if (a != b) assert(got(a) != got(b), s"seed $seed edge ($a,$b)")
       }
-    }
-  }
-
-  test("JP coloring is proper and within Δ+1 (production hash)") {
-    (Seq(Fixtures.path5, Fixtures.star, Fixtures.twoCliquesBridge) ++
-      Seq(31L, 47L).map(seededRandomGraph(_, 35, 100))).foreach { g =>
-      val colors = graft.algos.Coloring.run(edgeDs(g)).colors
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val und = g.flatMap { case (a, b, _) =>
-        if (a == b) Nil else Seq(a -> b, b -> a)
-      }.distinct
-      und.foreach { case (a, b) =>
-        assert(colors(a) != colors(b), s"edge ($a,$b) monochrome")
-      }
-      val maxDeg = und.groupBy(_._1).values.map(_.size).max
-      assert(colors.values.max <= maxDeg.toLong,
-        s"χ ${colors.values.max + 1} > Δ+1 ${maxDeg + 1}")
-      // deterministic under the production hash too
-      val again = graft.algos.Coloring.run(edgeDs(g)).colors
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(colors == again)
     }
   }
 

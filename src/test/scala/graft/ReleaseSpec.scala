@@ -1,0 +1,96 @@
+package graft
+
+import graft.algos._
+import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.storage.StorageLevel
+
+/** Every single-CSR kernel releases what it caches on return: after the
+  * kernel runs and its result is collected, the only new persistent RDDs
+  * are the checkpoints its result frames read (the RDDs under their
+  * `LogicalRDD` leaves) — no adjacency, no replaced round state, no
+  * intermediate cut and no edge base. A caller's cached input keeps its
+  * storage level.
+  */
+class ReleaseSpec extends GraftSuite {
+  import spark.implicits._
+
+  /** PropertySpec's seeded random graphs. */
+  private def graph(seed: Int): Seq[(Long, Long, Double)] = {
+    val r = new scala.util.Random(seed)
+    val n = 30 + r.nextInt(40)
+    (1 to 150)
+      .map(_ => (r.nextInt(n).toLong, r.nextInt(n).toLong))
+      .filter { case (a, b) => a != b }
+      .distinct
+      .map { case (a, b) => (a, b, 1.0 + r.nextInt(3).toDouble) }
+  }
+
+  private def seeds(g: Seq[(Long, Long, Double)]): DataFrame =
+    Seq(g.headOption.fold(0L)(_._1)).toDF("vid")
+
+  /** Each kernel with the result frames it returns. */
+  private def kernels(
+      g: Seq[(Long, Long, Double)],
+  ): Seq[(String, Dataset[Edge] => Seq[Dataset[_]])] = Seq(
+    "bfs" -> (e => Seq(Bfs.run(e, seeds(g)).dists)),
+    "sssp" -> (e => Seq(Sssp.run(e, seeds(g)).dists)),
+    "kcore" -> (e => Seq(KCore.run(e, 3).core)),
+    "mis" -> (e => Seq(Mis.run(e).mis)),
+    "coloring" -> (e => Seq(Coloring.speculative(e, palette = 4).colors)),
+    "katz" -> (e => Seq(Katz.run(e, rounds = 3).scores)),
+    "louvain" -> (e => Seq(Louvain.run(e, rounds = 2))),
+    "eigen" -> (e => Seq(Eigen.run(e, EcConfig(iterations = 3)).scores)),
+    "labelprop" -> (e => Seq(LabelProp.run(e, LpConfig(iterations = 3)))),
+    "wcc" -> (e => Seq(Wcc.run(e).comps)),
+    "hyperball" -> { e =>
+      val c = HyperBall.chain(e, rounds = 2)
+      c.state +: c.perRound
+    },
+    "ppr" -> (e => Seq(Ppr.run(e, seeds(g), PrConfig(maxIter = 3)).ranks)),
+    "hits" -> (e => Seq(Hits.run(e, iterations = 3).scores)),
+  )
+
+  /** Ids of the RDDs under the `LogicalRDD` leaves of `df`'s plan. */
+  private def checkpointIds(df: Dataset[_]): Seq[Int] =
+    df.queryExecution.analyzed.collectLeaves().collect {
+      case r: LogicalRDD => r.rdd.id
+    }
+
+  private def persistentIds: Set[Int] =
+    spark.sparkContext.getPersistentRDDs.keySet.toSet
+
+  /** Runs every kernel on `g` (on a caller-persisted input if `cached`)
+    * and checks what each leaves registered.
+    */
+  private def check(what: String, g: Seq[(Long, Long, Double)], cached: Boolean): Unit = {
+    val input = edgeDs(g)
+    if (cached) { input.persist(); input.count() }
+    kernels(g).foreach { case (name, run) =>
+      val before = persistentIds
+      val frames = run(input)
+      frames.foreach(_.collect())
+      val left = persistentIds -- before
+      val read = frames.flatMap(checkpointIds).toSet
+      assert(left == read,
+        s"$name on $what: ${(left -- read).size} persistent RDDs beyond " +
+          s"the ${read.size} its result reads")
+      if (cached)
+        assert(input.storageLevel == StorageLevel.MEMORY_AND_DISK,
+          s"$name on $what dropped the caller's cache")
+    }
+    if (cached) input.unpersist(true)
+  }
+
+  test("kernels leave registered only the checkpoints their result reads") {
+    check("graph 1", graph(1), cached = false)
+  }
+
+  test("a caller's cached input stays cached, and nothing else is left") {
+    check("graph 7", graph(7), cached = true)
+  }
+
+  test("every kernel handles the empty graph and leaves nothing behind") {
+    check("the empty graph", Seq.empty, cached = false)
+  }
+}

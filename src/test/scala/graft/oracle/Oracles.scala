@@ -86,6 +86,20 @@ object Oracles {
     verts.map(v => v -> find(v)).toMap
   }
 
+  /** Both directions of every edge, weights of equal pairs merged (the
+    * engine's EdgeBuilder.symmetrize).
+    */
+  private def symmetrized(
+      edges: Seq[(Long, Long, Double)],
+  ): Seq[(Long, Long, Double)] = {
+    val m = mutable.Map.empty[(Long, Long), Double]
+    edges.foreach { case (s, t, w) =>
+      m((s, t)) = m.getOrElse((s, t), 0.0) + w
+      m((t, s)) = m.getOrElse((t, s), 0.0) + w
+    }
+    m.toSeq.map { case ((s, t), w) => (s, t, w) }
+  }
+
   /** Synchronous label propagation, weighted frequency, smallest-label
     * tie-break, fixed iteration count — identical rule to the engine.
     */
@@ -93,15 +107,7 @@ object Oracles {
       edges: Seq[(Long, Long, Double)],
       cfg: LpConfig,
   ): Map[Long, Long] = {
-    val base =
-      if (cfg.symmetrize) {
-        val m = mutable.Map.empty[(Long, Long), Double]
-        edges.foreach { case (s, t, w) =>
-          m((s, t)) = m.getOrElse((s, t), 0.0) + w
-          m((t, s)) = m.getOrElse((t, s), 0.0) + w
-        }
-        m.toSeq.map { case ((s, t), w) => (s, t, w) }
-      } else edges
+    val base = symmetrized(edges)
     val verts = verticesOf(base)
     var label = verts.map(v => v -> v).toMap
     for (_ <- 0 until cfg.iterations) {
@@ -303,7 +309,7 @@ object Oracles {
   }
 
   /** Dense eigenvector centrality: k power-iteration steps with per-step
-    * L1 normalization over the (optionally symmetrized) graph. Mirrors
+    * L1 normalization over the symmetrized graph. Mirrors
     * [[graft.algos.Eigen]]'s Scaladoc semantics exactly: y0 = 1,
     * y'(v) = Σ w·y(u)/T, out = y_k/T_k.
     */
@@ -311,15 +317,7 @@ object Oracles {
       edges: Seq[(Long, Long, Double)],
       cfg: EcConfig,
   ): Map[Long, Double] = {
-    val base =
-      if (cfg.symmetrize) {
-        val m = mutable.Map.empty[(Long, Long), Double]
-        edges.foreach { case (s, t, w) =>
-          m((s, t)) = m.getOrElse((s, t), 0.0) + w
-          m((t, s)) = m.getOrElse((t, s), 0.0) + w
-        }
-        m.toSeq.map { case ((s, t), w) => (s, t, w) }
-      } else edges
+    val base = symmetrized(edges)
     val verts = verticesOf(base)
     var y = verts.map(v => v -> 1.0).toMap
     var total = y.values.sum
