@@ -92,7 +92,7 @@ object Superstep {
     * leaf, its row count `entries`, the loop's partition count `p`, and
     * the lineage-cut adjacency `adj` packed from `base` at `p`.
     */
-  final case class Graph(
+  private[graft] final case class Graph(
       base: Dataset[Edge],
       entries: Long,
       p: Int,
@@ -114,7 +114,7 @@ object Superstep {
     * it; a caller's cache stays. So the result must not read `g.adj` or
     * `g.base`: results leave as round-state checkpoints or scalars.
     */
-  def onGraph[R](
+  private[graft] def onGraph[R](
       base: Dataset[Edge],
       mode: Csr.WeightMode,
       rowsPerEntry: Long = 1L,
