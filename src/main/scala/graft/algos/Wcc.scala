@@ -4,6 +4,7 @@ import graft._
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftinternal.Internals
+import org.apache.spark.storage.StorageLevel
 
 final case class WccResult(comps: Dataset[CompState], iterations: Int)
 
@@ -14,7 +15,19 @@ final case class WccResult(comps: Dataset[CompState], iterations: Int)
   * of partitioning and reduction order — which is what makes the EXACT
   * match contract achievable (SURVEY §7.4.2).
   *
-  * Two convergence modes:
+  * Three modes. An input of at most `driverMaxPairs` pairs (default
+  * 2^20, ~16 MB of ids) takes the first; a larger one runs the superstep
+  * LOOP over the symmetrized adjacency in one of the other two:
+  *   - the DRIVER PATH collects the (src, dst) pairs and runs union-find,
+  *     the larger root hung under the smaller, so every root is its
+  *     component's min id — the same bounded-small-side reasoning as a
+  *     broadcast join's build side. One row per endpoint (a vertex whose
+  *     only edge is a self-loop included), `iterations = 0`. No superstep
+  *     runs: `maxIter`, `pointerJump`, `checkpointEvery` and
+  *     `broadcastJumpMax` do not apply, and `store` is neither read nor
+  *     written — resume matters when the rounds are the long pole, which
+  *     by this bound they are not. `driverMaxPairs = 0` runs the loop on
+  *     any non-empty input.
   *   - `pointerJump = false`: plain min-label propagation — one message
   *     shuffle per round, O(diameter) rounds. The obviously-correct
   *     baseline and the cross-check for the accelerated path.
@@ -52,8 +65,11 @@ final case class WccResult(comps: Dataset[CompState], iterations: Int)
   *
   * Resumable (north_star: "all runs are resumable"): pass a
   * [[SnapshotStore]]; every `checkpointEvery` rounds (and at convergence)
-  * the (vid, comp) state is snapshotted with round metrics, and a fresh
-  * run resumes from the latest manifest.
+  * the loop snapshots the (vid, comp) state with round metrics, and a
+  * fresh run that takes the loop resumes from the latest manifest.
+  *
+  * The input is persisted for the count unless the caller cached it; a
+  * cache made here is dropped on return.
   */
 object Wcc {
 
@@ -64,15 +80,75 @@ object Wcc {
       pointerJump: Boolean = true,
       checkpointEvery: Int = 8,
       broadcastJumpMax: Long = 1L << 20,
+      driverMaxPairs: Long = 1L << 20,
   ): WccResult = {
-    val spark = edges.sparkSession
+    // the count and the path it picks read one cache; both paths'
+    // results are materialized before a cache made here is dropped
+    val owned = edges.storageLevel == StorageLevel.NONE
+    if (owned) edges.persist(StorageLevel.MEMORY_AND_DISK)
+    try {
+      val leaf = Internals.cachedLeaf(edges)
+      if (leaf.count() <= driverMaxPairs) unionFind(leaf)
+      else rounds(leaf, maxIter, store, pointerJump, checkpointEvery,
+        broadcastJumpMax)
+    } finally if (owned) edges.unpersist(false)
+  }
+
+  /** The driver path: union-find over the collected pairs. Vertex ids are
+    * indexed in sorted order and a union hangs the larger root under the
+    * smaller, so every root is its component's minimum id.
+    */
+  private def unionFind(leaf: Dataset[Edge]): WccResult = {
+    val spark = leaf.sparkSession
+    import spark.implicits._
+    val pairs = leaf.select(col("src"), col("dst")).as[(Long, Long)].collect()
+    val ends = new Array[Long](pairs.length * 2)
+    var i = 0
+    while (i < pairs.length) {
+      ends(2 * i) = pairs(i)._1
+      ends(2 * i + 1) = pairs(i)._2
+      i += 1
+    }
+    java.util.Arrays.sort(ends)
+    var n = 0
+    i = 0
+    while (i < ends.length) {
+      if (n == 0 || ends(n - 1) != ends(i)) { ends(n) = ends(i); n += 1 }
+      i += 1
+    }
+    val vids = java.util.Arrays.copyOf(ends, n)
+    val parent = Array.range(0, n)
+    def find(x: Int): Int = {
+      var r = x
+      while (parent(r) != r) { parent(r) = parent(parent(r)); r = parent(r) }
+      r
+    }
+    def index(v: Long): Int = java.util.Arrays.binarySearch(vids, v)
+    pairs.foreach { case (a, b) =>
+      val ra = find(index(a)); val rb = find(index(b))
+      if (ra != rb) parent(ra max rb) = ra min rb
+    }
+    val comps = Seq.tabulate(n)(j => CompState(vids(j), vids(find(j))))
+    WccResult(spark.createDataset(comps), 0)
+  }
+
+  /** The loop: supersteps over the symmetrized adjacency. */
+  private def rounds(
+      leaf: Dataset[Edge],
+      maxIter: Int,
+      store: Option[SnapshotStore],
+      pointerJump: Boolean,
+      checkpointEvery: Int,
+      broadcastJumpMax: Long,
+  ): WccResult = {
+    val spark = leaf.sparkSession
     import spark.implicits._
     // Union-only symmetrize (round 6): min-label propagation is IDEMPOTENT
     // in the adjacency — duplicate (u,v) entries (two-direction inputs,
     // multi-edges, self-loops) cannot change any min — so the general
     // symmetrize's merge aggregation (one full 2|E| exchange) is pure
     // overhead here for ANY input, not just canonical ones.
-    val sym = EdgeBuilder.symmetrizeDistinct(Internals.cachedLeaf(edges))
+    val sym = EdgeBuilder.symmetrizeDistinct(leaf)
     Superstep.onGraph(sym, Csr.WeightMode.One) { g =>
     val resumed = store.flatMap(_.latest(spark))
     var iter = resumed.map(_._1.iteration).getOrElse(0)

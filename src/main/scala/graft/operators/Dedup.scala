@@ -386,71 +386,33 @@ object Dedup {
     * their own surviving cluster).
     *
     * `universe` must have a single Long-valued `id` column; `pairs` needs
-    * `id_a`/`id_b`. The WCC phase keeps its O(log n) round bound and, via
-    * `store`, its resumability — at 100 TB the component rounds are the
-    * long pole, and a crashed dedup job should resume there, not re-mine
-    * candidate pairs from scratch.
-    *
-    * Adaptive small-graph path: the dup graph is usually FAR smaller
-    * than the corpus (it has one edge per verified duplicate pair), so
-    * when the pair count is at most `smallCutoff` the components come
-    * from a driver-side union-find over the collected ids-only pairs —
-    * the same bounded-small-side reasoning as a broadcast join's build
-    * side (default 2^20 pairs = ~16 MB), decided by a count, exactly
-    * like Wcc's own broadcast-jump endgame. Above the cutoff the full
-    * distributed WCC runs; both paths produce identical clusters (the
-    * union-find points larger roots at smaller ones, so every root IS
-    * its component's min id). `store` only applies to the WCC path —
-    * resume matters precisely when the component rounds are the long
-    * pole, which the small path by definition is not.
+    * `id_a`/`id_b`. The components come from [[graft.algos.Wcc]]. The dup
+    * graph is usually FAR smaller than the corpus (one edge per verified
+    * duplicate pair), so it usually fits Wcc's driver bound, and one
+    * union-find over the collected pairs gives the components. Wcc
+    * persists the pairs to count them, so the mining pipeline behind them
+    * runs once. Over the bound the rounds run, with their O(log n) round
+    * bound and, via `store`, their resumability — at 100 TB the component
+    * rounds are the long pole, and a crashed dedup job should resume
+    * there, not re-mine candidate pairs from scratch. The driver path
+    * neither reads nor writes `store`.
     */
   def clustersFromPairs(
       universe: DataFrame,
       pairs: DataFrame,
       store: Option[graft.SnapshotStore] = None,
-      smallCutoff: Long = 1L << 20,
   ): DataFrame = {
     import universe.sparkSession.implicits._
-    val spark = universe.sparkSession
     requireIntegralId(universe, "id", "clustersFromPairs")
-    val raw = pairs
-      .select(col("id_a").cast("long").as("src"),
-        col("id_b").cast("long").as("dst"))
-    // a caller that already pinned the distributed path (cutoff <= 0)
-    // must not pay the sizing pass: no persist, no count
-    if (smallCutoff <= 0)
-      return joinUniverse(universe, wccComps(raw, store))
-    val p = raw
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val nPairs = p.count()
-    val comps: DataFrame = if (nPairs <= smallCutoff) {
-      val arr = p.as[(Long, Long)].collect()
-      p.unpersist(false)
-      val parent = scala.collection.mutable.HashMap.empty[Long, Long]
-      def find(x: Long): Long = {
-        var r = x
-        while (parent.getOrElse(r, r) != r) r = parent(r)
-        var c = x // path compression
-        while (parent.getOrElse(c, c) != c) {
-          val n = parent(c); parent(c) = r; c = n
-        }
-        r
-      }
-      arr.foreach { case (a, b) =>
-        val ra = find(a); val rb = find(b)
-        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-      }
-      val verts =
-        arr.iterator.flatMap { case (a, b) => Iterator(a, b) }.toArray.distinct
-      spark.createDataset(verts.toSeq.map(v => (v, find(v))))
-        .toDF("vid", "comp")
-    } else {
-      val c = wccComps(p, store)
-      // safe: the component state was materialized by the superstep cuts
-      p.unpersist(false)
-      c
-    }
-    joinUniverse(universe, comps)
+    val dupEdges = pairs
+      .select(
+        col("id_a").cast("long").as("src"),
+        col("id_b").cast("long").as("dst"),
+        lit(1.0).as("weight"),
+      )
+      .as[graft.Edge]
+    joinUniverse(universe,
+      graft.algos.Wcc.run(dupEdges, store = store).comps.toDF())
   }
 
   /** Guard shared by every clustering entry point: the WCC/union-find
@@ -466,19 +428,6 @@ object Dedup {
       s"$op needs an integral id column; '$idCol' is ${idType.typeName}" +
         " — hash it to a Long first (EdgeBuilder.vidOf)",
     )
-  }
-
-  /** Distributed components over (src, dst) pair rows — the resumable
-    * WCC path of [[clustersFromPairs]].
-    */
-  private def wccComps(
-      pairs: DataFrame, store: Option[graft.SnapshotStore]): DataFrame = {
-    val spark = pairs.sparkSession
-    import spark.implicits._
-    val dupEdges = pairs
-      .select(col("src"), col("dst"), lit(1.0).as("weight"))
-      .as[graft.Edge]
-    graft.algos.Wcc.run(dupEdges, store = store).comps.toDF()
   }
 
   /** One row per universe id with its cluster + survivor flag;

@@ -24,12 +24,15 @@ class AlgoFixtureSpec extends GraftSuite {
 
     test(s"wcc matches oracle exactly on $name (pointer-jump + plain)") {
       val want = Oracles.wcc(g)
-      val jumped = Wcc.run(edgeDs(g))
+      val jumped = Wcc.run(edgeDs(g), driverMaxPairs = 0)
         .comps.collect().map(c => c.vid -> c.comp).toMap
       exactMatch(jumped, want)
-      val plain = Wcc.run(edgeDs(g), pointerJump = false)
+      val plain = Wcc.run(edgeDs(g), pointerJump = false, driverMaxPairs = 0)
         .comps.collect().map(c => c.vid -> c.comp).toMap
       exactMatch(plain, want)
+      val driver = Wcc.run(edgeDs(g))
+        .comps.collect().map(c => c.vid -> c.comp).toMap
+      exactMatch(driver, want)
     }
 
     test(s"label propagation matches oracle exactly on $name") {
@@ -82,7 +85,7 @@ class AlgoFixtureSpec extends GraftSuite {
 
   test("wcc pointer jumping: path-1024 converges in O(log n), not O(n) rounds") {
     val path = (1L until 1024L).map(i => (i, i + 1, 1.0))
-    val res = Wcc.run(edgeDs(path), maxIter = 40)
+    val res = Wcc.run(edgeDs(path), maxIter = 40, driverMaxPairs = 0)
     assert(res.iterations <= 25,
       s"pointer jumping took ${res.iterations} rounds on a 1024-path")
     val got = res.comps.collect().map(c => c.vid -> c.comp).toMap

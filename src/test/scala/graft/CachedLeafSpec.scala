@@ -101,6 +101,10 @@ class CachedLeafSpec extends GraftSuite {
       sameOnCached(s"wcc/$seed")(make) { e =>
         Wcc.run(e).comps.collect().map(c => c.vid -> c.comp).toMap
       }
+      sameOnCached(s"wcc loop/$seed")(make) { e =>
+        Wcc.run(e, driverMaxPairs = 0).comps.collect()
+          .map(c => c.vid -> c.comp).toMap
+      }
       sameOnCached(s"kcore/$seed")(make) { e =>
         KCore.run(e, 3, distinctCanonical = true)
           .core.select(col("vid")).as[Long].collect().toSet

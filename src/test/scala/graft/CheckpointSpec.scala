@@ -59,11 +59,12 @@ class CheckpointSpec extends GraftSuite {
     // a path has enough rounds (even with pointer jumping) that a
     // 3-round prefix is genuinely partial
     val path = (1L until 256L).map(i => (i, i + 1, 1.0))
-    val straight = Wcc.run(edgeDs(path))
+    val straight = Wcc.run(edgeDs(path), driverMaxPairs = 0)
     val store = new ParquetSnapshotStore(tmp(), "wcc1")
     Wcc.run(edgeDs(path), maxIter = 3, store = Some(store),
-      checkpointEvery = 3)
-    val resumed = Wcc.run(edgeDs(path), store = Some(store))
+      checkpointEvery = 3, driverMaxPairs = 0)
+    val resumed =
+      Wcc.run(edgeDs(path), store = Some(store), driverMaxPairs = 0)
     // every op is exact integer min/jump — the resumed trajectory equals
     // the straight one from round 3 on
     assert(resumed.iterations == straight.iterations - 3,

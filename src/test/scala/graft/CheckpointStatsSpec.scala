@@ -14,7 +14,7 @@ class CheckpointStatsSpec extends GraftSuite {
     // plain min-label propagation moves the minimum one hop per round, so
     // an 18-vertex chain runs 17 changing rounds plus the converged one
     val chain = (0L until 17L).map(i => (i, i + 1, 1.0))
-    val r = Wcc.run(edgeDs(chain), pointerJump = false)
+    val r = Wcc.run(edgeDs(chain), pointerJump = false, driverMaxPairs = 0)
     assert(r.iterations >= 16, s"only ${r.iterations} rounds")
     val size = r.comps.queryExecution.optimizedPlan.stats.sizeInBytes
     assert(size.bitLength <= 63, s"the estimate is a ${size.bitLength}-bit number")

@@ -890,7 +890,7 @@ class PipelineOpsSpec extends GraftSuite {
       3L -> ((3L, true))))
   }
 
-  test("clustersFromPairs: small-path union-find == distributed WCC") {
+  test("clustersFromPairs: transitive clusters, min-id survivor, singletons") {
     import graft.operators.Dedup
     val uni = (0L until 12L).toDF("id")
     val pairs = Seq((1L, 2L), (2L, 3L), (5L, 6L), (10L, 1L))
@@ -898,14 +898,12 @@ class PipelineOpsSpec extends GraftSuite {
     def norm(df: org.apache.spark.sql.DataFrame) =
       df.collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSet
-    val small = norm(Dedup.clustersFromPairs(uni, pairs)) // under cutoff
-    val big = norm(Dedup.clustersFromPairs(uni, pairs, smallCutoff = -1))
-    assert(small == big, s"paths diverge:\n$small\n$big")
+    val got = norm(Dedup.clustersFromPairs(uni, pairs))
     // {1,2,3,10} -> 1, {5,6} -> 5, the rest are surviving singletons
-    assert(small((1L, 1L, true)) && small((10L, 1L, false)) &&
-      small((3L, 1L, false)) && small((5L, 5L, true)) &&
-      small((6L, 5L, false)) && small((0L, 0L, true)) &&
-      small((11L, 11L, true)))
+    assert(got((1L, 1L, true)) && got((10L, 1L, false)) &&
+      got((3L, 1L, false)) && got((5L, 5L, true)) &&
+      got((6L, 5L, false)) && got((0L, 0L, true)) &&
+      got((11L, 11L, true)))
   }
 
   test("contamination reports only cross-corpus pairs, ids mapped back") {

@@ -43,6 +43,7 @@ class ReleaseSpec extends GraftSuite {
     "eigen" -> (e => Seq(Eigen.run(e, EcConfig(iterations = 3)).scores)),
     "labelprop" -> (e => Seq(LabelProp.run(e, LpConfig(iterations = 3)))),
     "wcc" -> (e => Seq(Wcc.run(e).comps)),
+    "wcc loop" -> (e => Seq(Wcc.run(e, driverMaxPairs = 0).comps)),
     "hyperball" -> { e =>
       val c = HyperBall.chain(e, rounds = 2)
       c.state +: c.perRound
