@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftinternal.Internals
 import org.apache.spark.storage.StorageLevel
@@ -134,6 +134,88 @@ object Superstep {
         }
       } finally if (owned) base.unpersist(false)
     }
+  }
+
+  /** Where a resumable loop over `g` starts: from the latest snapshot in
+    * `store` (its state re-partitioned by vid and cut, its round, its
+    * metrics), else from round 0 with every vertex labelled by its own id
+    * in column `label`, and no metrics.
+    */
+  private[graft] def start(
+      g: Graph,
+      store: Option[SnapshotStore],
+      label: String,
+  ): (DataFrame, Int, Map[String, Double]) =
+    store.flatMap(_.latest(g.adj.sparkSession)) match {
+      case Some((snap, df)) =>
+        (cut(df.repartition(g.p, col("vid")), g.entries), snap.iteration,
+          snap.metrics)
+      case None =>
+        // (vid, vid AS label) goes AFTER the checkpoint: of the double
+        // alias's PartitioningCollection(hash(label), hash(vid)),
+        // localCheckpoint keeps only the first element, which would sneak
+        // two exchanges into round 1 (pinned by PlanShapeSpec)
+        (cut(verticesFromAdj(g.adj), g.entries)
+          .select(col("vid"), col("vid").as(label)), 0, Map.empty)
+    }
+
+  /** The round cycle of a loop kernel over `g`, from round `from` until
+    * `maxRounds` or until `stop` holds.
+    *
+    * Round `r` builds `next = step(state, r)` and materializes it with ONE
+    * action: a [[cutAndAgg]] over `stats` whose row `stop` then reads, or,
+    * with no `stats`, an eager [[cut]] (and `stop` reads an empty row).
+    * Both store at the level `rows` picks ([[SerializedCutThreshold]]).
+    * The cut is projected back to `init`'s columns, so `next` may carry
+    * columns that only `stats` reads.
+    *
+    * Release rule: once `next` has materialized, every checkpoint that the
+    * replaced state or `next`'s plan reads is freed, except `g.adj` and
+    * `keep`. So a step reads only its state, `g.adj` and `keep`: anything
+    * else a round reads, such as a cut it makes itself, is gone after it.
+    *
+    * With a `store`, the state is snapshotted every `checkpointEvery`
+    * rounds and after the last one, with `metrics` of the round's stats
+    * row plus its `seconds` and `numPartitions`.
+    *
+    * @return the last state and the round reached (`from` plus the rounds
+    *         run).
+    */
+  private[graft] def iterate(
+      g: Graph,
+      init: DataFrame,
+      rows: Long,
+      maxRounds: Int,
+      from: Int = 0,
+      stats: Seq[Column] = Nil,
+      stop: Row => Boolean = _ => false,
+      keep: Seq[Dataset[_]] = Nil,
+      store: Option[SnapshotStore] = None,
+      checkpointEvery: Int = 1,
+      metrics: Row => Map[String, Double] = _ => Map.empty,
+  )(step: (DataFrame, Int) => DataFrame): (DataFrame, Int) = {
+    val columns = init.columns.toSeq.map(col)
+    val kept = g.adj +: keep
+    var state = init
+    var round = from
+    var done = false
+    while (!done && round < maxRounds) {
+      val t0 = System.nanoTime()
+      val next = step(state, round)
+      val (cp, row) =
+        if (stats.isEmpty) (cut(next, rows), Row.empty)
+        else cutAndAgg(next, rows, stats)
+      done = stop(row)
+      Internals.release(state, kept: _*)
+      Internals.release(next, state +: kept: _*)
+      state = cp.select(columns: _*)
+      round += 1
+      val secs = (System.nanoTime() - t0) / 1e9
+      if (round % checkpointEvery == 0 || done || round >= maxRounds)
+        store.foreach(_.write(round, state, metrics(row) ++
+          Map("seconds" -> secs, "numPartitions" -> g.p.toDouble)))
+    }
+    (state, round)
   }
 
   /** Distinct vertex ids of an edge table, hash-partitioned by vid. */

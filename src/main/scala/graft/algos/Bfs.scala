@@ -3,7 +3,6 @@ package graft.algos
 import graft._
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftinternal.Internals
 
 final case class BfsResult(dists: DataFrame, iterations: Int)
 
@@ -46,45 +45,42 @@ object Bfs {
     // vertex universe from the packed blocks: exchange-free, ~|V| rows
     // instead of a 2|E| union+distinct (see Superstep.verticesFromAdj)
     val verts = Superstep.verticesFromAdj(g.adj)
-    // (vid, dist) — dist null until reached; seeds start at 0
-    var state: DataFrame = verts
-      .join(
-        seeds.select(col("vid")).distinct().withColumn("isSeed", lit(true)),
-        Seq("vid"),
-        "left_outer",
-      )
-      .select(
-        col("vid"),
-        when(col("isSeed"), lit(0L)).otherwise(lit(null).cast("long"))
-          .as("dist"),
-      )
     val nVerts = verts.count()
-    state = Superstep.cut(state, nVerts)
-    var frontier = state.where(col("dist") === 0L).count()
-    var iter = 0
-    while (frontier > 0 && iter < maxIter) {
+    // (vid, dist) — dist null until reached; seeds start at 0
+    val init = Superstep.cut(
+      verts
+        .join(
+          seeds.select(col("vid")).distinct().withColumn("isSeed", lit(true)),
+          Seq("vid"),
+          "left_outer",
+        )
+        .select(
+          col("vid"),
+          when(col("isSeed"), lit(0L)).otherwise(lit(null).cast("long"))
+            .as("dist"),
+        ),
+      nVerts,
+    )
+    val frontier = init.where(col("dist") === 0L).count()
+    val (state, iter) = Superstep.iterate(
+      g, init, nVerts, if (frontier > 0) maxIter else 0,
+      stats = Seq(count_if(col("reached"))),
+      stop = _.getLong(0) == 0,
+    ) { (state, round) =>
       // only the frontier scatters: one (vid) row per out-edge of a
       // vertex settled LAST round, aggregated to the distinct touched set
       val touched = Superstep
-        .scatter(g.adj, state.where(col("dist") === iter).select(col("vid")))
+        .scatter(g.adj, state.where(col("dist") === round).select(col("vid")))
         .groupBy("vid").agg(count(lit(1)).as("hits"))
-      iter += 1
-      val next = state.join(touched, Seq("vid"), "left_outer")
+      state.join(touched, Seq("vid"), "left_outer")
         .select(
           col("vid"),
           coalesce(
             col("dist"),
-            when(col("hits").isNotNull, lit(iter.toLong)),
+            when(col("hits").isNotNull, lit(round + 1L)),
           ).as("dist"),
+          (col("dist").isNull && col("hits").isNotNull).as("reached"),
         )
-      val (cut, r) = Superstep.cutAndAgg(
-        next,
-        nVerts,
-        Seq(sum(when(col("dist") === iter, 1L).otherwise(0L))),
-      )
-      Internals.release(state)
-      state = cut
-      frontier = if (r.isNullAt(0)) 0L else r.getLong(0)
     }
     BfsResult(state.where(col("dist").isNotNull), iter)
     } // onGraph

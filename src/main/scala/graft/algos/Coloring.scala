@@ -4,7 +4,6 @@ import graft._
 import graft.functions.Hash64
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftinternal.Internals
 
 final case class ColoringResult(colors: DataFrame, rounds: Int)
 
@@ -66,7 +65,7 @@ object Coloring {
         spark.emptyDataset[(Long, Long)].toDF("vid", "color"), 0)
 
     val h = hash.one(col("vid")).bitwiseAND(lit(Mask60))
-    var state: DataFrame = Superstep.cut(
+    val init = Superstep.cut(
       Superstep.verticesFromAdj(g.adj).select(
         col("vid"),
         h.as("h"),
@@ -75,9 +74,11 @@ object Coloring {
       g.entries,
     )
     var conflicts = 1L
-    var iter = 0
-    while (conflicts > 0 && iter < maxRounds) {
-      iter += 1
+    val (state, iter) = Superstep.iterate(
+      g, init, g.entries, maxRounds,
+      stats = Seq(count_if(col("conf"))),
+      stop = { r => conflicts = r.getLong(0); conflicts == 0 },
+    ) { (state, _) =>
       // one scatter of (priority, color); per (receiver, color) the max
       // sender priority partial-aggregates map-side, then distinct
       // neighbor colors collapse per receiver (both bounded by the
@@ -96,7 +97,7 @@ object Coloring {
       val perCCut = Superstep.cut(perC, g.entries)
       val used = perCCut.groupBy("vid")
         .agg(array_sort(collect_set(col("c"))).as("cols"))
-      val next = state
+      state
         .join(
           perCCut.select(col("vid"), col("c"), col("mx")),
           state("vid") === perCCut("vid") && col("color") === col("c"),
@@ -118,15 +119,6 @@ object Coloring {
             .as("color"),
           col("conf"),
         )
-      val (cut, r) = Superstep.cutAndAgg(
-        next,
-        g.entries,
-        Seq(sum(when(col("conf"), 1L).otherwise(0L))),
-      )
-      Internals.release(state)
-      Internals.release(perCCut)
-      state = cut.drop("conf")
-      conflicts = if (r.isNullAt(0)) 0L else r.getLong(0)
     }
     require(conflicts == 0, s"speculative coloring: $conflicts conflicts " +
       s"left after $maxRounds rounds — raise maxRounds")

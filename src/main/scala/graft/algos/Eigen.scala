@@ -1,9 +1,8 @@
 package graft.algos
 
 import graft._
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftinternal.Internals
 
 final case class EigenResult(
     scores: Dataset[ScoreState],
@@ -35,8 +34,9 @@ final case class EigenResult(
   * state exchange-free (both hash-partitioned by the vertex key, same
   * partition count), codegen posexplode scatter, ONE shuffle per superstep
   * (the message aggregation, map-side combined). The next round's
-  * normalizer T is folded into the lineage cut via [[Superstep.cutAndAgg]]
-  * — one job per superstep, like WCC's fused convergence aggregate.
+  * normalizer T is the stats aggregate of the round's lineage cut
+  * ([[Superstep.iterate]]) — one job per superstep, like WCC's fused
+  * convergence aggregate.
   *
   * Like [[Ppr]], this is deliberately its own lean loop over the shared
   * layers rather than a mode threaded through the scaling-certified
@@ -66,27 +66,24 @@ object Eigen {
     val nVerts = verts.count()
 
     // y0 = 1.0 everywhere → T0 = n exactly (same literal on both engines)
-    var state: DataFrame =
-      Superstep.cut(verts.withColumn("score", lit(1.0)), nVerts)
+    val init = Superstep.cut(verts.withColumn("score", lit(1.0)), nVerts)
     var total: Double = nVerts.toDouble
 
-    var iter = 0
     val t0 = System.nanoTime()
-    while (iter < cfg.iterations) {
+    val (state, iter) = Superstep.iterate(
+      g, init, nVerts, cfg.iterations,
+      stats = Seq(sum("score")),
+      stop = { r => total = r.getDouble(0); false },
+    ) { (state, _) =>
       // per-edge term (w·y)/T: dividing inside the scatter keeps the
       // oracle's arithmetic identical (see class doc)
       val msgs = Superstep
         .scatter(g.adj, state.select(col("vid"), col("score")))
         .select(col("vid"), (col("w") * col("score") / lit(total)).as("m"))
         .groupBy("vid").agg(sum("m").as("msg"))
-      val next = state.select("vid")
+      state.select("vid")
         .join(msgs, Seq("vid"), "left_outer")
         .select(col("vid"), coalesce(col("msg"), lit(0.0)).as("score"))
-      val (cut, r) = Superstep.cutAndAgg(next, nVerts, Seq(sum("score")))
-      total = r.getDouble(0)
-      Internals.release(state)
-      state = cut
-      iter += 1
     }
     val wall = (System.nanoTime() - t0) / 1e9
     val out = state

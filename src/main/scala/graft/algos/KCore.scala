@@ -65,38 +65,33 @@ object KCore {
       return KCoreResult(spark.emptyDataset[Long].toDF("vid"), 0)
 
     // (vid, active); everyone starts active
-    var state: DataFrame = Superstep.cut(
+    val init = Superstep.cut(
       Superstep.verticesFromAdj(g.adj).withColumn("active", lit(true)),
       g.entries,
     )
-    var activeCnt = state.count()
-    var iter = 0
-    var converged = false
-    while (!converged && iter < maxIter) {
+    var active = init.count()
+    val (state, iter) = Superstep.iterate(
+      g, init, g.entries, maxIter,
+      stats = Seq(count_if(col("active"))),
+      // converged: no vertex deactivated this round, or none is left
+      stop = { r =>
+        val last = active
+        active = r.getLong(0)
+        active == last || active == 0
+      },
+    ) { (state, _) =>
       // scatter only from still-active vertices; the join against the
       // full CSR block set is exchange-free (both sides vid/src-hash
       // partitioned), the filter prunes before the explode
       val msgs = Superstep
         .scatter(g.adj, state.where(col("active")).select(col("vid")))
         .groupBy("vid").agg(count(lit(1)).as("activeDeg"))
-      val next = state.join(msgs, Seq("vid"), "left_outer")
+      state.join(msgs, Seq("vid"), "left_outer")
         .select(
           col("vid"),
           (col("active") &&
             coalesce(col("activeDeg"), lit(0L)) >= k).as("active"),
         )
-      val (cut, r) = Superstep.cutAndAgg(
-        next,
-        g.entries,
-        Seq(sum(when(col("active"), 1L).otherwise(0L))),
-      )
-      val newActive = if (r.isNullAt(0)) 0L else r.getLong(0)
-      Internals.release(state)
-      state = cut
-      iter += 1
-      converged = newActive == activeCnt
-      activeCnt = newActive
-      if (activeCnt == 0) converged = true
     }
     KCoreResult(state.where(col("active")).select(col("vid")), iter)
     } // onGraph

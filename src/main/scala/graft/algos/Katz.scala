@@ -3,7 +3,6 @@ package graft.algos
 import graft._
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftinternal.Internals
 
 final case class KatzResult(
     scores: DataFrame,
@@ -70,7 +69,7 @@ object Katz {
       val nVerts = verts.count()
 
       // walks_0 = 1 (the empty walk), acc_0 = 0
-      var state: DataFrame = Superstep.cut(
+      val init = Superstep.cut(
         verts.select(
           col("vid"),
           lit(1L).as("walks"),
@@ -78,33 +77,31 @@ object Katz {
         ),
         nVerts,
       )
-      var iter = 0
-      var maxAcc = 0L
-      while (iter < rounds) {
+      val (state, iter) = Superstep.iterate(
+        g, init, nVerts, rounds,
+        stats = Seq(max("acc")),
+        // headroom guard per round (ANSI would already have thrown on a
+        // wrapped sum; this catches "legal but about to run out")
+        stop = { r =>
+          val maxAcc = r.getLong(0)
+          require(maxAcc < (1L << 62),
+            s"katz_scaled overflow risk: max acc $maxAcc")
+          false
+        },
+      ) { (state, _) =>
         // one exchange: the walk-count message aggregation; the carry of
         // acc joins back exchange-free (both sides hash-partitioned by
         // vid at p partitions)
         val msgs = Superstep
           .scatter(g.adj, state.select(col("vid"), col("walks")))
           .groupBy("vid").agg(sum("walks").as("w"))
-        val next = state.select(col("vid"), col("acc"))
+        state.select(col("vid"), col("acc"))
           .join(msgs, Seq("vid"), "left_outer")
           .select(
             col("vid"),
             coalesce(col("w"), lit(0L)).as("walks"),
             (col("acc") * 8L + coalesce(col("w"), lit(0L))).as("acc"),
           )
-        val (cut, r) =
-          Superstep.cutAndAgg(next, nVerts, Seq(max("acc")))
-        maxAcc = r.getLong(0)
-        // headroom guard per round (ANSI would already have thrown on a
-        // wrapped sum; this catches "legal but about to run out")
-        require(
-          maxAcc < (1L << 62),
-          s"katz_scaled overflow risk: max acc $maxAcc at round $iter")
-        Internals.release(state)
-        state = cut
-        iter += 1
       }
       KatzResult(
         state.select(col("vid"), col("walks"), col("acc").as("katz_scaled")),

@@ -54,38 +54,11 @@ object LabelProp {
       else EdgeBuilder.symmetrize(input)
     val mode = if (cfg.weighted) Csr.WeightMode.Raw else Csr.WeightMode.One
     Superstep.onGraph(base, mode) { g =>
-    val resumed = store.flatMap(_.latest(spark))
-    var iter = resumed.map(_._1.iteration).getOrElse(0)
-    // lineage truncated every superstep — see PageRank for the rationale.
-    // The init projection (vid, vid AS label) goes AFTER the checkpoint:
-    // a double-alias projection turns the output partitioning into a
-    // PartitioningCollection(hash(label), hash(vid)) of which
-    // localCheckpoint keeps only the FIRST element — hash(label) — which
-    // would sneak two exchanges into superstep 1 (pinned by
-    // PlanShapeSpec).
-    var state = resumed match {
-      case Some((_, df)) =>
-        Superstep.cut(df.repartition(g.p, col("vid")), g.entries)
-      case None =>
-        Superstep.cut(Superstep.verticesFromAdj(g.adj), g.entries)
-          .select(col("vid"), col("vid").as("label"))
-    }
-    while (iter < cfg.iterations) {
-      val t0 = System.nanoTime()
-      val next = Superstep.cut(superstep(g.adj, state, g.p), g.entries)
-      Internals.release(state)
-      state = next
-      iter += 1
-      val secs = (System.nanoTime() - t0) / 1e9
-      val done = iter >= cfg.iterations
-      if (iter % cfg.checkpointEvery == 0 || done) store.foreach { s =>
-        s.write(
-          iter,
-          state,
-          Map("seconds" -> secs, "numPartitions" -> g.p.toDouble),
-        )
-      }
-    }
+    val (init, from, _) = Superstep.start(g, store, "label")
+    val (state, _) = Superstep.iterate(
+      g, init, g.entries, cfg.iterations, from = from,
+      store = store, checkpointEvery = cfg.checkpointEvery,
+    )((state, _) => superstep(g.adj, state, g.p))
     state.select(col("vid"), col("label")).as[LabelState]
     } // onGraph
   }

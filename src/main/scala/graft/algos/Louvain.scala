@@ -91,24 +91,18 @@ object Louvain {
       )
       val twoM = lit(2L * m).cast("decimal(38,0)")
 
-      var state = Superstep.cut(Superstep.verticesFromAdj(g.adj), adjCount)
+      val init = Superstep.cut(Superstep.verticesFromAdj(g.adj), adjCount)
         .select(col("vid"), col("vid").as("comm"))
       // Σtot has one row per community — bounded by the vertex count, so
       // the broadcast decision is a free, deterministic count gate (same
       // policy as KTruss/Dedup): tiny graphs ship the dimension map-side,
       // 10^10-vertex graphs shuffle it
-      val nVerts = state.count()
+      val nVerts = init.count()
       val bcastTot = nVerts <= (4L << 20)
-      var r = 1
-      while (r <= rounds) {
-        val moved = moveRound(g.adj, state, degDf, twoM, g.p, r, bcastTot,
-          candRows = 2L * m + nVerts)
-        val next = Superstep.cut(moved, adjCount)
-        // the round's state and Σtot checkpoints
-        Internals.release(moved, g.adj, degDf)
-        state = next
-        r += 1
-      }
+      val (state, _) = Superstep.iterate(
+        g, init, adjCount, rounds, keep = Seq(degDf),
+      )((state, round) => moveRound(g.adj, state, degDf, twoM, g.p,
+        round + 1, bcastTot, candRows = 2L * m + nVerts))
       Internals.release(degDf)
       state
     }

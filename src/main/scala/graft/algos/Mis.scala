@@ -4,7 +4,6 @@ import graft._
 import graft.functions.Hash64
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftinternal.Internals
 
 final case class MisResult(mis: DataFrame, rounds: Int)
 
@@ -64,17 +63,19 @@ object Mis {
         .as[Edge]
     Superstep.onGraph(sym, Csr.WeightMode.One) { g =>
     // status: 0 = active, 1 = in MIS, 2 = dominated (a neighbor won)
-    var state: DataFrame = Superstep.cut(
+    val init = Superstep.cut(
       Superstep.verticesFromAdj(g.adj).withColumn("status", lit(0)),
       g.entries,
     )
-    var remaining = state.count()
-    var iter = 0
-    while (remaining > 0 && iter < maxRounds) {
-      iter += 1
+    var remaining = init.count()
+    val (state, iter) = Superstep.iterate(
+      g, init, g.entries, if (remaining > 0) maxRounds else 0,
+      stats = Seq(count_if(col("status") === 0)),
+      stop = { r => remaining = r.getLong(0); remaining == 0 },
+    ) { (state, round) =>
       val pri = state.where(col("status") === 0).select(
         col("vid"),
-        hash.pair(lit(iter), col("vid")).bitwiseAND(lit(Mask60)).as("h"),
+        hash.pair(lit(round + 1), col("vid")).bitwiseAND(lit(Mask60)).as("h"),
       )
       // min active-neighbor (priority, vid) per destination: only active
       // vertices scatter, so arrivals are exactly the active neighbors
@@ -99,7 +100,7 @@ object Mis {
       // winner notification: neighbors of winners become dominated
       val hit = Superstep.scatter(g.adj, winners)
         .select(col("vid")).distinct()
-      val next = state
+      state
         .join(winners.withColumn("won", lit(1)), Seq("vid"), "left_outer")
         .join(hit.withColumn("dom", lit(1)), Seq("vid"), "left_outer")
         .select(
@@ -109,15 +110,6 @@ object Mis {
             .when(col("dom").isNotNull, lit(2))
             .otherwise(lit(0)).as("status"),
         )
-      val (cut, r) = Superstep.cutAndAgg(
-        next,
-        g.entries,
-        Seq(sum(when(col("status") === 0, 1L).otherwise(0L))),
-      )
-      Internals.release(state)
-      Internals.release(winners)
-      state = cut
-      remaining = if (r.isNullAt(0)) 0L else r.getLong(0)
     }
     MisResult(state.where(col("status") === 1).select(col("vid")), iter)
     } // onGraph

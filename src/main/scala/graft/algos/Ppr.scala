@@ -3,7 +3,6 @@ package graft.algos
 import graft._
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftinternal.Internals
 
 final case class PprResult(
     ranks: Dataset[RankState],
@@ -92,7 +91,7 @@ object Ppr {
     val d = cfg.damping
 
     // state: (vid, dangling, reset, rank); rank0 = reset
-    var state: DataFrame = verts
+    val state0 = verts
       .join(outs, Seq("vid"), "left_outer")
       .join(srcSet.withColumn("isSrc", lit(true)), Seq("vid"), "left_outer")
       .select(
@@ -102,17 +101,24 @@ object Ppr {
         when(col("isSrc"), lit(1.0 / nSrc)).otherwise(lit(0.0)).as("rank"),
       )
     // lineage cut + the initial dangling-mass aggregate in ONE job
-    val (stCut, stRow) = Superstep.cutAndAgg(
-      state, nVerts,
+    val (init, stRow) = Superstep.cutAndAgg(
+      state0, nVerts,
       Seq(coalesce(sum(when(col("dangling"), col("rank"))
         .otherwise(0.0)), lit(0.0))))
-    state = stCut
     var dm = stRow.getDouble(0)
 
-    var iter = 0
-    var delta = Double.MaxValue
     val t0 = System.nanoTime()
-    while (iter < cfg.maxIter && delta > cfg.tol) {
+    val (state, iter) = Superstep.iterate(
+      g, init, nVerts, cfg.maxIter,
+      stats = Seq(
+        max("delta"),
+        sum(when(col("dangling"), col("rank")).otherwise(0.0)),
+      ),
+      stop = { r =>
+        dm = if (r.isNullAt(1)) 0.0 else r.getDouble(1)
+        !(r.getDouble(0) > cfg.tol)
+      },
+    ) { (state, _) =>
       // scatter emits one (vid, w, …state) row per out-edge inside
       // whole-stage codegen; only rank is needed downstream, so prune
       // dangling/reset before the explode to keep the shuffle rows thin
@@ -122,7 +128,7 @@ object Ppr {
         .groupBy("vid").agg(sum("m").as("msg"))
       val newRank = lit(1.0 - d) * col("reset") +
         lit(d) * (coalesce(col("msg"), lit(0.0)) + lit(dm) * col("reset"))
-      val next = state.join(msgs, Seq("vid"), "left_outer")
+      state.join(msgs, Seq("vid"), "left_outer")
         .select(
           col("vid"),
           col("dangling"),
@@ -130,19 +136,6 @@ object Ppr {
           newRank.as("rank"),
           abs(newRank - col("rank")).as("delta"),
         )
-      val (cut, r) = Superstep.cutAndAgg(
-        next,
-        nVerts,
-        Seq(
-          max("delta"),
-          sum(when(col("dangling"), col("rank")).otherwise(0.0)),
-        ),
-      )
-      delta = r.getDouble(0)
-      dm = if (r.isNullAt(1)) 0.0 else r.getDouble(1)
-      Internals.release(state)
-      state = cut.drop("delta")
-      iter += 1
     }
     val wall = (System.nanoTime() - t0) / 1e9
     val ranks = state

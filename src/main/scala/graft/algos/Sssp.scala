@@ -3,7 +3,6 @@ package graft.algos
 import graft._
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftinternal.Internals
 
 final case class SsspResult(dists: DataFrame, iterations: Int)
 
@@ -52,32 +51,36 @@ object Sssp {
     // vertex universe from the packed blocks: exchange-free, ~|V| rows
     // instead of a 2|E| union+distinct (see Superstep.verticesFromAdj)
     val verts = Superstep.verticesFromAdj(g.adj)
+    val nVerts = verts.count()
     // (vid, dist, improved) — dist null until reached; seeds start at 0
     // and form the first frontier
-    var state: DataFrame = verts
-      .join(
-        seeds.select(col("vid")).distinct().withColumn("isSeed", lit(true)),
-        Seq("vid"),
-        "left_outer",
-      )
-      .select(
-        col("vid"),
-        when(col("isSeed"), lit(0.0)).otherwise(lit(null).cast("double"))
-          .as("dist"),
-        coalesce(col("isSeed"), lit(false)).as("improved"),
-      )
-    val nVerts = verts.count()
-    state = Superstep.cut(state, nVerts)
-    var frontier = state.where(col("improved")).count()
-    var iter = 0
-    while (frontier > 0 && iter < maxIter) {
-      iter += 1
+    val init = Superstep.cut(
+      verts
+        .join(
+          seeds.select(col("vid")).distinct().withColumn("isSeed", lit(true)),
+          Seq("vid"),
+          "left_outer",
+        )
+        .select(
+          col("vid"),
+          when(col("isSeed"), lit(0.0)).otherwise(lit(null).cast("double"))
+            .as("dist"),
+          coalesce(col("isSeed"), lit(false)).as("improved"),
+        ),
+      nVerts,
+    )
+    val frontier = init.where(col("improved")).count()
+    val (state, iter) = Superstep.iterate(
+      g, init, nVerts, if (frontier > 0) maxIter else 0,
+      stats = Seq(count_if(col("improved"))),
+      stop = _.getLong(0) == 0,
+    ) { (state, _) =>
       // improved vertices scatter dist+w; one shuffle takes the min
       // candidate per touched vertex (map-side partial min combine)
       val cand = Superstep
         .scatter(g.adj, state.where(col("improved")).select(col("vid"), col("dist")))
         .groupBy("vid").agg(min(col("dist") + col("w")).as("cand"))
-      val next = state.join(cand, Seq("vid"), "left_outer")
+      state.join(cand, Seq("vid"), "left_outer")
         .select(
           col("vid"),
           when(
@@ -88,14 +91,6 @@ object Sssp {
             col("cand") < coalesce(col("dist"), lit(Double.MaxValue)))
             .as("improved"),
         )
-      val (cut, r) = Superstep.cutAndAgg(
-        next,
-        nVerts,
-        Seq(sum(when(col("improved"), 1L).otherwise(0L))),
-      )
-      Internals.release(state)
-      state = cut
-      frontier = if (r.isNullAt(0)) 0L else r.getLong(0)
     }
     val dists = state.where(col("dist").isNotNull).select(col("vid"), col("dist"))
     SsspResult(dists, iter)

@@ -1,7 +1,7 @@
 package graft.algos
 
 import graft._
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftinternal.Internals
 import org.apache.spark.storage.StorageLevel
@@ -150,22 +150,7 @@ object Wcc {
     // overhead here for ANY input, not just canonical ones.
     val sym = EdgeBuilder.symmetrizeDistinct(leaf)
     Superstep.onGraph(sym, Csr.WeightMode.One) { g =>
-    val resumed = store.flatMap(_.latest(spark))
-    var iter = resumed.map(_._1.iteration).getOrElse(0)
-    val startIter = iter
-    // lineage truncated every superstep — see PageRank for the rationale.
-    // The (vid, vid AS comp) projection goes AFTER the checkpoint: of the
-    // alias-induced PartitioningCollection, localCheckpoint keeps only the
-    // first element (hash(comp)) — see LabelProp.
-    var state: DataFrame = resumed match {
-      case Some((_, df)) =>
-        Superstep.cut(df.repartition(g.p, col("vid")), g.entries)
-      case None =>
-        Superstep.cut(Superstep.verticesFromAdj(g.adj), g.entries)
-          .select(col("vid"), col("vid").as("comp"))
-    }
-    var changed = 1L // loop control; sentinel 1 to enter
-    var img = Long.MaxValue // comp-image size upper bound (prev round)
+    val (init, from, resumed) = Superstep.start(g, store, "comp")
     // ADAPTIVE jump activation: pointer jumping costs ~2 extra small jobs
     // and (when not broadcast) two extra shuffles per round — pure
     // overhead on low-diameter graphs where plain min-label already
@@ -177,25 +162,44 @@ object Wcc {
     // trips (changed stagnant) and jumping takes over with its own
     // O(log n) doubling; once tripped it stays on (sticky).
     // chHist = (changed at round i, at round i-1), -1 = not yet measured.
-    // The trigger state rides in the snapshot metrics so a RESUMED run
+    // The loop control rides in the snapshot metrics so a RESUMED run
     // replays the exact trajectory the straight run would have taken
-    // (CheckpointSpec pins resumed == straight - prefix).
-    var chHist = (-1L, -1L)
-    var jumpOn = false
-    resumed.foreach { case (snap, _) =>
-      changed = snap.metrics.getOrElse("changed", 1.0).toLong
-      chHist = (
-        snap.metrics.getOrElse("changed", -1.0).toLong,
-        snap.metrics.getOrElse("prevChanged", -1.0).toLong,
-      )
-      jumpOn = snap.metrics.getOrElse("jumpOn", 0.0) > 0
-      // restore the broadcast-decision bound too (plan parity with the
-      // straight run; infinity → Long.MaxValue → no broadcast, safe)
-      img = (snap.metrics.getOrElse("compImageApprox", Double.MaxValue) * 2)
-        .toLong
-    }
-    while (iter < maxIter && changed > 0) {
-      val t0 = System.nanoTime()
+    // (CheckpointSpec pins resumed == straight - prefix); a fresh start
+    // reads the defaults: changed sentinel 1 to enter, no history, jump
+    // off, and no comp-image bound (Long.MaxValue: no broadcast).
+    var changed = resumed.getOrElse("changed", 1.0).toLong
+    var chHist = (
+      resumed.getOrElse("changed", -1.0).toLong,
+      resumed.getOrElse("prevChanged", -1.0).toLong,
+    )
+    var jumpOn = resumed.getOrElse("jumpOn", 0.0) > 0
+    // comp-image size upper bound (prev round)
+    var img = (resumed.getOrElse("compImageApprox", Double.MaxValue) * 2)
+      .toLong
+    val (state, iter) = Superstep.iterate(
+      g, init, g.entries, if (changed > 0) maxIter else 0, from = from,
+      // lineage cut + round stats in ONE job (round-3 verdict: the
+      // separate post-cut aggregate was a second small job per round —
+      // pure fixed overhead over the whole convergence trajectory)
+      stats =
+        Seq(count_if(col("changed")), approx_count_distinct(col("comp"))),
+      stop = { r =>
+        changed = r.getLong(0)
+        chHist = (changed, chHist._1)
+        // approx (~2% rsd) is plenty for a broadcast-threshold decision;
+        // 2x slack below keeps the decision safe against the estimate error
+        img = (r.getLong(1) * 2) min Long.MaxValue
+        changed == 0
+      },
+      store = store,
+      checkpointEvery = checkpointEvery,
+      metrics = r => Map(
+        "changed" -> changed.toDouble,
+        "prevChanged" -> chHist._2.toDouble,
+        "jumpOn" -> (if (jumpOn) 1.0 else 0.0),
+        "compImageApprox" -> r.getLong(1).toDouble,
+      ),
+    ) { (state, _) =>
       if (pointerJump && !jumpOn && chHist._1 >= 0 && chHist._2 >= 0 &&
         chHist._1 * 2 > chHist._2) jumpOn = true
       val msgs = Superstep.scatter(g.adj, state)
@@ -226,49 +230,14 @@ object Wcc {
             col("oldComp"),
           )
       }
-      // lineage cut + round stats in ONE job (round-3 verdict: the
-      // separate post-cut aggregate was a second small job per round —
-      // pure fixed overhead over the whole convergence trajectory)
-      val (mat, stats) = Superstep.cutAndAgg(
-        next.select(
-          col("vid"),
-          col("comp"),
-          (col("comp") < col("oldComp")).as("changed"),
-        ),
-        g.entries,
-        Seq(
-          coalesce(sum(when(col("changed"), 1L).otherwise(0L)), lit(0L)),
-          approx_count_distinct(col("comp")),
-        ),
+      next.select(
+        col("vid"),
+        col("comp"),
+        (col("comp") < col("oldComp")).as("changed"),
       )
-      changed = stats.getLong(0)
-      chHist = (changed, chHist._1)
-      // approx (~2% rsd) is plenty for a broadcast-threshold decision;
-      // 2x slack below keeps the decision safe against the estimate error
-      img = (stats.getLong(1) * 2) min Long.MaxValue
-      Internals.release(state)
-      if (jumpOn) Internals.release(next) // reads only the jump's cut h
-      state = mat.drop("changed")
-      iter += 1
-      val secs = (System.nanoTime() - t0) / 1e9
-      val converged = changed == 0 || iter >= maxIter
-      if (iter % checkpointEvery == 0 || converged) store.foreach { s =>
-        s.write(
-          iter,
-          state,
-          Map(
-            "changed" -> changed.toDouble,
-            "prevChanged" -> chHist._2.toDouble,
-            "jumpOn" -> (if (jumpOn) 1.0 else 0.0),
-            "compImageApprox" -> stats.getLong(1).toDouble,
-            "seconds" -> secs,
-            "numPartitions" -> g.p.toDouble,
-          ),
-        )
-      }
     }
     val out = state.select(col("vid"), col("comp")).as[CompState]
-    WccResult(out, iter - startIter)
+    WccResult(out, iter - from)
     } // onGraph
   }
 }

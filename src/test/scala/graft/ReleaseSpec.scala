@@ -1,6 +1,9 @@
 package graft
 
 import graft.algos._
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.grafttest.ListenerDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.storage.StorageLevel
@@ -10,7 +13,8 @@ import org.apache.spark.storage.StorageLevel
   * are the checkpoints its result frames read (the RDDs under their
   * `LogicalRDD` leaves) — no adjacency, no replaced round state, no
   * intermediate cut and no edge base. A caller's cached input keeps its
-  * storage level.
+  * storage level. On graph 1 each kernel also starts a pinned number of
+  * Spark jobs: a round that adds an action changes it.
   */
 class ReleaseSpec extends GraftSuite {
   import spark.implicits._
@@ -29,27 +33,29 @@ class ReleaseSpec extends GraftSuite {
   private def seeds(g: Seq[(Long, Long, Double)]): DataFrame =
     Seq(g.headOption.fold(0L)(_._1)).toDF("vid")
 
-  /** Each kernel with the result frames it returns. */
+  /** Each kernel with the Spark jobs its run starts on graph 1 (before
+    * its result is collected) and the result frames it returns.
+    */
   private def kernels(
       g: Seq[(Long, Long, Double)],
-  ): Seq[(String, Dataset[Edge] => Seq[Dataset[_]])] = Seq(
-    "bfs" -> (e => Seq(Bfs.run(e, seeds(g)).dists)),
-    "sssp" -> (e => Seq(Sssp.run(e, seeds(g)).dists)),
-    "kcore" -> (e => Seq(KCore.run(e, 3).core)),
-    "mis" -> (e => Seq(Mis.run(e).mis)),
-    "coloring" -> (e => Seq(Coloring.speculative(e, palette = 4).colors)),
-    "katz" -> (e => Seq(Katz.run(e, rounds = 3).scores)),
-    "louvain" -> (e => Seq(Louvain.run(e, rounds = 2))),
-    "eigen" -> (e => Seq(Eigen.run(e, EcConfig(iterations = 3)).scores)),
-    "labelprop" -> (e => Seq(LabelProp.run(e, LpConfig(iterations = 3)))),
-    "wcc" -> (e => Seq(Wcc.run(e).comps)),
-    "wcc loop" -> (e => Seq(Wcc.run(e, driverMaxPairs = 0).comps)),
-    "hyperball" -> { e =>
+  ): Seq[(String, Int, Dataset[Edge] => Seq[Dataset[_]])] = Seq(
+    ("bfs", 10, e => Seq(Bfs.run(e, seeds(g)).dists)),
+    ("sssp", 11, e => Seq(Sssp.run(e, seeds(g)).dists)),
+    ("kcore", 6, e => Seq(KCore.run(e, 3).core)),
+    ("mis", 8, e => Seq(Mis.run(e).mis)),
+    ("coloring", 11, e => Seq(Coloring.speculative(e, palette = 4).colors)),
+    ("katz", 7, e => Seq(Katz.run(e, rounds = 3).scores)),
+    ("louvain", 17, e => Seq(Louvain.run(e, rounds = 2))),
+    ("eigen", 7, e => Seq(Eigen.run(e, EcConfig(iterations = 3)).scores)),
+    ("labelprop", 6, e => Seq(LabelProp.run(e, LpConfig(iterations = 3)))),
+    ("wcc", 4, e => Seq(Wcc.run(e).comps)),
+    ("wcc loop", 14, e => Seq(Wcc.run(e, driverMaxPairs = 0).comps)),
+    ("hyperball", 6, { e =>
       val c = HyperBall.chain(e, rounds = 2)
       c.state +: c.perRound
-    },
-    "ppr" -> (e => Seq(Ppr.run(e, seeds(g), PrConfig(maxIter = 3)).ranks)),
-    "hits" -> (e => Seq(Hits.run(e, iterations = 3).scores)),
+    }),
+    ("ppr", 12, e => Seq(Ppr.run(e, seeds(g), PrConfig(maxIter = 3)).ranks)),
+    ("hits", 10, e => Seq(Hits.run(e, iterations = 3).scores)),
   )
 
   /** Ids of the RDDs under the `LogicalRDD` leaves of `df`'s plan. */
@@ -61,13 +67,37 @@ class ReleaseSpec extends GraftSuite {
   private def persistentIds: Set[Int] =
     spark.sparkContext.getPersistentRDDs.keySet.toSet
 
+  /** Spark jobs started by `body` on this thread, counted under a job
+    * group.
+    */
+  private def jobsOf(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val group = s"release-spec-${System.nanoTime()}"
+    val jobs = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties)
+            .flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+            .contains(group)) jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "")
+    try body
+    finally {
+      sc.clearJobGroup()
+      ListenerDrain(sc)
+      sc.removeSparkListener(listener)
+    }
+    jobs.get
+  }
+
   /** Runs every kernel on `g` (on a caller-persisted input if `cached`)
     * and checks what each leaves registered.
     */
   private def check(what: String, g: Seq[(Long, Long, Double)], cached: Boolean): Unit = {
     val input = edgeDs(g)
     if (cached) { input.persist(); input.count() }
-    kernels(g).foreach { case (name, run) =>
+    kernels(g).foreach { case (name, _, run) =>
       val before = persistentIds
       val frames = run(input)
       frames.foreach(_.collect())
@@ -93,5 +123,17 @@ class ReleaseSpec extends GraftSuite {
 
   test("every kernel handles the empty graph and leaves nothing behind") {
     check("the empty graph", Seq.empty, cached = false)
+  }
+
+  test("each kernel starts its pinned number of Spark jobs on graph 1") {
+    val g = graph(1)
+    val ks = kernels(g)
+    val got = ks.map { case (name, _, run) =>
+      var frames = Seq.empty[Dataset[_]]
+      val jobs = jobsOf { frames = run(edgeDs(g)) }
+      frames.foreach(_.collect())
+      name -> jobs
+    }
+    assert(got == ks.map { case (name, jobs, _) => name -> jobs })
   }
 }
