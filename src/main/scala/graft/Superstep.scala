@@ -163,11 +163,19 @@ object Superstep {
     * `maxRounds` or until `stop` holds.
     *
     * Round `r` builds `next = step(state, r)` and materializes it with ONE
-    * action: a [[cutAndAgg]] over `stats` whose row `stop` then reads, or,
-    * with no `stats`, an eager [[cut]] (and `stop` reads an empty row).
-    * Both store at the level `rows` picks ([[SerializedCutThreshold]]).
-    * The cut is projected back to `init`'s columns, so `next` may carry
-    * columns that only `stats` reads.
+    * action: a [[cutAndAgg]] over `stats`, or, with no `stats`, an eager
+    * [[cut]] (its stats row is then empty). Both store at the level
+    * `rows` picks ([[SerializedCutThreshold]]). The cut is projected back
+    * to `init`'s columns, so `next` may carry columns that only `stats`
+    * reads.
+    *
+    * Order within round `r`: `step(state, r)`, the action, then
+    * `stop(row, r)` exactly once, the release, and, on a snapshot round,
+    * `metrics(row)` and the write; round `r + 1`'s `step` runs after all
+    * of them. So `stop` is where a kernel reads the round's
+    * row: it may set kernel vars that `metrics` and the next `step` read
+    * (Eigen's normalizer, Ppr's dangling mass), and a kernel that only
+    * checks the row returns false.
     *
     * Release rule: once `next` has materialized, every checkpoint that the
     * replaced state or `next`'s plan reads is freed, except `g.adj` and
@@ -188,7 +196,7 @@ object Superstep {
       maxRounds: Int,
       from: Int = 0,
       stats: Seq[Column] = Nil,
-      stop: Row => Boolean = _ => false,
+      stop: (Row, Int) => Boolean = (_, _) => false,
       keep: Seq[Dataset[_]] = Nil,
       store: Option[SnapshotStore] = None,
       checkpointEvery: Int = 1,
@@ -205,7 +213,7 @@ object Superstep {
       val (cp, row) =
         if (stats.isEmpty) (cut(next, rows), Row.empty)
         else cutAndAgg(next, rows, stats)
-      done = stop(row)
+      done = stop(row, round)
       Internals.release(state, kept: _*)
       Internals.release(next, state +: kept: _*)
       state = cp.select(columns: _*)

@@ -65,7 +65,7 @@ object Bfs {
     val (state, iter) = Superstep.iterate(
       g, init, nVerts, if (frontier > 0) maxIter else 0,
       stats = Seq(count_if(col("reached"))),
-      stop = _.getLong(0) == 0,
+      stop = (r, _) => r.getLong(0) == 0,
     ) { (state, round) =>
       // only the frontier scatters: one (vid) row per out-edge of a
       // vertex settled LAST round, aggregated to the distinct touched set

@@ -77,7 +77,7 @@ object Coloring {
     val (state, iter) = Superstep.iterate(
       g, init, g.entries, maxRounds,
       stats = Seq(count_if(col("conf"))),
-      stop = { r => conflicts = r.getLong(0); conflicts == 0 },
+      stop = { (r, _) => conflicts = r.getLong(0); conflicts == 0 },
     ) { (state, _) =>
       // one scatter of (priority, color); per (receiver, color) the max
       // sender priority partial-aggregates map-side, then distinct

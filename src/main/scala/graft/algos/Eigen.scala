@@ -73,7 +73,7 @@ object Eigen {
     val (state, iter) = Superstep.iterate(
       g, init, nVerts, cfg.iterations,
       stats = Seq(sum("score")),
-      stop = { r => total = r.getDouble(0); false },
+      stop = { (r, _) => total = r.getDouble(0); false },
     ) { (state, _) =>
       // per-edge term (w·y)/T: dividing inside the scatter keeps the
       // oracle's arithmetic identical (see class doc)

@@ -74,7 +74,7 @@ object KCore {
       g, init, g.entries, maxIter,
       stats = Seq(count_if(col("active"))),
       // converged: no vertex deactivated this round, or none is left
-      stop = { r =>
+      stop = { (r, _) =>
         val last = active
         active = r.getLong(0)
         active == last || active == 0

@@ -82,10 +82,10 @@ object Katz {
         stats = Seq(max("acc")),
         // headroom guard per round (ANSI would already have thrown on a
         // wrapped sum; this catches "legal but about to run out")
-        stop = { r =>
+        stop = { (r, round) =>
           val maxAcc = r.getLong(0)
           require(maxAcc < (1L << 62),
-            s"katz_scaled overflow risk: max acc $maxAcc")
+            s"katz_scaled overflow risk: max acc $maxAcc at round $round")
           false
         },
       ) { (state, _) =>

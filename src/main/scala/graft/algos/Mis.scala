@@ -71,7 +71,7 @@ object Mis {
     val (state, iter) = Superstep.iterate(
       g, init, g.entries, if (remaining > 0) maxRounds else 0,
       stats = Seq(count_if(col("status") === 0)),
-      stop = { r => remaining = r.getLong(0); remaining == 0 },
+      stop = { (r, _) => remaining = r.getLong(0); remaining == 0 },
     ) { (state, round) =>
       val pri = state.where(col("status") === 0).select(
         col("vid"),

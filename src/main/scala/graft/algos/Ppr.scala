@@ -114,7 +114,7 @@ object Ppr {
         max("delta"),
         sum(when(col("dangling"), col("rank")).otherwise(0.0)),
       ),
-      stop = { r =>
+      stop = { (r, _) =>
         dm = if (r.isNullAt(1)) 0.0 else r.getDouble(1)
         !(r.getDouble(0) > cfg.tol)
       },

@@ -73,7 +73,7 @@ object Sssp {
     val (state, iter) = Superstep.iterate(
       g, init, nVerts, if (frontier > 0) maxIter else 0,
       stats = Seq(count_if(col("improved"))),
-      stop = _.getLong(0) == 0,
+      stop = (r, _) => r.getLong(0) == 0,
     ) { (state, _) =>
       // improved vertices scatter dist+w; one shuffle takes the min
       // candidate per touched vertex (map-side partial min combine)

@@ -183,7 +183,7 @@ object Wcc {
       // pure fixed overhead over the whole convergence trajectory)
       stats =
         Seq(count_if(col("changed")), approx_count_distinct(col("comp"))),
-      stop = { r =>
+      stop = { (r, _) =>
         changed = r.getLong(0)
         chHist = (changed, chHist._1)
         // approx (~2% rsd) is plenty for a broadcast-threshold decision;

@@ -466,8 +466,8 @@ object Similarity {
       simDecimals: Int = 6,
   ): DataFrame = {
     require(numBands >= 1 && bandBits >= 1, "numBands, bandBits >= 1")
-    // NOT materialized: a cast-only projection, scanned once for the SRP
-    // dots and once for the verify side's norms (`withNorm` below)
+    // NOT materialized: this is a cast-only projection — re-scanning the
+    // source for the verify joins is cheaper than pinning |C|·dim doubles
     val c = corpus.select(
       col(idCol).as("id"),
       asDouble(col(vecCol)).as("vec"),
@@ -545,10 +545,8 @@ object Similarity {
     //     stage's cost, so the operator states its own width (guide
     //     §2.5: partition by the work, not the bytes).
     val p = corpus.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
-    // materialized ONCE: both verify joins read it, and uncut each side
-    // re-scanned the corpus and re-ran the per-vector norm
-    val withNorm = graft.Superstep.cut(c.select(
-      col("id"), col("vec"), sqrt(dot(col("vec"), col("vec"))).as("nrm")))
+    val withNorm = c.select(
+      col("id"), col("vec"), sqrt(dot(col("vec"), col("vec"))).as("nrm"))
     cand
       .repartition(p)
       .join(
