@@ -46,8 +46,9 @@ object Bfs {
     // instead of a 2|E| union+distinct (see Superstep.verticesFromAdj)
     val verts = Superstep.verticesFromAdj(g.adj)
     val nVerts = verts.count()
-    // (vid, dist) — dist null until reached; seeds start at 0
-    val init = Superstep.cut(
+    // (vid, dist) — dist null until reached; seeds start at 0. The cut
+    // and the first frontier's count run as one job
+    val (init, initRow) = Superstep.cutAndAgg(
       verts
         .join(
           seeds.select(col("vid")).distinct().withColumn("isSeed", lit(true)),
@@ -60,8 +61,9 @@ object Bfs {
             .as("dist"),
         ),
       nVerts,
+      Seq(count_if(col("dist") === 0L)),
     )
-    val frontier = init.where(col("dist") === 0L).count()
+    val frontier = initRow.getLong(0)
     val (state, iter) = Superstep.iterate(
       g, init, nVerts, if (frontier > 0) maxIter else 0,
       stats = Seq(count_if(col("reached"))),

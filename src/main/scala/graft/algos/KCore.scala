@@ -64,12 +64,13 @@ object KCore {
     if (g.entries == 0)
       return KCoreResult(spark.emptyDataset[Long].toDF("vid"), 0)
 
-    // (vid, active); everyone starts active
-    val init = Superstep.cut(
+    // (vid, active); everyone starts active. Cut and count in one job
+    val (init, initRow) = Superstep.cutAndAgg(
       Superstep.verticesFromAdj(g.adj).withColumn("active", lit(true)),
       g.entries,
+      Seq(count(lit(1))),
     )
-    var active = init.count()
+    var active = initRow.getLong(0)
     val (state, iter) = Superstep.iterate(
       g, init, g.entries, maxIter,
       stats = Seq(count_if(col("active"))),

@@ -91,13 +91,14 @@ object Louvain {
       )
       val twoM = lit(2L * m).cast("decimal(38,0)")
 
-      val init = Superstep.cut(Superstep.verticesFromAdj(g.adj), adjCount)
-        .select(col("vid"), col("vid").as("comm"))
+      val (verts, vRow) = Superstep.cutAndAgg(
+        Superstep.verticesFromAdj(g.adj), adjCount, Seq(count(lit(1))))
+      val init = verts.select(col("vid"), col("vid").as("comm"))
       // Σtot has one row per community — bounded by the vertex count, so
       // the broadcast decision is a free, deterministic count gate (same
       // policy as KTruss/Dedup): tiny graphs ship the dimension map-side,
       // 10^10-vertex graphs shuffle it
-      val nVerts = init.count()
+      val nVerts = vRow.getLong(0)
       val bcastTot = nVerts <= (4L << 20)
       val (state, _) = Superstep.iterate(
         g, init, adjCount, rounds, keep = Seq(degDf),

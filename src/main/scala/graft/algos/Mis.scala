@@ -63,11 +63,12 @@ object Mis {
         .as[Edge]
     Superstep.onGraph(sym, Csr.WeightMode.One) { g =>
     // status: 0 = active, 1 = in MIS, 2 = dominated (a neighbor won)
-    val init = Superstep.cut(
+    val (init, initRow) = Superstep.cutAndAgg(
       Superstep.verticesFromAdj(g.adj).withColumn("status", lit(0)),
       g.entries,
+      Seq(count(lit(1))),
     )
-    var remaining = init.count()
+    var remaining = initRow.getLong(0)
     val (state, iter) = Superstep.iterate(
       g, init, g.entries, if (remaining > 0) maxRounds else 0,
       stats = Seq(count_if(col("status") === 0)),

@@ -53,8 +53,9 @@ object Sssp {
     val verts = Superstep.verticesFromAdj(g.adj)
     val nVerts = verts.count()
     // (vid, dist, improved) — dist null until reached; seeds start at 0
-    // and form the first frontier
-    val init = Superstep.cut(
+    // and form the first frontier. The cut and the frontier's count run
+    // as one job
+    val (init, initRow) = Superstep.cutAndAgg(
       verts
         .join(
           seeds.select(col("vid")).distinct().withColumn("isSeed", lit(true)),
@@ -68,8 +69,9 @@ object Sssp {
           coalesce(col("isSeed"), lit(false)).as("improved"),
         ),
       nVerts,
+      Seq(count_if(col("improved"))),
     )
-    val frontier = init.where(col("improved")).count()
+    val frontier = initRow.getLong(0)
     val (state, iter) = Superstep.iterate(
       g, init, nVerts, if (frontier > 0) maxIter else 0,
       stats = Seq(count_if(col("improved"))),

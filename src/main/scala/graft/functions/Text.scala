@@ -8,8 +8,25 @@ import org.apache.spark.sql.functions._
   * Everything here is pure built-in Catalyst expressions (no UDFs) so the
   * hot path stays inside codegen and the same computation is expressible
   * as ANSI SQL for the DuckDB oracle. All outputs are deterministic.
+  *
+  * A `Column` val is an expression tree, not a value: every place it
+  * appears is evaluated on its own. Inside a higher-order function's
+  * lambda (`transform`, `filter`, `aggregate`, ...) that means once per
+  * ELEMENT, and these lambdas are interpreted (CodegenFallback), so
+  * nothing shares the work. Bind such a value with [[let]] first and use
+  * the bound variable inside the lambda.
   */
 object Text {
+
+  /** Evaluate `e` once per row and hand it to `f` as a lambda variable:
+    * `element_at(transform(array(e), f), 1)`. Every use of the variable
+    * inside `f` (nested lambdas included) reads the one value, where a
+    * `Column` val used in a lambda body is evaluated again for every
+    * element. Null `e` reaches `f` as a null variable, so `f`'s null
+    * semantics are unchanged. No Catalyst rule folds this shape away.
+    */
+  private[graft] def let(e: Column)(f: Column => Column): Column =
+    element_at(transform(array(e), f), 1)
 
   /** Whitespace tokenization (mirrors
     * `string_split_regex(trim(s), '\s+')`). The trim matters for the
@@ -38,9 +55,13 @@ object Text {
     size(regexp_extract_all(text, lit(BpeishPattern), lit(0)))
 
   /** Count of tokens belonging to a stopword list. */
-  def stopwordCount(text: Column, stopwords: Seq[String]): Column = {
+  def stopwordCount(text: Column, stopwords: Seq[String]): Column =
+    stopwordHits(tokens(lower(text)), stopwords)
+
+  /** [[stopwordCount]] over an already tokenized (lowercased) array. */
+  private def stopwordHits(toks: Column, stopwords: Seq[String]): Column = {
     val set = stopwords.map(lit(_))
-    size(filter(tokens(lower(text)), t => array_contains(array(set: _*), t)))
+    size(filter(toks, t => array_contains(array(set: _*), t)))
   }
 
   /** Tiny per-language stopword lists for the heuristic language guesser.
@@ -55,11 +76,11 @@ object Text {
   /** Argmax language guess with fixed priority tie-break
     * (en > de > fr > es > unknown) — deterministic by construction.
     */
-  def langGuess(text: Column): Column = {
-    val en = stopwordCount(text, StopEn)
-    val de = stopwordCount(text, StopDe)
-    val fr = stopwordCount(text, StopFr)
-    val es = stopwordCount(text, StopEs)
+  def langGuess(text: Column): Column = let(tokens(lower(text))) { toks =>
+    val en = stopwordHits(toks, StopEn)
+    val de = stopwordHits(toks, StopDe)
+    val fr = stopwordHits(toks, StopFr)
+    val es = stopwordHits(toks, StopEs)
     when(en + de + fr + es === 0, lit("unknown"))
       .when(en >= de && en >= fr && en >= es, lit("en"))
       .when(de >= fr && de >= es, lit("de"))
@@ -81,17 +102,21 @@ object Text {
       256,
     )
 
-  /** Word n-gram shingles: ["a b c", "b c d", ...]. */
-  def shingles(text: Column, n: Int): Column = {
-    val toks = tokens(lower(text))
-    when(size(toks) < n, array(concat_ws(" ", toks)))
-      .otherwise(
-        transform(
-          sequence(lit(0), size(toks) - n),
-          i => concat_ws(" ", slice(toks, i + 1, lit(n))),
+  /** Word n-gram shingles: ["a b c", "b c d", ...]; a doc of fewer than
+    * n tokens yields its whole (lowercased, re-joined) text as one
+    * shingle. The tokens are bound once ([[let]]): the window lambda
+    * reads them for every window.
+    */
+  def shingles(text: Column, n: Int): Column =
+    let(tokens(lower(text))) { toks =>
+      when(size(toks) < n, array(concat_ws(" ", toks)))
+        .otherwise(
+          transform(
+            sequence(lit(0), size(toks) - n),
+            i => concat_ws(" ", slice(toks, i + 1, lit(n))),
+          )
         )
-      )
-  }
+    }
 
   /** MinHash signature: for each of `numHashes` seeded hash functions,
     * the minimum xxhash64 over the shingle set. Distinct seeds come from
@@ -150,22 +175,23 @@ object Text {
     * ±1 votes (bit b of each token's xxhash64) is positive.
     */
   def simhash64(text: Column, hash: Hash64 = Hash64.Xx): Column = {
-    val toks = tokens(lower(text))
     val powers = lit((0 until 64).map(i => 1L << i).toArray)
-    val bits = transform(
-      sequence(lit(0), lit(63)),
-      b =>
-        when(
-          aggregate(
-            toks,
-            lit(0L),
-            (acc, t) =>
-              acc + when(bitAt(hash.one(t), b) === 1L, lit(1L))
-                .otherwise(lit(-1L)),
-          ) > 0,
-          lit(1L),
-        ).otherwise(lit(0L)),
-    )
+    val bits = let(tokens(lower(text))) { toks =>
+      transform(
+        sequence(lit(0), lit(63)),
+        b =>
+          when(
+            aggregate(
+              toks,
+              lit(0L),
+              (acc, t) =>
+                acc + when(bitAt(hash.one(t), b) === 1L, lit(1L))
+                  .otherwise(lit(-1L)),
+            ) > 0,
+            lit(1L),
+          ).otherwise(lit(0L)),
+      )
+    }
     aggregate(
       zip_with(bits, powers, (bit, p) => bit * p),
       lit(0L),

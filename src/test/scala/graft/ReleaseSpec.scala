@@ -39,13 +39,13 @@ class ReleaseSpec extends GraftSuite {
   private def kernels(
       g: Seq[(Long, Long, Double)],
   ): Seq[(String, Int, Dataset[Edge] => Seq[Dataset[_]])] = Seq(
-    ("bfs", 10, e => Seq(Bfs.run(e, seeds(g)).dists)),
-    ("sssp", 11, e => Seq(Sssp.run(e, seeds(g)).dists)),
-    ("kcore", 6, e => Seq(KCore.run(e, 3).core)),
-    ("mis", 8, e => Seq(Mis.run(e).mis)),
+    ("bfs", 9, e => Seq(Bfs.run(e, seeds(g)).dists)),
+    ("sssp", 10, e => Seq(Sssp.run(e, seeds(g)).dists)),
+    ("kcore", 5, e => Seq(KCore.run(e, 3).core)),
+    ("mis", 7, e => Seq(Mis.run(e).mis)),
     ("coloring", 11, e => Seq(Coloring.speculative(e, palette = 4).colors)),
     ("katz", 7, e => Seq(Katz.run(e, rounds = 3).scores)),
-    ("louvain", 17, e => Seq(Louvain.run(e, rounds = 2))),
+    ("louvain", 16, e => Seq(Louvain.run(e, rounds = 2))),
     ("eigen", 7, e => Seq(Eigen.run(e, EcConfig(iterations = 3)).scores)),
     ("labelprop", 6, e => Seq(LabelProp.run(e, LpConfig(iterations = 3)))),
     ("wcc", 4, e => Seq(Wcc.run(e).comps)),
