@@ -45,7 +45,6 @@ object Bfs {
     // vertex universe from the packed blocks: exchange-free, ~|V| rows
     // instead of a 2|E| union+distinct (see Superstep.verticesFromAdj)
     val verts = Superstep.verticesFromAdj(g.adj)
-    val nVerts = verts.count()
     // (vid, dist) — dist null until reached; seeds start at 0. The cut
     // and the first frontier's count run as one job
     val (init, initRow) = Superstep.cutAndAgg(
@@ -60,12 +59,12 @@ object Bfs {
           when(col("isSeed"), lit(0L)).otherwise(lit(null).cast("long"))
             .as("dist"),
         ),
-      nVerts,
+      g.entries,
       Seq(count_if(col("dist") === 0L)),
     )
     val frontier = initRow.getLong(0)
     val (state, iter) = Superstep.iterate(
-      g, init, nVerts, if (frontier > 0) maxIter else 0,
+      g, init, g.entries, if (frontier > 0) maxIter else 0,
       stats = Seq(count_if(col("reached"))),
       stop = (r, _) => r.getLong(0) == 0,
     ) { (state, round) =>

@@ -52,10 +52,10 @@ final case class HitsResult(
   * authority half-step along the forward adjacency; both CSRs are built
   * once and persisted columnar.
   *
-  * Like [[Eigen]] and [[Ppr]], this is its own lean loop over the shared
-  * Csr/Superstep layers rather than a mode threaded through the
-  * scaling-certified [[PageRank.run]] (BENCH/BASELINE.md gate rule 4
-  * pins that file).
+  * Like [[Eigen]] and [[Ppr]], its first k-1 rounds run through
+  * [[Superstep.iterate]] (the reversed CSR is its `keep`) rather than a
+  * mode threaded through the scaling-certified [[PageRank.run]]
+  * (BENCH/BASELINE.md gate rule 4 pins that file).
   */
 object Hits {
 
@@ -63,6 +63,7 @@ object Hits {
       edges: Dataset[Edge],
       iterations: Int = 8,
   ): HitsResult = {
+    require(iterations >= 1, s"Hits: iterations must be >= 1, got $iterations")
     val spark = edges.sparkSession
     import spark.implicits._
 
@@ -87,11 +88,7 @@ object Hits {
       val verts = Superstep.vertices(g.base)
       val nVerts = verts.count()
 
-      var auth: DataFrame =
-        Superstep.cut(verts.withColumn("score", lit(1.0)), nVerts)
-      var hub: DataFrame = auth // placeholder until the final round
-      var hTot = 0.0
-      var aTot = 0.0
+      val init = Superstep.cut(verts.withColumn("score", lit(1.0)), nVerts)
 
       // unnormalized half-step: scores gather straight sums (w = 1.0).
       // `universe` supplies the full vertex list for the left-outer
@@ -109,29 +106,21 @@ object Hits {
           .select(col("vid"), coalesce(col("msg"), lit(0.0)).as("score"))
       }
 
-      var iter = 0
       val t0 = System.nanoTime()
-      while (iter < iterations) {
-        iter += 1
-        val u = auth // round-start checkpoint = the vertex universe
-        if (iter < iterations) {
-          // both half-steps fused into ONE lineage-cut job: the hub
-          // state is an intermediate subplan referenced exactly once
-          auth = Superstep.cut(gather(fwd, gather(rev, auth, u), u), nVerts)
-        } else {
-          // final round: the hub frame feeds the output, so it gets its
-          // own cut; both output normalizers ride the two cuts for free
-          val (hCut, hRow) = Superstep.cutAndAgg(
-            gather(rev, auth, u), nVerts, Seq(sum("score")))
-          hub = hCut
-          hTot = hRow.getDouble(0)
-          val (aCut, aRow) = Superstep.cutAndAgg(
-            gather(fwd, hub, hub), nVerts, Seq(sum("score")))
-          auth = aCut
-          aTot = aRow.getDouble(0)
-        }
-        Internals.release(u)
-      }
+      // rounds 1..k-1: both half-steps fused into ONE lineage-cut job;
+      // the hub state is an intermediate subplan referenced exactly once
+      val (u, _) = Superstep.iterate(
+        g, init, nVerts, iterations - 1, keep = Seq(rev),
+      ) { (s, _) => gather(fwd, gather(rev, s, s), s) }
+      // final round: the hub frame feeds the output, so it gets its own
+      // cut; both output normalizers ride the two cuts for free
+      val (hub, hRow) = Superstep.cutAndAgg(
+        gather(rev, u, u), nVerts, Seq(sum("score")))
+      val (auth, aRow) = Superstep.cutAndAgg(
+        gather(fwd, hub, hub), nVerts, Seq(sum("score")))
+      Internals.release(u)
+      val hTot = hRow.getDouble(0)
+      val aTot = aRow.getDouble(0)
       val wall = (System.nanoTime() - t0) / 1e9
 
       val out = hub.select(col("vid"), (col("score") / lit(hTot)).as("hub"))
@@ -139,7 +128,7 @@ object Hits {
           auth.select(col("vid"), (col("score") / lit(aTot)).as("auth")),
           Seq("vid"))
       Internals.release(rev)
-      HitsResult(out, iter, g.entries, wall)
+      HitsResult(out, iterations, g.entries, wall)
     }
   }
 }

@@ -3,6 +3,7 @@ package graft.algos
 import graft._
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftinternal.Internals
 import org.apache.spark.storage.StorageLevel
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration.Duration
@@ -46,11 +47,12 @@ final case class CondensationResult(
   *      SCCs — assigned scc = vid and removed. This is what collapses
   *      chain/tendril remainders that pure peeling would need O(length)
   *      peels for.
-  *   2. FORWARD pass: fwd(v) = min id that REACHES v — min-label
-  *      propagation along edge direction to fixpoint (the [[Wcc]] loop
-  *      shape on the directed CSR: one exchange-free `adj ⋈ state` join +
-  *      ONE message shuffle per round, lineage cut + convergence count
-  *      fused via [[Superstep.cutAndAgg]]).
+  *   2. FORWARD pass: fwd(v) = min id that REACHES v — [[Wcc]]'s
+  *      min-label propagation with its adaptive pointer jump, run on the
+  *      directed CSR through [[Superstep.iterate]] to fixpoint: one
+  *      exchange-free `adj ⋈ state` join + ONE message shuffle per round,
+  *      lineage cut + convergence count in one job, and each round's old
+  *      state and jump cut freed when the round ends.
   *   3. BACKWARD pass: bwd(v) = min id v REACHES — the same loop on the
   *      reversed CSR. Forward and backward are data-independent, so the
   *      two fixpoints run CONCURRENTLY from two driver threads (guide
@@ -61,6 +63,15 @@ final case class CondensationResult(
   *      v ∈ SCC(m). Within one SCC both labels are constant (members
   *      share reach sets), so decided vertices form WHOLE SCCs; they are
   *      assigned and their edges dropped.
+  *
+  * The pointer jump is VALID on the directed problem: every label stays
+  * an ANCESTOR of its vertex (initially lab(v) = v; an edge round adopts
+  * an in-neighbor's label, i.e. an ancestor's ancestor; a jump adopts
+  * lab(lab(v)), likewise an ancestor's ancestor), labels only decrease,
+  * and at any no-change fixpoint lab is edge-monotone (lab(dst) ≤
+  * lab(src) across every edge). So lab(v) ≤ lab over any path from
+  * fwdMin(v), while the ancestor invariant gives lab(v) ≥ fwdMin(v): the
+  * fixpoint is fwdMin with or without jumping.
   *
   * Progress: after trim the active minimum m has fwd(m) = bwd(m) = m
   * (labels are ≥ m everywhere and m is in both of its own reach sets), so
@@ -114,13 +125,15 @@ object Scc {
         .unionByName(raw.select(col("dst").as("vid"))).distinct())
     var active: DataFrame = null
     var activeEdges = 0L
-    locally {
-      val (aCut, r) = Superstep.cutAndAgg(
-        raw.where(col("src") =!= col("dst")).distinct(),
-        0L, Seq(count(lit(1))))
+    // the active edge set shrinks by whole cuts; each replaced one is
+    // freed once its successor has materialized
+    def shrink(df: DataFrame): Unit = {
+      val (aCut, r) = Superstep.cutAndAgg(df, 0L, Seq(count(lit(1))))
+      if (active != null) Internals.release(active)
       active = aCut
       activeEdges = r.getLong(0)
     }
+    shrink(raw.where(col("src") =!= col("dst")).distinct())
     // trimmed/decided frames accumulate in driver-side buffers of already
     // CHECKPOINTED frames (flat lineage) — unioned once at the end
     // instead of paying a cut job per trim sweep
@@ -133,89 +146,6 @@ object Scc {
     // loop only ever shrinks the active set, so the initial |E| bounds
     // every round's shuffle volume (see Tuning's Scaladoc)
     val pEff = Tuning.adaptivePartitions(spark, activeEdges)
-
-    /** min-label propagation to fixpoint over one directed adjacency:
-      * lab(v) ← min(lab(v), min over in-neighbors u of lab(u)), with
-      * [[Wcc]]'s ADAPTIVE pointer jump (lab'(v) = lab(lab(v))) once plain
-      * rounds stop halving `changed` — O(log n) rounds on long chains
-      * instead of O(diameter).
-      *
-      * The jump is VALID on the directed problem: the loop maintains the
-      * invariant that every label is an ANCESTOR of its vertex (initially
-      * lab(v) = v; an edge round adopts an in-neighbor's label, i.e. an
-      * ancestor's ancestor; a jump adopts lab(lab(v)) — likewise an
-      * ancestor's ancestor), labels only decrease, and at any no-change
-      * fixpoint lab is edge-monotone (lab(dst) ≤ lab(src) across every
-      * edge), so lab(v) ≤ lab over any path from fwdMin(v) while the
-      * ancestor invariant gives lab(v) ≥ fwdMin(v) — the fixpoint is
-      * fwdMin with or without jumping. The jump lookup is restricted to
-      * the current label image and broadcast when small, exactly as in
-      * [[Wcc]]. Returns (state, rounds) — rounds are accumulated by the
-      * caller AFTER the concurrent passes join (no shared mutation).
-      */
-    def minLabel(adj: Dataset[AdjBlock], verts: DataFrame, nVerts: Long)
-        : (DataFrame, Int) = {
-      // verts is already lineage-cut by the caller; the (vid, vid AS lab)
-      // projection goes AFTER that cut so hash(vid) partitioning survives
-      // into round 1's joins (see Wcc/LabelProp for the
-      // PartitioningCollection rationale)
-      var state: DataFrame = verts.select(col("vid"), col("vid").as("lab"))
-      var changed = 1L
-      var rounds = 0
-      var chHist = (-1L, -1L)
-      var jumpOn = false
-      var img = Long.MaxValue
-      while (changed > 0 && rounds < maxProp) {
-        if (!jumpOn && chHist._1 >= 0 && chHist._2 >= 0 &&
-          chHist._1 * 2 > chHist._2) jumpOn = true
-        val msgs = Superstep.scatter(adj, state)
-          .groupBy("vid").agg(min("lab").as("ml"))
-        val half = state.join(msgs, Seq("vid"), "left_outer")
-          .select(
-            col("vid"),
-            least(col("lab"), coalesce(col("ml"), col("lab"))).as("lab"),
-            col("lab").as("oldLab"),
-          )
-        val next = if (!jumpOn) half
-        else {
-          // half feeds the jump twice (probe + lookup): materialize once
-          val h = Superstep.cut(half, nVerts)
-          val imgDf = h.select(col("lab")).distinct()
-            .withColumnRenamed("lab", "vid")
-          val lookup = h.select(col("vid"), col("lab"))
-            .join(imgDf, Seq("vid"), "left_semi")
-            .where(col("lab") =!= col("vid"))
-            .select(col("vid").as("cv"), col("lab").as("cc"))
-          val looked =
-            if (img <= broadcastJumpMax) broadcast(lookup) else lookup
-          h.join(looked, h("lab") === col("cv"), "left_outer")
-            .select(
-              h("vid"),
-              coalesce(col("cc"), h("lab")).as("lab"),
-              col("oldLab"),
-            )
-        }
-        val (cut, r) = Superstep.cutAndAgg(
-          next.select(
-            col("vid"), col("lab"),
-            (col("lab") < col("oldLab")).as("chg")),
-          nVerts,
-          Seq(
-            coalesce(sum(when(col("chg"), 1L).otherwise(0L)), lit(0L)),
-            approx_count_distinct(col("lab")),
-          ))
-        state = cut.drop("chg")
-        changed = r.getLong(0)
-        chHist = (changed, chHist._1)
-        // 2x slack over the ~2% rsd estimate, same as Wcc
-        img = (r.getLong(1) * 2) min Long.MaxValue
-        rounds += 1
-      }
-      require(
-        changed == 0,
-        s"Scc: min-label propagation did not converge in $maxProp rounds")
-      (state, rounds)
-    }
 
     Tuning.withShufflePartitions(spark, pEff) {
       while (activeEdges > 0 && peels < maxPeels) {
@@ -240,14 +170,10 @@ object Scc {
             trimRounds += 1
             assignedBuf +=
               tCut.select(col("vid"), col("vid").as("scc"))
-            val (aCut, ar) = Superstep.cutAndAgg(
-              active
-                .join(tCut, active("src") === tCut("vid"), "left_anti")
-                .join(tCut, active("dst") === tCut("vid"), "left_anti"),
-              0L, Seq(count(lit(1))))
-            active = aCut
-            activeEdges = ar.getLong(0)
-          }
+            shrink(active
+              .join(tCut, active("src") === tCut("vid"), "left_anti")
+              .join(tCut, active("dst") === tCut("vid"), "left_anti"))
+          } else Internals.release(tCut) // the empty last sweep
         }
         if (activeEdges > 0) {
           // --- 2+3. forward/backward min-label to fixpoint on the active
@@ -272,13 +198,26 @@ object Scc {
 
           // the two fixpoints are independent — run them from two driver
           // threads so their jobs interleave (deterministic results: see
-          // Scaladoc step 3)
+          // Scaladoc step 3). Both start from `verts`, so neither pass may
+          // free it (`keep`); it is released once both have joined. The
+          // (vid, vid AS comp) projection goes AFTER the cut, so hash(vid)
+          // partitioning survives into round 1 (see Superstep.start)
+          def pass(adj: Dataset[AdjBlock]): (DataFrame, Int) = {
+            val (state, rounds, converged) = Wcc.propagate(
+              Superstep.Graph(activeDs, activeEdges, pEff, adj),
+              verts.select(col("vid"), col("vid").as("comp")), nVerts,
+              maxProp, pointerJump = true, broadcastJumpMax,
+              keep = Seq(verts))
+            require(converged,
+              s"Scc: min-label propagation did not converge in $maxProp rounds")
+            (state, rounds)
+          }
           val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
           val ec = ExecutionContext.fromExecutorService(pool)
           val (f, b) =
             try {
-              val fF = Future(minLabel(fwd, verts, nVerts))(ec)
-              val fB = Future(minLabel(rev, verts, nVerts))(ec)
+              val fF = Future(pass(fwd))(ec)
+              val fB = Future(pass(rev))(ec)
               (Await.result(fF, Duration.Inf), Await.result(fB, Duration.Inf))
             } finally {
               ec.shutdown()
@@ -287,20 +226,17 @@ object Scc {
 
           // --- 4. decide fwd == bwd (whole SCCs, see Scaladoc)
           val (decided, dr) = Superstep.cutAndAgg(
-            f._1.join(b._1.withColumnRenamed("lab", "blab"), Seq("vid"))
-              .where(col("lab") === col("blab"))
-              .select(col("vid"), col("lab").as("scc")),
+            f._1.join(b._1.withColumnRenamed("comp", "bcomp"), Seq("vid"))
+              .where(col("comp") === col("bcomp"))
+              .select(col("vid"), col("comp").as("scc")),
             0L, Seq(count(lit(1))))
+          Seq(f._1, b._1, verts).foreach(Internals.release(_))
           val nDecided = dr.getLong(0)
           require(nDecided > 0, "Scc: peel decided nothing — invariant broken")
           assignedBuf += decided
-          val (aCut, ar) = Superstep.cutAndAgg(
-            active
-              .join(decided, active("src") === decided("vid"), "left_anti")
-              .join(decided, active("dst") === decided("vid"), "left_anti"),
-            0L, Seq(count(lit(1))))
-          active = aCut
-          activeEdges = ar.getLong(0)
+          shrink(active
+            .join(decided, active("src") === decided("vid"), "left_anti")
+            .join(decided, active("dst") === decided("vid"), "left_anti"))
           fwd.unpersist(false)
           rev.unpersist(false)
         }
@@ -315,10 +251,10 @@ object Scc {
         else assignedBuf.reduce(_ unionByName _)
       val orphans = allVerts.join(assigned, Seq("vid"), "left_anti")
         .select(col("vid"), col("vid").as("scc"))
-      SccResult(
-        Superstep.cut(assigned.unionByName(orphans)),
-        peels, trimRounds, propRounds,
-        edgesCut = raw)
+      val comps = Superstep.cut(assigned.unionByName(orphans))
+      // the result reads `comps` and `raw` only
+      (active +: allVerts +: assignedBuf.toSeq).foreach(Internals.release(_))
+      SccResult(comps, peels, trimRounds, propRounds, edgesCut = raw)
     }
   }
 

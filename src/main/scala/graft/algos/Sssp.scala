@@ -51,7 +51,6 @@ object Sssp {
     // vertex universe from the packed blocks: exchange-free, ~|V| rows
     // instead of a 2|E| union+distinct (see Superstep.verticesFromAdj)
     val verts = Superstep.verticesFromAdj(g.adj)
-    val nVerts = verts.count()
     // (vid, dist, improved) — dist null until reached; seeds start at 0
     // and form the first frontier. The cut and the frontier's count run
     // as one job
@@ -68,12 +67,12 @@ object Sssp {
             .as("dist"),
           coalesce(col("isSeed"), lit(false)).as("improved"),
         ),
-      nVerts,
+      g.entries,
       Seq(count_if(col("improved"))),
     )
     val frontier = initRow.getLong(0)
     val (state, iter) = Superstep.iterate(
-      g, init, nVerts, if (frontier > 0) maxIter else 0,
+      g, init, g.entries, if (frontier > 0) maxIter else 0,
       stats = Seq(count_if(col("improved"))),
       stop = (r, _) => r.getLong(0) == 0,
     ) { (state, _) =>

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.functions.Hash64
+import graft.functions.{Hash64, Text}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -159,40 +159,45 @@ object Similarity {
       numProbes: Int,
       hash: Hash64 = Hash64.Xx,
   ): Column = {
-    val dots = srpDots(vec, bandBits, hash)
-    // sign decision rounded to 6 decimals — must match [[srpBits]] (and
-    // the oracle SQL) exactly, or the exact-bucket probe would diverge
-    // from the corpus-side bucketing near a zero projection
-    val bucket = aggregate(
-      zip_with(
-        dots,
-        lit((0 until bandBits).map(i => 1L << i).toArray),
-        (d, p) => when(round(d, 6) > 0, p).otherwise(lit(0L)),
-      ),
-      lit(0L),
-      (acc, x) => acc + x,
-    )
-    // rank bit indices by |dot| ascending (deterministic: struct compare
-    // falls back to the index for equal magnitudes), keep the numProbes
-    // nearest-margin bits, flip each one individually. The margin is
-    // ROUNDED to 6 decimals before ranking — same convention as the sim
-    // scores: raw float64 projections differ across engines in the last
-    // ulp (reduction order), which near a margin tie would flip the
-    // probe choice and break the cross-engine oracle compare.
-    val ranked = array_sort(
-      zip_with(
-        dots,
-        sequence(lit(0), lit(bandBits - 1)),
-        (d, i) => struct(round(abs(d), 6).as("m"), i.as("i")),
+    // `dots` and `bucket` are bound once per row ([[Text.let]]): a plain
+    // `Column` val read in the flip lambda is evaluated again per probe
+    Text.let(srpDots(vec, bandBits, hash)) { dots =>
+      // sign decision rounded to 6 decimals — must match [[srpBits]] (and
+      // the oracle SQL) exactly, or the exact-bucket probe would diverge
+      // from the corpus-side bucketing near a zero projection
+      val exact = aggregate(
+        zip_with(
+          dots,
+          lit((0 until bandBits).map(i => 1L << i).toArray),
+          (d, p) => when(round(d, 6) > 0, p).otherwise(lit(0L)),
+        ),
+        lit(0L),
+        (acc, x) => acc + x,
       )
-    )
-    val flips = transform(
-      slice(ranked, 1, numProbes),
-      s =>
-        bucket.bitwiseXOR(
-          call_function("shiftleft", lit(1L), s.getField("i"))),
-    )
-    concat(array(bucket), flips)
+      Text.let(exact) { bucket =>
+        // rank bit indices by |dot| ascending (deterministic: struct
+        // compare falls back to the index for equal magnitudes), keep the
+        // numProbes nearest-margin bits, flip each one individually. The
+        // margin is ROUNDED to 6 decimals before ranking — same convention
+        // as the sim scores: raw float64 projections differ across engines
+        // in the last ulp (reduction order), which near a margin tie would
+        // flip the probe choice and break the cross-engine oracle compare.
+        val ranked = array_sort(
+          zip_with(
+            dots,
+            sequence(lit(0), lit(bandBits - 1)),
+            (d, i) => struct(round(abs(d), 6).as("m"), i.as("i")),
+          )
+        )
+        val flips = transform(
+          slice(ranked, 1, numProbes),
+          s =>
+            bucket.bitwiseXOR(
+              call_function("shiftleft", lit(1L), s.getField("i"))),
+        )
+        concat(array(bucket), flips)
+      }
+    }
   }
 
   /** LSH-bucketed ANN: candidates = corpus vectors in the query's SRP

@@ -2,6 +2,7 @@ package graft
 
 import graft.functions.{Hash64, Text}
 import graft.operators.{Dedup, FakeDecoder, Multimodal, Similarity}
+import org.apache.spark.sql.catalyst.expressions.ArrayAggregate
 import org.apache.spark.sql.functions._
 
 /** Training-data pipeline operators: dedup families, ANN, text analysis,
@@ -323,6 +324,16 @@ class PipelineOpsSpec extends GraftSuite {
         assert(java.lang.Long.bitCount(b ^ p) == 1, s"probe $p vs $b")
       }
     }
+    // each query's projections are computed once: the analyzed plan holds
+    // one ArrayAggregate subtree per bound value (`dots`, `bucket`), not
+    // one per use
+    val aggNodes = df
+      .select(Similarity.srpProbeBuckets(
+        col("embedding").cast("array<double>"), 4, 2))
+      .queryExecution.analyzed
+      .flatMap(_.expressions.flatMap(_.collect { case a: ArrayAggregate => a }))
+      .size
+    assert(aggNodes == 2)
   }
 
   test("IVF ANN: recall >= 0.8 vs brute force on clustered vectors") {

@@ -8,7 +8,8 @@ import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.storage.StorageLevel
 
-/** Every single-CSR kernel releases what it caches on return: after the
+/** Every loop kernel (the single-CSR kernels and Scc) releases what it
+  * caches on return: after the
   * kernel runs and its result is collected, the only new persistent RDDs
   * are the checkpoints its result frames read (the RDDs under their
   * `LogicalRDD` leaves) — no adjacency, no replaced round state, no
@@ -39,8 +40,8 @@ class ReleaseSpec extends GraftSuite {
   private def kernels(
       g: Seq[(Long, Long, Double)],
   ): Seq[(String, Int, Dataset[Edge] => Seq[Dataset[_]])] = Seq(
-    ("bfs", 9, e => Seq(Bfs.run(e, seeds(g)).dists)),
-    ("sssp", 10, e => Seq(Sssp.run(e, seeds(g)).dists)),
+    ("bfs", 8, e => Seq(Bfs.run(e, seeds(g)).dists)),
+    ("sssp", 9, e => Seq(Sssp.run(e, seeds(g)).dists)),
     ("kcore", 5, e => Seq(KCore.run(e, 3).core)),
     ("mis", 7, e => Seq(Mis.run(e).mis)),
     ("coloring", 11, e => Seq(Coloring.speculative(e, palette = 4).colors)),
@@ -56,6 +57,7 @@ class ReleaseSpec extends GraftSuite {
     }),
     ("ppr", 12, e => Seq(Ppr.run(e, seeds(g), PrConfig(maxIter = 3)).ranks)),
     ("hits", 10, e => Seq(Hits.run(e, iterations = 3).scores)),
+    ("scc", 52, { e => val r = Scc.run(e); Seq(r.comps, r.edgesCut) }),
   )
 
   /** Ids of the RDDs under the `LogicalRDD` leaves of `df`'s plan. */

@@ -122,6 +122,26 @@ class SccSpec extends GraftSuite {
     }
   }
 
+  test("scc propagation trajectory: peels, trim sweeps and rounds") {
+    // ReleaseSpec's graph 1 (PropertySpec's seeded random graph, seed 1)
+    val r = new scala.util.Random(1)
+    val n = 30 + r.nextInt(40)
+    val g1 = (1 to 150)
+      .map(_ => (r.nextInt(n).toLong, r.nextInt(n).toLong))
+      .filter { case (a, b) => a != b }
+      .distinct
+      .map { case (a, b) => (a, b, 1.0 + r.nextInt(3).toDouble) }
+    val r1 = run(g1)
+    assert(r1.comps.as[(Long, Long)].collect().toMap == Oracles.scc(g1))
+    assert((r1.peels, r1.trimRounds, r1.propRounds) == ((1, 3, 10)))
+    // a directed 64-cycle: nothing trims, and plain propagation would
+    // need ~64 rounds per direction, so the pointer jump must engage
+    val cycle = (0L until 64L).map(i => (i, (i + 1) % 64, 1.0))
+    val rc = run(cycle)
+    assert(rc.comps.as[(Long, Long)].collect().toMap == Oracles.scc(cycle))
+    assert((rc.peels, rc.trimRounds, rc.propRounds) == ((1, 0, 72)))
+  }
+
   test("scc on a symmetrized graph equals WCC components") {
     val rnd = new scala.util.Random(31L)
     val und = (0 until 50).flatMap { _ =>
