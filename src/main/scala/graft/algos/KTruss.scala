@@ -3,6 +3,7 @@ package graft.algos
 import graft._
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftinternal.Internals
 import org.apache.spark.storage.StorageLevel
 
 /** One peeling round's audit row: how many edges dropped, how many
@@ -93,11 +94,15 @@ object KTruss {
     val p = pEff
     // seed: one full support pass over the whole graph
     var cur: DataFrame = withSupports(base, p)
+    Internals.release(base)
     var m = cur.count()
     var iter = 0
     var converged = m == 0
     val trace = Seq.newBuilder[KTrussRound]
     while (!converged && iter < maxIter) {
+      // the round's cuts and the replaced `cur` are freed once the new
+      // `cur` is cut; the result reads only the last `cur`
+      val prev = cur
       val dropped = cur.where(col("sup") < minSup).select(col("a"), col("b"))
       val alive = cur.where(col("sup") >= minSup)
       val dCut = Superstep.cut(dropped)
@@ -179,8 +184,11 @@ object KTruss {
               (col("sup") - coalesce(col("dc"), lit(0L))).as("sup"),
             )
         )
+        Internals.release(cand)
         trace += KTrussRound(d, m - d, "incremental")
       }
+      Internals.release(dCut)
+      if (cur ne prev) Internals.release(prev)
       // both paths keep exactly the alive rows, so the new edge count is
       // m − d by construction — no extra count action per round
       val m2 = if (converged) m else m - d

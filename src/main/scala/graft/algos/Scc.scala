@@ -271,63 +271,62 @@ object Scc {
     *
     * 100 TB shape: the condensation is |SCCs| nodes — typically orders
     * of magnitude smaller than the graph (the giant SCC collapses to one
-    * node) — and each relaxation round is one equi-join + one map-side-
-    * combined max aggregation over the contracted edge set, lineage-cut
-    * per round. The contracted edge set is derived from the edge cut
-    * [[run]] already materialized (round-6: the old form re-ran the
-    * caller's whole edge pipeline a second time), and the relaxation
-    * runs at contraction-sized parallelism.
+    * node). The contracted edge set is derived from the edge cut [[run]]
+    * already materialized (round-6: the old form re-ran the caller's
+    * whole edge pipeline a second time) and packed by
+    * [[Superstep.onGraph]] at contraction-sized parallelism; each
+    * relaxation round, run by [[Superstep.iterate]], is one exchange-free
+    * `adj ⋈ state` scatter + one map-side-combined max aggregation, with
+    * the change count folded into the round's lineage cut.
     */
   def condense(
       edges: Dataset[Edge],
       maxRounds: Int = 64,
-  ): CondensationResult = Superstep.withAqeOff(edges.sparkSession) {
+  ): CondensationResult = {
     val spark = edges.sparkSession
+    import spark.implicits._
     val sccRes = run(edges)
     val comps = sccRes.comps // already lineage-cut by run()
     val e = sccRes.edgesCut.where(col("src") =!= col("dst"))
       .select(col("src"), col("dst")).distinct()
     val srcMap = comps.select(col("vid").as("src"), col("scc").as("csrc"))
     val dstMap = comps.select(col("vid").as("dst"), col("scc").as("cdst"))
-    val (cd, cdr) = Superstep.cutAndAgg(
-      e.join(srcMap, Seq("src")).join(dstMap, Seq("dst"))
-        .where(col("csrc") =!= col("cdst"))
-        .select(col("csrc").as("src"), col("cdst").as("dst")).distinct(),
-      0L, Seq(count(lit(1))))
-    val pEff = Tuning.adaptivePartitions(spark, cdr.getLong(0))
-    Tuning.withShufflePartitions(spark, pEff) {
+    val cd = e.join(srcMap, Seq("src")).join(dstMap, Seq("dst"))
+      .where(col("csrc") =!= col("cdst"))
+      .select(col("csrc").as("src"), col("cdst").as("dst"), lit(1.0).as("weight"))
+      .distinct().as[Edge]
+    Superstep.onGraph(cd, Csr.WeightMode.One) { g =>
       val sizes = Superstep.cut(
         comps.groupBy(col("scc"))
           .agg(count(lit(1)).cast("long").as("size")))
-      // lvl starts as a projection of the checkpointed sizes frame — no
-      // separate cut needed (flat lineage, partitioning preserved)
-      var lvl: DataFrame = sizes.select(col("scc"), lit(0L).as("level"))
+      // the state starts as a projection of the sizes cut, which the
+      // result reads too: `keep` stops round 1 from freeing it
       var changed = 1L
-      var rounds = 0
-      while (changed > 0 && rounds < maxRounds) {
-        val msgs = cd.join(lvl, cd("src") === lvl("scc"))
-          .select(col("dst").as("scc"), (col("level") + 1L).as("nl"))
-          .groupBy("scc").agg(max("nl").as("ml"))
-        val next = lvl.join(msgs, Seq("scc"), "left_outer")
+      val (lvl, rounds) = Superstep.iterate(
+        g, sizes.select(col("scc").as("vid"), lit(0L).as("level")), 0L,
+        maxRounds,
+        stats = Seq(coalesce(sum(when(col("chg"), 1L).otherwise(0L)), lit(0L))),
+        stop = (r, _) => { changed = r.getLong(0); changed == 0 },
+        keep = Seq(sizes),
+      ) { (state, _) =>
+        val msgs = Superstep.scatter(g.adj, state)
+          .groupBy("vid").agg(max(col("level") + 1L).as("ml"))
+        state.join(msgs, Seq("vid"), "left_outer")
           .select(
-            col("scc"),
+            col("vid"),
             greatest(col("level"), coalesce(col("ml"), col("level")))
               .as("level"),
             (coalesce(col("ml"), col("level")) > col("level")).as("chg"),
           )
-        val (cut, r) = Superstep.cutAndAgg(
-          next, 0L,
-          Seq(coalesce(sum(when(col("chg"), 1L).otherwise(0L)), lit(0L))))
-        lvl = cut.drop("chg")
-        changed = r.getLong(0)
-        rounds += 1
       }
       require(
         changed == 0,
         s"Scc.condense: levels did not converge in $maxRounds rounds — " +
           "contracted graph not acyclic (invariant broken) or deeper than " +
           "maxRounds")
-      CondensationResult(lvl.join(sizes, Seq("scc")), rounds, sccRes)
+      CondensationResult(
+        lvl.withColumnRenamed("vid", "scc").join(sizes, Seq("scc")),
+        rounds, sccRes)
     }
   }
 }

@@ -3,7 +3,7 @@ package graft.algos
 import graft._
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
+import org.apache.spark.sql.graftinternal.Internals
 
 final case class StressResult(
     scores: DataFrame,
@@ -36,12 +36,16 @@ final case class StressResult(
   * pivot sampling): at 10^12 edges the cost is K truncated BFS balls,
   * not |V| full sweeps.
   *
-  * Execution shape: per round ONE frontier scatter (join on the edge
-  * table, hash-partitioned by src) + ONE (seed, vid)-keyed fold; state
-  * is the reached pair set, lineage-cut every round. Work per round is
-  * proportional to the frontier's out-edges — per-seed balls on the
-  * hub-capped weight≥2 subgraph stay small, and pairs partition by
-  * (seed, vid) hash so no single seed's ball serializes.
+  * Execution shape: both sweeps run on [[Superstep.onGraph]]'s packed
+  * adjacency of the symmetrized simple graph (hash-partitioned by src)
+  * through [[Superstep.iterate]]: per round ONE frontier scatter + ONE
+  * (seed, vid)-keyed fold, one action, and the replaced state freed. The
+  * backward sweep scatters over the same adjacency: on a symmetrized
+  * graph, scattering from v reaches exactly the v' with v' ~ v. State is
+  * the reached pair set. Work per round is proportional to the
+  * frontier's out-edges — per-seed balls on the hub-capped weight≥2
+  * subgraph stay small, and pairs partition by (seed, vid) hash so no
+  * single seed's ball serializes.
   */
 object Stress {
 
@@ -51,82 +55,62 @@ object Stress {
       seeds: DataFrame,
       rounds: Int = 4,
       distinctCanonical: Boolean = false,
-  ): StressResult = Superstep.withAqeOff(edges.sparkSession) {
-    val spark = edges.sparkSession
+  ): StressResult = {
     // distinctCanonical callers take the shuffle-free symmetrize
     val simple = edges.filter(col("src") =!= col("dst"))
     val sym =
-      (if (distinctCanonical) EdgeBuilder.symmetrizeDistinct(simple)
-       else EdgeBuilder.symmetrize(simple))
-        .select(col("src"), col("dst"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    val symCnt = sym.count()
-    val pEff = Tuning.adaptivePartitions(spark, symCnt)
-    Tuning.withShufflePartitions(spark, pEff) {
+      if (distinctCanonical) EdgeBuilder.symmetrizeDistinct(simple)
+      else EdgeBuilder.symmetrize(simple)
+    Superstep.onGraph(sym, Csr.WeightMode.One) { g =>
+      // forward: (seed, vid, dist, sigma); seeds start the frontier
+      val init = Superstep.cut(
+        seeds.select(col("vid")).distinct()
+          .select(
+            col("vid").as("seed"),
+            col("vid"),
+            lit(0).as("dist"),
+            lit(1L).as("sigma"),
+          ))
+      val (reached, _) = Superstep.iterate(g, init, 0L, rounds) { (state, t) =>
+        val frontier = state.where(col("dist") === t)
+          .select(col("seed"), col("vid"), col("sigma"))
+        // σ finalizes on first touch: only pairs not yet reached join in
+        val fresh = Superstep.scatter(g.adj, frontier)
+          .groupBy("seed", "vid").agg(sum("sigma").as("sigma"))
+          .join(state.select(col("seed"), col("vid")), Seq("seed", "vid"),
+            "left_anti")
+          .select(col("seed"), col("vid"), lit(t + 1).as("dist"), col("sigma"))
+        state.unionByName(fresh)
+      }
 
-    // forward: (seed, vid, dist, sigma); seeds start the frontier
-    var state: DataFrame = Superstep.cut(
-      seeds.select(col("vid")).distinct()
-        .select(
-          col("vid").as("seed"),
-          col("vid"),
-          lit(0).as("dist"),
-          lit(1L).as("sigma"),
-        ))
-    var t = 0
-    while (t < rounds) {
-      val frontier = state.where(col("dist") === t)
-        .select(col("seed"), col("vid"), col("sigma"))
-      val msgs = frontier
-        .join(sym, frontier("vid") === sym("src"))
-        .select(col("seed"), col("dst").as("vid"), col("sigma"))
-        .groupBy("seed", "vid").agg(sum("sigma").as("nsigma"))
-      t += 1
-      // σ finalizes on first touch: only pairs not yet reached join in
-      val fresh = msgs.join(
-        state.select(col("seed"), col("vid"), lit(true).as("seen")),
-        Seq("seed", "vid"),
-        "left_outer",
-      ).where(col("seen").isNull)
-        .select(
-          col("seed"), col("vid"),
-          lit(t).as("dist"), col("nsigma").as("sigma"),
-        )
-      state = Superstep.cut(state.unionByName(fresh))
+      // backward: γ = 0 at the truncation horizon, then per level down:
+      // γ(v) = Σ over downhill edges (1 + γ(w)); carried as a column
+      // updated level-by-level (null until the pair's level is swept).
+      // No round adds a pair, so the init's count is the result's
+      val (down0, n) = Superstep.cutAndAgg(
+        reached.withColumn(
+          "gamma",
+          when(col("dist") === rounds, lit(0L)).otherwise(lit(null).cast("long"))),
+        0L, Seq(count(lit(1))))
+      Internals.release(reached)
+      val (swept, _) = Superstep.iterate(g, down0, 0L, rounds) { (state, r) =>
+        val bt = rounds - 1 - r
+        val down = state.where(col("dist") === bt + 1)
+          .select(col("seed"), col("vid"), col("gamma"))
+        val gm = Superstep.scatter(g.adj, down)
+          .groupBy("seed", "vid").agg(sum(col("gamma") + 1L).as("gsum"))
+        state.join(gm, Seq("seed", "vid"), "left_outer")
+          .select(
+            col("seed"), col("vid"), col("dist"), col("sigma"),
+            when(col("dist") === bt, coalesce(col("gsum"), lit(0L)))
+              .otherwise(col("gamma")).as("gamma"),
+          )
+      }
+
+      val scores = swept.where(col("vid") =!= col("seed"))
+        .groupBy("vid")
+        .agg(sum(col("sigma") * col("gamma")).as("stress"))
+      StressResult(scores, n.getLong(0), rounds)
     }
-
-    // backward: γ = 0 at the truncation horizon, then per level down:
-    // γ(v) = Σ over downhill edges (1 + γ(w)); carried as a column
-    // updated level-by-level (null until the pair's level is swept)
-    var g: DataFrame = Superstep.cut(
-      state.withColumn(
-        "gamma",
-        when(col("dist") === rounds, lit(0L)).otherwise(lit(null).cast("long")),
-      ))
-    var bt = rounds - 1
-    while (bt >= 0) {
-      val down = g.where(col("dist") === bt + 1)
-        .select(col("seed"), col("vid"), col("gamma"))
-      val gm = down
-        .join(sym, down("vid") === sym("dst"))
-        .select(col("seed"), col("src").as("vid"), (col("gamma") + 1L).as("gt"))
-        .groupBy("seed", "vid").agg(sum("gt").as("gsum"))
-      val next = g.join(gm, Seq("seed", "vid"), "left_outer")
-        .select(
-          col("seed"), col("vid"), col("dist"), col("sigma"),
-          when(col("dist") === bt, coalesce(col("gsum"), lit(0L)))
-            .otherwise(col("gamma")).as("gamma"),
-        )
-      g = Superstep.cut(next)
-      bt -= 1
-    }
-
-    val scores = g.where(col("vid") =!= col("seed"))
-      .groupBy("vid")
-      .agg(sum(col("sigma") * col("gamma")).as("stress"))
-    val pairs = g.count()
-    sym.unpersist(false)
-    StressResult(scores, pairs, rounds)
-    } // withShufflePartitions
   }
 }

@@ -691,10 +691,18 @@ class GraphExtrasSpec extends GraftSuite {
       val verts = adj.keySet
       val seedSet = verts.filter(_ % 4 == 0)
       val T = 4
-      val got = graft.algos.Stress
-        .run(edgeDs(g), seedSet.toSeq.toDF("vid"), rounds = T)
-        .scores.collect()
-        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+      def stress(e: Seq[(Long, Long, Double)], canonical: Boolean) =
+        graft.algos.Stress
+          .run(edgeDs(e), seedSet.toSeq.toDF("vid"), rounds = T,
+            distinctCanonical = canonical)
+          .scores.collect()
+          .map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val got = stress(g, canonical = false)
+      // the same graph as distinct canonical (min, max) pairs, the input
+      // form the distinctCanonical path assumes
+      val gotCanonical = stress(
+        g.map { case (a, b, _) => (a min b, a max b, 1.0) }.distinct,
+        canonical = true)
       val acc = scala.collection.mutable.Map[Long, Long]().withDefaultValue(0L)
       val present = scala.collection.mutable.Set[Long]()
       for (s <- seedSet) {
@@ -727,6 +735,7 @@ class GraphExtrasSpec extends GraftSuite {
       }
       val want = present.toSeq.map(v => v -> acc(v)).toMap
       assert(got == want, s"rngSeed $rngSeed")
+      assert(gotCanonical == want, s"rngSeed $rngSeed, distinctCanonical")
     }
   }
 

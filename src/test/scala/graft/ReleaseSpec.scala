@@ -1,21 +1,25 @@
 package graft
 
 import graft.algos._
+import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.grafttest.ListenerDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.scheduler.{SparkListener, SparkListenerBlockUpdated, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.execution.LogicalRDD
-import org.apache.spark.storage.StorageLevel
+import org.apache.spark.storage.{RDDBlockId, StorageLevel}
 
-/** Every loop kernel (the single-CSR kernels and Scc) releases what it
-  * caches on return: after the
+/** Every loop kernel (the single-CSR kernels, Stress, KTruss, Scc and its
+  * condensation) releases what it caches on return: after the
   * kernel runs and its result is collected, the only new persistent RDDs
   * are the checkpoints its result frames read (the RDDs under their
   * `LogicalRDD` leaves) — no adjacency, no replaced round state, no
-  * intermediate cut and no edge base. A caller's cached input keeps its
-  * storage level. On graph 1 each kernel also starts a pinned number of
-  * Spark jobs: a round that adds an action changes it.
+  * intermediate cut and no edge base. The count is exact: every RDD that
+  * stores a block during the call is held strongly until the check, so a
+  * leaked checkpoint cannot vanish with a GC first. A caller's cached
+  * input keeps its storage level. On graph 1 each kernel also starts a
+  * pinned number of Spark jobs: a round that adds an action changes it.
   */
 class ReleaseSpec extends GraftSuite {
   import spark.implicits._
@@ -58,6 +62,14 @@ class ReleaseSpec extends GraftSuite {
     ("ppr", 12, e => Seq(Ppr.run(e, seeds(g), PrConfig(maxIter = 3)).ranks)),
     ("hits", 10, e => Seq(Hits.run(e, iterations = 3).scores)),
     ("scc", 52, { e => val r = Scc.run(e); Seq(r.comps, r.edgesCut) }),
+    ("condense", 61, { e =>
+      val r = Scc.condense(e)
+      Seq(r.levels, r.scc.comps, r.scc.edgesCut)
+    }),
+    ("stress", 14, e => Seq(Stress.run(e, seeds(g)).scores)),
+    ("ktruss incr", 22, e => Seq(KTruss.run(e, 3, fullRecountFactor = 1L).edges)),
+    ("ktruss full", 26,
+      e => Seq(KTruss.run(e, 3, fullRecountFactor = Long.MaxValue).edges)),
   )
 
   /** Ids of the RDDs under the `LogicalRDD` leaves of `df`'s plan. */
@@ -68,6 +80,36 @@ class ReleaseSpec extends GraftSuite {
 
   private def persistentIds: Set[Int] =
     spark.sparkContext.getPersistentRDDs.keySet.toSet
+
+  /** Runs `body` and returns the ids of the RDDs that became persistent
+    * while it ran and still are. `getPersistentRDDs` holds its values
+    * weakly, and the ContextCleaner unpersists an RDD once the JVM has
+    * collected it, so a bare before/after diff misses a leaked checkpoint
+    * that a GC reached first. Hence every RDD that stores a block during
+    * `body` is held strongly until the count; the holds are dropped after.
+    */
+  private def persistedBy(body: => Unit): Set[Int] = {
+    val sc = spark.sparkContext
+    val before = persistentIds
+    val held = new ConcurrentHashMap[Int, RDD[_]]
+    val listener = new SparkListener {
+      override def onBlockUpdated(e: SparkListenerBlockUpdated): Unit =
+        e.blockUpdatedInfo.blockId match {
+          case RDDBlockId(id, _) =>
+            sc.getPersistentRDDs.get(id).foreach(held.putIfAbsent(id, _))
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      body
+      ListenerDrain(sc)
+      persistentIds -- before
+    } finally {
+      sc.removeSparkListener(listener)
+      held.clear()
+    }
+  }
 
   /** Spark jobs started by `body` on this thread, counted under a job
     * group.
@@ -99,19 +141,22 @@ class ReleaseSpec extends GraftSuite {
   private def check(what: String, g: Seq[(Long, Long, Double)], cached: Boolean): Unit = {
     val input = edgeDs(g)
     if (cached) { input.persist(); input.count() }
-    kernels(g).foreach { case (name, _, run) =>
-      val before = persistentIds
-      val frames = run(input)
-      frames.foreach(_.collect())
-      val left = persistentIds -- before
+    // every kernel runs before the assert, so one failure names them all
+    val leaks = kernels(g).flatMap { case (name, _, run) =>
+      var frames = Seq.empty[Dataset[_]]
+      val left = persistedBy {
+        frames = run(input)
+        frames.foreach(_.collect())
+      }
       val read = frames.flatMap(checkpointIds).toSet
-      assert(left == read,
-        s"$name on $what: ${(left -- read).size} persistent RDDs beyond " +
-          s"the ${read.size} its result reads")
       if (cached)
         assert(input.storageLevel == StorageLevel.MEMORY_AND_DISK,
           s"$name on $what dropped the caller's cache")
+      if (left == read) None
+      else Some(s"$name: ${(left -- read).size} persistent RDDs beyond the " +
+        s"${read.size} its result reads")
     }
+    assert(leaks.isEmpty, s"on $what: ${leaks.mkString("; ")}")
     if (cached) input.unpersist(true)
   }
 

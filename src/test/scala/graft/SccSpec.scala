@@ -95,6 +95,8 @@ class SccSpec extends GraftSuite {
     val got = r.levels.as[(Long, Long, Long)].collect()
       .map { case (s, l, n) => s -> ((l, n)) }.toMap
     assert(got == Map(0L -> ((0L, 2L)), 7L -> ((1L, 2L)), 9L -> ((2L, 1L))))
+    // two rounds raise a level, the third finds no change
+    assert(r.rounds == 3)
 
     // random graphs: per-SCC sizes must agree with Tarjan, levels must
     // respect every contracted edge (level(dst) >= level(src) + 1) and
