@@ -159,8 +159,9 @@ object Superstep {
           .select(col("vid"), col("vid").as(label)), 0, Map.empty)
     }
 
-  /** The round cycle of a loop kernel over `g`, from round `from` until
-    * `maxRounds` or until `stop` holds.
+  /** The round cycle of a loop kernel, from round `from` until
+    * `maxRounds` or until `stop` holds. `keep` holds the frames a round
+    * may read besides its state: a graph kernel passes its `g.adj`.
     *
     * Round `r` builds `next = step(state, r)` and materializes it with ONE
     * action: a [[cutAndAgg]] over `stats`, or, with no `stats`, an eager
@@ -178,32 +179,32 @@ object Superstep {
     * checks the row returns false.
     *
     * Release rule: once `next` has materialized, every checkpoint that the
-    * replaced state or `next`'s plan reads is freed, except `g.adj` and
-    * `keep`. So a step reads only its state, `g.adj` and `keep`: anything
-    * else a round reads, such as a cut it makes itself, is gone after it.
+    * replaced state or `next`'s plan reads is freed, except `keep`. So a
+    * step reads only its state and `keep`: anything else a round reads,
+    * such as a cut it makes itself, is gone after it.
     *
     * With a `store`, the state is snapshotted every `checkpointEvery`
     * rounds and after the last one, with `metrics` of the round's stats
-    * row plus its `seconds` and `numPartitions`.
+    * row plus its `seconds` and `numPartitions` (the session's shuffle
+    * partitions, which [[onGraph]] sets to `g.p`).
     *
     * @return the last state and the round reached (`from` plus the rounds
     *         run).
     */
   private[graft] def iterate(
-      g: Graph,
+      keep: Seq[Dataset[_]],
       init: DataFrame,
       rows: Long,
       maxRounds: Int,
       from: Int = 0,
       stats: Seq[Column] = Nil,
       stop: (Row, Int) => Boolean = (_, _) => false,
-      keep: Seq[Dataset[_]] = Nil,
       store: Option[SnapshotStore] = None,
       checkpointEvery: Int = 1,
       metrics: Row => Map[String, Double] = _ => Map.empty,
   )(step: (DataFrame, Int) => DataFrame): (DataFrame, Int) = {
     val columns = init.columns.toSeq.map(col)
-    val kept = g.adj +: keep
+    val partitions = init.sparkSession.conf.get("spark.sql.shuffle.partitions")
     var state = init
     var round = from
     var done = false
@@ -214,14 +215,14 @@ object Superstep {
         if (stats.isEmpty) (cut(next, rows), Row.empty)
         else cutAndAgg(next, rows, stats)
       done = stop(row, round)
-      Internals.release(state, kept: _*)
-      Internals.release(next, state +: kept: _*)
+      Internals.release(state, keep: _*)
+      Internals.release(next, state +: keep: _*)
       state = cp.select(columns: _*)
       round += 1
       val secs = (System.nanoTime() - t0) / 1e9
       if (round % checkpointEvery == 0 || done || round >= maxRounds)
         store.foreach(_.write(round, state, metrics(row) ++
-          Map("seconds" -> secs, "numPartitions" -> g.p.toDouble)))
+          Map("seconds" -> secs, "numPartitions" -> partitions.toDouble)))
     }
     (state, round)
   }

@@ -75,7 +75,7 @@ object Coloring {
     )
     var conflicts = 1L
     val (state, iter) = Superstep.iterate(
-      g, init, g.entries, maxRounds,
+      Seq(g.adj), init, g.entries, maxRounds,
       stats = Seq(count_if(col("conf"))),
       stop = { (r, _) => conflicts = r.getLong(0); conflicts == 0 },
     ) { (state, _) =>

@@ -71,7 +71,7 @@ object Eigen {
 
     val t0 = System.nanoTime()
     val (state, iter) = Superstep.iterate(
-      g, init, nVerts, cfg.iterations,
+      Seq(g.adj), init, nVerts, cfg.iterations,
       stats = Seq(sum("score")),
       stop = { (r, _) => total = r.getDouble(0); false },
     ) { (state, _) =>

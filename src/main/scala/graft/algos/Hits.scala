@@ -53,7 +53,7 @@ final case class HitsResult(
   * once and persisted columnar.
   *
   * Like [[Eigen]] and [[Ppr]], its first k-1 rounds run through
-  * [[Superstep.iterate]] (the reversed CSR is its `keep`) rather than a
+  * [[Superstep.iterate]] (both CSRs are its `keep`) rather than a
   * mode threaded through the scaling-certified [[PageRank.run]]
   * (BENCH/BASELINE.md gate rule 4 pins that file).
   */
@@ -110,7 +110,7 @@ object Hits {
       // rounds 1..k-1: both half-steps fused into ONE lineage-cut job;
       // the hub state is an intermediate subplan referenced exactly once
       val (u, _) = Superstep.iterate(
-        g, init, nVerts, iterations - 1, keep = Seq(rev),
+        Seq(fwd, rev), init, nVerts, iterations - 1,
       ) { (s, _) => gather(fwd, gather(rev, s, s), s) }
       // final round: the hub frame feeds the output, so it gets its own
       // cut; both output normalizers ride the two cuts for free

@@ -66,7 +66,9 @@ final case class HyperBallChain(
   * rows along edges + union the previous state + ONE repartition by
   * vid; the (vid, idx) max-aggregate needs no further exchange because
   * hash(vid) already clusters (vid, idx) — the exact plan shape of the
-  * label-propagation superstep.
+  * label-propagation superstep. The chain keeps its own round loop,
+  * not [[Superstep.iterate]]: its result reads every round's state
+  * (`perRound`), and `iterate`'s release rule would free those states.
   */
 object HyperBall {
 

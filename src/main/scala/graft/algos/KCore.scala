@@ -72,7 +72,7 @@ object KCore {
     )
     var active = initRow.getLong(0)
     val (state, iter) = Superstep.iterate(
-      g, init, g.entries, maxIter,
+      Seq(g.adj), init, g.entries, maxIter,
       stats = Seq(count_if(col("active"))),
       // converged: no vertex deactivated this round, or none is left
       stop = { (r, _) =>

@@ -1,7 +1,7 @@
 package graft.algos
 
 import graft._
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftinternal.Internals
 import org.apache.spark.storage.StorageLevel
@@ -44,7 +44,10 @@ final case class KTrussResult(
   * graph at high k), the exact-count-gated fallback recomputes supports
   * with the full pass instead — both paths compute the same exact
   * supports, so the gate is a pure cost decision and cannot change
-  * results. Deterministic throughout (BASELINE.json:14).
+  * results. [[Superstep.iterate]] runs the rounds: a round's stats
+  * (edges below support, edges) decide the next round's path, and a run
+  * still unconverged at `maxIter` throws. Deterministic throughout
+  * (BASELINE.json:14).
   *
   * The seed pass reuses the certified triangle scheme ([[Triangles]]):
   * degree-ordered orientation (oriented out-degree is O(√|E|) even for
@@ -92,36 +95,42 @@ object KTruss {
     val pEff = Tuning.adaptivePartitions(spark, bRow.getLong(0))
     Tuning.withShufflePartitions(spark, pEff) {
     val p = pEff
-    // seed: one full support pass over the whole graph
-    var cur: DataFrame = withSupports(base, p)
-    Internals.release(base)
-    var m = cur.count()
-    var iter = 0
-    var converged = m == 0
+    // `settled` reads the stats (d rows below support, m rows) of the
+    // state after `ran` rounds: d == 0 is the fixpoint row, traced if
+    // maxIter leaves room for that round
+    val peelStats = Seq(count_if(col("sup") < minSup), count(lit(1)))
+    var d, m = 0L
     val trace = Seq.newBuilder[KTrussRound]
-    while (!converged && iter < maxIter) {
-      // the round's cuts and the replaced `cur` are freed once the new
-      // `cur` is cut; the result reads only the last `cur`
-      val prev = cur
-      val dropped = cur.where(col("sup") < minSup).select(col("a"), col("b"))
-      val alive = cur.where(col("sup") >= minSup)
-      val dCut = Superstep.cut(dropped)
-      val d = dCut.count()
-      iter += 1
-      if (d == 0) {
-        converged = true
+    def settled(r: Row, ran: Int): Boolean = {
+      d = r.getLong(0)
+      m = r.getLong(1)
+      if (d == 0 && m > 0 && ran < maxIter)
         trace += KTrussRound(0L, m, "fixpoint")
-      } else if (d > m / fullRecountFactor) {
+      d == 0 || m == 0
+    }
+    // seed: one full support pass over the whole graph
+    val seed = withSupports(base, p)
+    Internals.release(base)
+    val done = settled(seed.agg(peelStats.head, peelStats.tail: _*).head(), 0)
+    val (cur, _) = Superstep.iterate(
+      Nil, seed, 0L, if (done) 0 else maxIter,
+      stats = peelStats,
+      stop = (r, round) => settled(r, round + 1),
+    ) { (state, _) =>
+      val alive = state.where(col("sup") >= minSup)
+      if (d > m / fullRecountFactor) {
         // count-gated fallback: this round rewrites most of the graph —
         // a full recount over the survivors is cheaper than enumerating
         // nearly every triangle as "destroyed"
-        cur = withSupports(alive.select(col("a"), col("b")), p)
         trace += KTrussRound(d, m - d, "full")
+        withSupports(alive.select(col("a"), col("b")), p)
       } else {
-        // round-start edges, both directions (cur still includes the
-        // dropped rows: destroyed triangles existed BEFORE the removal)
-        val symCur = cur.select(col("a").as("x"), col("b").as("w"))
-          .unionByName(cur.select(col("b").as("x"), col("a").as("w")))
+        trace += KTrussRound(d, m - d, "incremental")
+        val dropped = state.where(col("sup") < minSup).select(col("a"), col("b"))
+        // round-start edges, both directions (the state still includes
+        // the dropped rows: destroyed triangles existed BEFORE the removal)
+        val symCur = state.select(col("a").as("x"), col("b").as("w"))
+          .unionByName(state.select(col("b").as("x"), col("a").as("w")))
         // w ∈ N(a); triangle iff (b,w) is also a round-start edge. The
         // dropped side is hinted broadcast only below an ABSOLUTE row
         // cap — the relative gate above bounds d ≤ m/factor, which at
@@ -129,25 +138,25 @@ object KTruss {
         // subcritical drop round falls back to a shuffle join instead
         // of a forced driver-side OOM. d is already counted, so the
         // decision is free and deterministic.
-        val dSide = if (d <= broadcastCap) broadcast(dCut) else dCut
-        val cand = Superstep.cut(
+        val dSide = if (d <= broadcastCap) broadcast(dropped) else dropped
+        val (cand, cRow) = Superstep.cutAndAgg(
           dSide
             .join(symCur, col("a") === col("x"))
             .where(col("w") =!= col("b"))
-            .select(col("a"), col("b"), col("w"))
-        )
-        // candidate count is exact and already materialized (the cut is
-        // eager), so the next two broadcast decisions are deterministic
-        // pure-cost choices too: when the destroyed-triangle candidate
-        // set is small, BOTH joins against the surviving graph run
-        // broadcast-hash — the round streams `cur`/`alive` map-side and
+            .select(col("a"), col("b"), col("w")),
+          0L, Seq(count(lit(1))))
+        // candidate count is exact and counted by the cut's own job, so
+        // the next two broadcast decisions are deterministic pure-cost
+        // choices too: when the destroyed-triangle candidate set is
+        // small, BOTH joins against the surviving graph run
+        // broadcast-hash — the round streams the state map-side and
         // never shuffles the surviving edge set.
-        val nCand = cand.count()
+        val nCand = cRow.getLong(0)
         val candSide =
           if (nCand <= broadcastCap) broadcast(cand) else cand
         val tri = candSide
           .join(
-            cur.select(col("a").as("ea"), col("b").as("eb")),
+            state.select(col("a").as("ea"), col("b").as("eb")),
             least(col("b"), col("w")) === col("ea") &&
               greatest(col("b"), col("w")) === col("eb"),
           )
@@ -175,32 +184,20 @@ object KTruss {
         // covers the decrement side (3 longs/row vs cand's 3)
         val decSide =
           if (nCand <= broadcastCap) broadcast(dec) else dec
-        cur = Superstep.cut(
-          alive
-            .join(decSide, Seq("a", "b"), "left_outer")
-            .select(
-              col("a"),
-              col("b"),
-              (col("sup") - coalesce(col("dc"), lit(0L))).as("sup"),
-            )
-        )
-        Internals.release(cand)
-        trace += KTrussRound(d, m - d, "incremental")
+        alive
+          .join(decSide, Seq("a", "b"), "left_outer")
+          .select(
+            col("a"),
+            col("b"),
+            (col("sup") - coalesce(col("dc"), lit(0L))).as("sup"),
+          )
       }
-      Internals.release(dCut)
-      if (cur ne prev) Internals.release(prev)
-      // both paths keep exactly the alive rows, so the new edge count is
-      // m − d by construction — no extra count action per round
-      val m2 = if (converged) m else m - d
-      converged = converged || m2 == 0
-      m = m2
     }
-    KTrussResult(
-      cur.where(col("sup") >= minSup)
-        .select(col("a").as("src"), col("b").as("dst")),
-      iter,
-      trace.result(),
-    )
+    require(d == 0, s"KTruss: peeling did not converge in $maxIter rounds " +
+      s"($d edges still below support $minSup)")
+    val rounds = trace.result()
+    KTrussResult(cur.select(col("a").as("src"), col("b").as("dst")),
+      rounds.size, rounds)
     } // withShufflePartitions
   }
 

@@ -78,7 +78,7 @@ object Katz {
         nVerts,
       )
       val (state, iter) = Superstep.iterate(
-        g, init, nVerts, rounds,
+        Seq(g.adj), init, nVerts, rounds,
         stats = Seq(max("acc")),
         // headroom guard per round (ANSI would already have thrown on a
         // wrapped sum; this catches "legal but about to run out")

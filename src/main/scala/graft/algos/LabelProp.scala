@@ -56,7 +56,7 @@ object LabelProp {
     Superstep.onGraph(base, mode) { g =>
     val (init, from, _) = Superstep.start(g, store, "label")
     val (state, _) = Superstep.iterate(
-      g, init, g.entries, cfg.iterations, from = from,
+      Seq(g.adj), init, g.entries, cfg.iterations, from = from,
       store = store, checkpointEvery = cfg.checkpointEvery,
     )((state, _) => superstep(g.adj, state, g.p))
     state.select(col("vid"), col("label")).as[LabelState]

@@ -101,7 +101,7 @@ object Louvain {
       val nVerts = vRow.getLong(0)
       val bcastTot = nVerts <= (4L << 20)
       val (state, _) = Superstep.iterate(
-        g, init, adjCount, rounds, keep = Seq(degDf),
+        Seq(g.adj, degDf), init, adjCount, rounds,
       )((state, round) => moveRound(g.adj, state, degDf, twoM, g.p,
         round + 1, bcastTot, candRows = 2L * m + nVerts))
       Internals.release(degDf)

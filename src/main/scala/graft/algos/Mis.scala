@@ -70,7 +70,7 @@ object Mis {
     )
     var remaining = initRow.getLong(0)
     val (state, iter) = Superstep.iterate(
-      g, init, g.entries, if (remaining > 0) maxRounds else 0,
+      Seq(g.adj), init, g.entries, if (remaining > 0) maxRounds else 0,
       stats = Seq(count_if(col("status") === 0)),
       stop = { (r, _) => remaining = r.getLong(0); remaining == 0 },
     ) { (state, round) =>

@@ -109,7 +109,7 @@ object Ppr {
 
     val t0 = System.nanoTime()
     val (state, iter) = Superstep.iterate(
-      g, init, nVerts, cfg.maxIter,
+      Seq(g.adj), init, nVerts, cfg.maxIter,
       stats = Seq(
         max("delta"),
         sum(when(col("dangling"), col("rank")).otherwise(0.0)),

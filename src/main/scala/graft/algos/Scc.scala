@@ -44,9 +44,9 @@ final case class CondensationResult(
   *      the active graph cannot sit in a cycle there, and the active
   *      graph always contains every undecided SCC whole (only whole SCCs
   *      and singletons are ever removed), so such vertices are singleton
-  *      SCCs — assigned scc = vid and removed. This is what collapses
-  *      chain/tendril remainders that pure peeling would need O(length)
-  *      peels for.
+  *      SCCs: their edges are removed, and, never decided, they end as
+  *      orphans with scc = vid. This is what collapses chain/tendril
+  *      remainders that pure peeling would need O(length) peels for.
   *   2. FORWARD pass: fwd(v) = min id that REACHES v — [[Wcc]]'s
   *      min-label propagation with its adaptive pointer jump, run on the
   *      directed CSR through [[Superstep.iterate]] to fixpoint: one
@@ -85,9 +85,10 @@ final case class CondensationResult(
   * idempotent — so the result is partition- and order-independent, the
   * same exact-match contract as [[Wcc]]/[[Bfs]].
   *
-  * 100 TB shape: trim is ONE degree aggregation per sweep (in/out degree
-  * flags summed in a single map-side-combined groupBy — round-6 rework;
-  * the old shape paid two distincts + two anti-joins per sweep); each
+  * 100 TB shape: a trim sweep is ONE job, a [[Superstep.iterate]] round:
+  * two semi-joins keep the edges whose source has an in-edge and whose
+  * destination has an out-edge (the distinct destinations and sources,
+  * each map-side combined), with the edge count folded into the cut; each
   * propagation round is the certified superstep exchange; decided-vertex
   * removal is two anti-joins per peel, with the count folded into the
   * lineage cut. Work per peel is proportional to the ACTIVE subgraph
@@ -134,9 +135,8 @@ object Scc {
       activeEdges = r.getLong(0)
     }
     shrink(raw.where(col("src") =!= col("dst")).distinct())
-    // trimmed/decided frames accumulate in driver-side buffers of already
+    // decided frames accumulate in a driver-side buffer of already
     // CHECKPOINTED frames (flat lineage) — unioned once at the end
-    // instead of paying a cut job per trim sweep
     val assignedBuf = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     var peels = 0
     var trimRounds = 0
@@ -152,38 +152,35 @@ object Scc {
         peels += 1
         // --- 1. trim to fixpoint: indeg-0 / outdeg-0 vertices are
         // singleton SCCs of the active graph (see Scaladoc invariant).
-        // Detection is ONE map-side-combined degree aggregation + the
-        // count folded into the lineage cut (2 jobs per sweep total;
-        // the old distinct/anti-join form paid 5)
-        var trimmed = 1L
-        while (trimmed > 0 && activeEdges > 0) {
-          val degs = active
-            .select(col("src").as("vid"), lit(1L).as("o"), lit(0L).as("i"))
-            .unionByName(
-              active.select(col("dst").as("vid"), lit(0L).as("o"), lit(1L).as("i")))
-            .groupBy("vid").agg(sum("o").as("o"), sum("i").as("i"))
-          val (tCut, tr) = Superstep.cutAndAgg(
-            degs.where(col("o") === 0 || col("i") === 0).select(col("vid")),
-            0L, Seq(count(lit(1))))
-          trimmed = tr.getLong(0)
-          if (trimmed > 0) {
-            trimRounds += 1
-            assignedBuf +=
-              tCut.select(col("vid"), col("vid").as("scc"))
-            shrink(active
-              .join(tCut, active("src") === tCut("vid"), "left_anti")
-              .join(tCut, active("dst") === tCut("vid"), "left_anti"))
-          } else Internals.release(tCut) // the empty last sweep
+        // An edge s → d survives a sweep iff s has an in-edge and d an
+        // out-edge: ONE job per sweep, the edge count folded into the cut
+        val (trimmed, _) = Superstep.iterate(
+          Nil, active, 0L, Int.MaxValue,
+          stats = Seq(count(lit(1))),
+          stop = { (r, _) =>
+            val left = r.getLong(0)
+            if (left < activeEdges) trimRounds += 1
+            val done = left == 0 || left == activeEdges
+            activeEdges = left
+            done
+          },
+        ) { (state, _) =>
+          val hasIn = state.select(col("dst").as("v")).distinct()
+          val hasOut = state.select(col("src").as("v")).distinct()
+          state
+            .join(hasIn, col("src") === col("v"), "left_semi")
+            .join(hasOut, col("dst") === col("v"), "left_semi")
         }
+        active = trimmed
         if (activeEdges > 0) {
           // --- 2+3. forward/backward min-label to fixpoint on the active
           // subgraph. CSRs rebuilt per peel: the active set shrinks by
           // whole SCCs each peel, and the build is one groupBy — cheaper
           // than even a single propagation round over a stale larger graph.
-          val activeDs = active
-            .select(col("src"), col("dst"), lit(1.0).as("weight")).as[Edge]
-          val fwd = Csr.build(activeDs, pEff, Csr.WeightMode.One)
-            .persist(StorageLevel.MEMORY_AND_DISK)
+          val fwd = Csr.build(
+            active.select(col("src"), col("dst"), lit(1.0).as("weight")).as[Edge],
+            pEff, Csr.WeightMode.One,
+          ).persist(StorageLevel.MEMORY_AND_DISK)
           val rev = Csr.build(
             active.select(
               col("dst").as("src"), col("src").as("dst"),
@@ -204,8 +201,7 @@ object Scc {
           // partitioning survives into round 1 (see Superstep.start)
           def pass(adj: Dataset[AdjBlock]): (DataFrame, Int) = {
             val (state, rounds, converged) = Wcc.propagate(
-              Superstep.Graph(activeDs, activeEdges, pEff, adj),
-              verts.select(col("vid"), col("vid").as("comp")), nVerts,
+              adj, verts.select(col("vid"), col("vid").as("comp")), nVerts,
               maxProp, pointerJump = true, broadcastJumpMax,
               keep = Seq(verts))
             require(converged,
@@ -244,8 +240,8 @@ object Scc {
       require(
         activeEdges == 0,
         s"Scc: not converged after $maxPeels peels ($activeEdges edges active)")
-      // orphaned vertices (all edges vanished with removed neighbors, or
-      // self-loop-only — see allVerts) are singleton SCCs
+      // orphaned vertices (trimmed, all edges vanished with removed
+      // neighbors, or self-loop-only — see allVerts) are singleton SCCs
       val assigned =
         if (assignedBuf.isEmpty) Seq.empty[(Long, Long)].toDF("vid", "scc")
         else assignedBuf.reduce(_ unionByName _)
@@ -303,11 +299,11 @@ object Scc {
       // result reads too: `keep` stops round 1 from freeing it
       var changed = 1L
       val (lvl, rounds) = Superstep.iterate(
-        g, sizes.select(col("scc").as("vid"), lit(0L).as("level")), 0L,
+        Seq(g.adj, sizes),
+        sizes.select(col("scc").as("vid"), lit(0L).as("level")), 0L,
         maxRounds,
         stats = Seq(coalesce(sum(when(col("chg"), 1L).otherwise(0L)), lit(0L))),
         stop = (r, _) => { changed = r.getLong(0); changed == 0 },
-        keep = Seq(sizes),
       ) { (state, _) =>
         val msgs = Superstep.scatter(g.adj, state)
           .groupBy("vid").agg(max(col("level") + 1L).as("ml"))

@@ -72,7 +72,7 @@ object Sssp {
     )
     val frontier = initRow.getLong(0)
     val (state, iter) = Superstep.iterate(
-      g, init, g.entries, if (frontier > 0) maxIter else 0,
+      Seq(g.adj), init, g.entries, if (frontier > 0) maxIter else 0,
       stats = Seq(count_if(col("improved"))),
       stop = (r, _) => r.getLong(0) == 0,
     ) { (state, _) =>

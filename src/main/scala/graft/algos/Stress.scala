@@ -71,7 +71,7 @@ object Stress {
             lit(0).as("dist"),
             lit(1L).as("sigma"),
           ))
-      val (reached, _) = Superstep.iterate(g, init, 0L, rounds) { (state, t) =>
+      val (reached, _) = Superstep.iterate(Seq(g.adj), init, 0L, rounds) { (state, t) =>
         val frontier = state.where(col("dist") === t)
           .select(col("seed"), col("vid"), col("sigma"))
         // σ finalizes on first touch: only pairs not yet reached join in
@@ -93,7 +93,7 @@ object Stress {
           when(col("dist") === rounds, lit(0L)).otherwise(lit(null).cast("long"))),
         0L, Seq(count(lit(1))))
       Internals.release(reached)
-      val (swept, _) = Superstep.iterate(g, down0, 0L, rounds) { (state, r) =>
+      val (swept, _) = Superstep.iterate(Seq(g.adj), down0, 0L, rounds) { (state, r) =>
         val bt = rounds - 1 - r
         val down = state.where(col("dist") === bt + 1)
           .select(col("seed"), col("vid"), col("gamma"))

@@ -152,14 +152,14 @@ object Wcc {
     Superstep.onGraph(sym, Csr.WeightMode.One) { g =>
       val (init, from, resumed) = Superstep.start(g, store, "comp")
       val (state, iter, _) = propagate(
-        g, init, g.entries, maxIter, pointerJump, broadcastJumpMax,
+        g.adj, init, g.entries, maxIter, pointerJump, broadcastJumpMax,
         from = from, resumed = resumed, store = store,
         checkpointEvery = checkpointEvery)
       WccResult(state.as[CompState], iter - from)
     }
   }
 
-  /** Min-label propagation over `g.adj` through [[Superstep.iterate]]:
+  /** Min-label propagation over `adj` through [[Superstep.iterate]]:
     * comp(v) ← min(comp(v), min over in-neighbors u of comp(u)), plus the
     * ADAPTIVE pointer jump when `pointerJump` is set (see [[Wcc]]). `init`
     * is the `(vid, comp)` state; `rows` sizes the cuts. [[Scc]] runs it on
@@ -171,14 +171,14 @@ object Wcc {
     * trajectory the straight run would have taken (CheckpointSpec pins
     * resumed == straight - prefix).
     *
-    * @param keep checkpoints the rounds must not free besides `g.adj`
+    * @param keep checkpoints the rounds must not free besides `adj`
     *             (see [[Superstep.iterate]]): the cut `init` projects, if
     *             another reader still needs it.
     * @return the last state, the round reached, and whether the last
     *         round changed nothing.
     */
   private[algos] def propagate(
-      g: Superstep.Graph,
+      adj: Dataset[AdjBlock],
       init: DataFrame,
       rows: Long,
       maxRounds: Int,
@@ -214,7 +214,7 @@ object Wcc {
     var img = (resumed.getOrElse("compImageApprox", Double.MaxValue) * 2)
       .toLong
     val (state, round) = Superstep.iterate(
-      g, init, rows, if (changed > 0) maxRounds else 0, from = from,
+      adj +: keep, init, rows, if (changed > 0) maxRounds else 0, from = from,
       // lineage cut + round stats in ONE job (round-3 verdict: the
       // separate post-cut aggregate was a second small job per round —
       // pure fixed overhead over the whole convergence trajectory)
@@ -228,7 +228,6 @@ object Wcc {
         img = (r.getLong(1) * 2) min Long.MaxValue
         changed == 0
       },
-      keep = keep,
       store = store,
       checkpointEvery = checkpointEvery,
       metrics = r => Map(
@@ -240,7 +239,7 @@ object Wcc {
     ) { (state, _) =>
       if (pointerJump && !jumpOn && chHist._1 >= 0 && chHist._2 >= 0 &&
         chHist._1 * 2 > chHist._2) jumpOn = true
-      val msgs = Superstep.scatter(g.adj, state)
+      val msgs = Superstep.scatter(adj, state)
         .groupBy("vid").agg(min("comp").as("mc"))
       val half = state.join(msgs, Seq("vid"), "left_outer")
         .select(

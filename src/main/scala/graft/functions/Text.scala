@@ -118,26 +118,6 @@ object Text {
         )
     }
 
-  /** MinHash signature: for each of `numHashes` seeded hash functions,
-    * the minimum xxhash64 over the shingle set. Distinct seeds come from
-    * hashing (shingle, hashIndex) pairs — one pass, all built-ins.
-    *
-    * NOTE: nested array lambdas are CodegenFallback (interpreted) —
-    * measured 8x slower than the equivalent explode + per-index
-    * min-aggregates that [[graft.operators.Dedup.minhashPairs]] uses on
-    * its hot path. Keep this form for per-row signature columns on small
-    * inputs; use the explode+agg form in pipelines.
-    */
-  def minhashSignature(
-      shingleCol: Column,
-      numHashes: Int,
-      hash: Hash64 = Hash64.Xx,
-  ): Column =
-    transform(
-      sequence(lit(0), lit(numHashes - 1)),
-      h => array_min(transform(shingleCol, s => hash.seeded(s, h))),
-    )
-
   /** LSH band keys from a minhash signature: hash of each band of
     * `rowsPerBand` consecutive signature entries. Docs sharing ANY band
     * key are near-duplicate candidates. The band is hashed through its

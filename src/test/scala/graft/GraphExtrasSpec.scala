@@ -344,6 +344,30 @@ class GraphExtrasSpec extends GraftSuite {
     assert(inc.rounds.map(_.dropped) == full.rounds.map(_.dropped))
   }
 
+  test("ktruss trajectory: rounds, paths and iterations") {
+    import graft.algos.{KTruss, KTrussRound}
+    def peels(path: String) = Seq(
+      KTrussRound(33, 144, path), KTrussRound(57, 87, path),
+      KTrussRound(24, 63, path), KTrussRound(0, 63, "fixpoint"))
+    val inc = KTruss.run(edgeDs(cascadeFixture), 6, fullRecountFactor = 1L)
+    assert(inc.iterations == 4)
+    assert(inc.rounds == peels("incremental"))
+    val full = KTruss
+      .run(edgeDs(cascadeFixture), 6, fullRecountFactor = Long.MaxValue)
+    assert(full.iterations == 4)
+    assert(full.rounds == peels("full"))
+    // one full peel empties the path; the empty input runs no round
+    assert(KTruss.run(edgeDs(Fixtures.path5), 3).iterations == 1)
+    assert(KTruss.run(edgeDs(Seq.empty), 3).iterations == 0)
+  }
+
+  test("ktruss throws when the peel does not converge in maxIter rounds") {
+    val e = intercept[IllegalArgumentException] {
+      graft.algos.KTruss.run(edgeDs(cascadeFixture), 6, maxIter = 1)
+    }
+    assert(e.getMessage.contains("did not converge"))
+  }
+
   test("ktruss: forced-incremental matches the oracle on seeded random graphs") {
     Seq(17L, 43L).foreach { seed =>
       val g = seededRandomGraph(seed, 20, 70)

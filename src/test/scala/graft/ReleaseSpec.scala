@@ -61,14 +61,14 @@ class ReleaseSpec extends GraftSuite {
     }),
     ("ppr", 12, e => Seq(Ppr.run(e, seeds(g), PrConfig(maxIter = 3)).ranks)),
     ("hits", 10, e => Seq(Hits.run(e, iterations = 3).scores)),
-    ("scc", 52, { e => val r = Scc.run(e); Seq(r.comps, r.edgesCut) }),
-    ("condense", 61, { e =>
+    ("scc", 51, { e => val r = Scc.run(e); Seq(r.comps, r.edgesCut) }),
+    ("condense", 60, { e =>
       val r = Scc.condense(e)
       Seq(r.levels, r.scc.comps, r.scc.edgesCut)
     }),
     ("stress", 14, e => Seq(Stress.run(e, seeds(g)).scores)),
-    ("ktruss incr", 22, e => Seq(KTruss.run(e, 3, fullRecountFactor = 1L).edges)),
-    ("ktruss full", 26,
+    ("ktruss incr", 17, e => Seq(KTruss.run(e, 3, fullRecountFactor = 1L).edges)),
+    ("ktruss full", 23,
       e => Seq(KTruss.run(e, 3, fullRecountFactor = Long.MaxValue).edges)),
   )
 
