@@ -1,7 +1,9 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.expressions.XXH64
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Pluggable 64-bit hash for the sketch operators (minhash, simhash,
   * SRP-LSH, IVF centroid sampling).
@@ -36,6 +38,15 @@ sealed trait Hash64 {
 
   /** Hash of an (a, b) operand pair (SRP hyperplane entries). */
   def pair(a: Column, b: Column): Column
+
+  /** `one(lit(s))`, computed in a task (spec-pinned for both modes). */
+  private[graft] def oneOf(s: String): Long
+
+  /** `seed => seeded(lit(s), seed)`, computed in a task. Apply it once
+    * per seed: Xx hashes the bytes of `s` once and each seed costs one
+    * more `hashInt` round.
+    */
+  private[graft] def seededOf(s: String): Int => Long
 }
 
 object Hash64 {
@@ -44,6 +55,14 @@ object Hash64 {
     def one(s: Column): Column = xxhash64(s)
     def seeded(s: Column, seed: Column): Column = xxhash64(s, seed)
     def pair(a: Column, b: Column): Column = xxhash64(a, b)
+    // xxhash64 folds its operands left to right from seed 42, so
+    // xxhash64(s, h) = hashInt(h, xxhash64(s))
+    private[graft] def oneOf(s: String): Long =
+      XXH64.hashUTF8String(UTF8String.fromString(s), 42L)
+    private[graft] def seededOf(s: String): Int => Long = {
+      val base = oneOf(s)
+      seed => XXH64.hashInt(seed, base)
+    }
   }
 
   case object Portable extends Hash64 {
@@ -53,6 +72,14 @@ object Hash64 {
       one(concat(s.cast("string"), lit("#"), seed.cast("string")))
     def pair(a: Column, b: Column): Column =
       one(concat(a.cast("string"), lit(","), b.cast("string")))
+    // the last 15 hex digits of the md5 are its low 60 bits
+    private[graft] def oneOf(s: String): Long = {
+      val d = java.security.MessageDigest.getInstance("MD5")
+        .digest(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      java.nio.ByteBuffer.wrap(d, 8, 8).getLong & ((1L << 60) - 1)
+    }
+    private[graft] def seededOf(s: String): Int => Long =
+      seed => oneOf(s + "#" + seed)
   }
 
   /** The DuckDB expression mirroring [[Portable]].one over a string

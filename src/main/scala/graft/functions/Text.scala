@@ -118,67 +118,6 @@ object Text {
         )
     }
 
-  /** LSH band keys from a minhash signature: hash of each band of
-    * `rowsPerBand` consecutive signature entries. Docs sharing ANY band
-    * key are near-duplicate candidates. The band is hashed through its
-    * canonical comma-joined decimal string so the SAME form serves both
-    * hash modes (band keys are internal — only their equality matters).
-    */
-  def bandKeys(
-      sig: Column,
-      numHashes: Int,
-      rowsPerBand: Int,
-      hash: Hash64 = Hash64.Xx,
-  ): Column =
-    transform(
-      sequence(lit(0), lit(numHashes / rowsPerBand - 1)),
-      b =>
-        hash.seeded(
-          concat_ws(
-            ",",
-            transform(
-              slice(sig, b * rowsPerBand + 1, lit(rowsPerBand)),
-              v => v.cast("string"),
-            ),
-          ),
-          b,
-        ),
-    )
-
-  /** Bit b (as 0/1 Long) of a Long column; shift amount may be a Column
-    * (the Scala `shiftright` helper only takes a literal Int).
-    */
-  private def bitAt(x: Column, b: Column): Column =
-    call_function("shiftright", x, b).bitwiseAND(lit(1L))
-
-  /** 64-bit SimHash over the token multiset: bit b is set iff the sum of
-    * ±1 votes (bit b of each token's xxhash64) is positive.
-    */
-  def simhash64(text: Column, hash: Hash64 = Hash64.Xx): Column = {
-    val powers = lit((0 until 64).map(i => 1L << i).toArray)
-    val bits = let(tokens(lower(text))) { toks =>
-      transform(
-        sequence(lit(0), lit(63)),
-        b =>
-          when(
-            aggregate(
-              toks,
-              lit(0L),
-              (acc, t) =>
-                acc + when(bitAt(hash.one(t), b) === 1L, lit(1L))
-                  .otherwise(lit(-1L)),
-            ) > 0,
-            lit(1L),
-          ).otherwise(lit(0L)),
-      )
-    }
-    aggregate(
-      zip_with(bits, powers, (bit, p) => bit * p),
-      lit(0L),
-      (acc, x) => acc.bitwiseOR(x),
-    )
-  }
-
   /** Split a 64-bit simhash into `chunks` equal bit-chunks; two docs within
     * hamming distance < chunks must share at least one chunk (pigeonhole),
     * so chunk equality is a complete candidate filter for that radius.

@@ -2,17 +2,19 @@ package graft.operators
 
 import graft.Superstep
 import graft.functions.{Hash64, Text}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, LongType, StructField, StructType}
 
 /** Deduplication operators for the training-data pipeline layer.
   *
   * Four families (exact, MinHash+LSH, SimHash, token-set Jaccard), all
-  * built-in-expression only, all deterministic. The LSH variants are the
-  * 100 TB designs: no stage is all-pairs over the corpus — candidates
-  * come from equality joins on band/chunk keys, so cost scales with the
-  * duplicate density, not |C|².
+  * deterministic, all built-in expressions but the two per-doc sketches,
+  * each one row-wise pass of [[Hash64]]'s scalar forms. The LSH variants
+  * are the 100 TB designs: no stage is all-pairs over the corpus —
+  * candidates come from equality joins on band/chunk keys, so cost
+  * scales with the duplicate density, not |C|².
   */
 object Dedup {
 
@@ -47,8 +49,8 @@ object Dedup {
 
   /** MinHash+LSH near-duplicate pairs.
     *
-    * shingle(n-gram) → minhash signature → band keys (banding derived
-    * from the threshold via [[lshParams]]) → explode → ids-only self-join
+    * shingle(n-gram) → band keys (banding derived from the threshold via
+    * [[lshParams]]; see [[minhashBands]]) → explode → ids-only self-join
     * on band key → distinct pairs → exact Jaccard verify (shingle sets
     * re-joined per side — the wide arrays never ride the candidate
     * shuffle). Returns (id_a, id_b, jaccard), id_a < id_b.
@@ -58,6 +60,9 @@ object Dedup {
     * recall probabilistic: a qualifying pair is a candidate with
     * probability 1-(1-j^r)^b — at j = threshold that is >= 1-1/e by the
     * [[lshParams]] choice, and approaches 1 rapidly for j above it.
+    *
+    * Sketches are per input row, so ids must be unique (see
+    * [[minhashBands]]).
     */
   def minhashPairs(
       docs: DataFrame,
@@ -69,41 +74,18 @@ object Dedup {
       hash: Hash64 = Hash64.Xx,
   ): DataFrame = {
     val (rowsPerBand, bands) = lshParams(numHashes, threshold)
-    val sigLen = rowsPerBand * bands
-    // materialized ONCE (eager cut): read three times downstream — the
-    // signature pipeline plus one verify fetch per pair side. Shingling
-    // is the operator's costliest step: its window lambda is interpreted
-    // (CodegenFallback) and reads the tokens once per window, so
-    // Text.shingles binds them once per row (Text.let). Re-split per
-    // window, 3-shingles of 6,000 40-word docs took 1.1 s instead of
-    // 0.31 s (local[4] on 4 cores, warm)
-    val sh = Superstep.cut(
-      docs.select(
-        col(idCol).as("id"),
-        array_distinct(Text.shingles(col(textCol), shingleLen)).as("sh"),
-      )
-    )
-    // signature via explode + sigLen min-aggregates: stays inside
-    // whole-stage codegen end to end. The equivalent nested array-lambda
-    // (transform(... array_min(transform(...)))) is a CodegenFallback —
-    // measured 8x slower on the same corpus. (minhash semantics identical:
-    // min over shingles of xxhash64(shingle, h) per hash index h.)
-    val minCols = (0 until sigLen)
-      .map(h => min(hash.seeded(col("s"), h)).as(s"m$h"))
-    val sigs = sh
-      .select(col("id"), explode(col("sh")).as("s"))
-      .groupBy("id")
-      .agg(minCols.head, minCols.tail: _*)
-    val sigArr = array((0 until sigLen).map(h => col(s"m$h")): _*)
-    // materialize the banded keys ONCE (eager cut): the candidate
-    // self-join would otherwise recompute the whole signature pipeline
-    // for each side. Tiny: one row per (doc, band).
-    val banded = Superstep.cut(
-      sigs.select(
-        col("id"),
-        explode(Text.bandKeys(sigArr, sigLen, rowsPerBand, hash)).as("band"),
-      )
-    )
+    // materialized ONCE (eager cut): read four times downstream — the
+    // band explode of each self-join side plus one verify fetch per pair
+    // side. Shingling is the operator's costliest step: its window
+    // lambda is interpreted (CodegenFallback) and reads the tokens once
+    // per window, so Text.shingles binds them once per row (Text.let).
+    // Re-split per window, 3-shingles of 6,000 40-word docs took 1.1 s
+    // instead of 0.31 s (local[4] on 4 cores, warm)
+    val sketched = Superstep.cut(
+      minhashBands(docs, idCol, textCol, shingleLen, rowsPerBand, bands,
+        hash))
+    val banded = sketched.select(col("id"), explode(col("bands")).as("band"))
+    val sh = sketched.select(col("id"), col("sh"))
     val cand = banded.as("a")
       .join(
         banded.as("b"),
@@ -125,14 +107,66 @@ object Dedup {
       .where(col("jaccard") >= threshold)
   }
 
-  /** Per-doc 64-bit SimHash signatures on the CODEGEN path: explode
-    * tokens → 64 conditional ±1 sum aggregates → bit-pack with an OR
-    * chain. Semantics identical to the per-row [[Text.simhash64]]
-    * (spec-asserted for both hash modes) — but that nested
-    * aggregate-in-transform form is CodegenFallback (interpreted); this
-    * form stays inside whole-stage codegen end to end, the same trick
-    * already measured ~8x faster for [[minhashPairs]]' signatures.
-    * Returns (id, sim).
+  /** Per-doc distinct shingles and LSH band keys: (id, sh, bands).
+    *
+    * One narrow pass per input row, no shuffle: signature entry h is the
+    * minimum over the row's shingles of `hash.seeded(shingle, h)`, and
+    * band b's key is `hash.seeded(join(",", entries of band b), b)` over
+    * its `rowsPerBand` consecutive entries as decimal strings (one form
+    * for both hash modes; band keys are internal, only their equality
+    * matters). Docs sharing ANY band key are near-duplicate candidates.
+    * A null or empty `sh` has no bands. The hashes run in the task
+    * through [[Hash64.seededOf]], which equals the column form.
+    *
+    * Sketches are per input row: equal to a per-id aggregate whenever
+    * ids are unique, as they are for every caller (`doc_id`, and
+    * [[crossCorpusContamination]]'s `2·id + side` remap). Any id type
+    * passes through.
+    */
+  private[graft] def minhashBands(
+      docs: DataFrame,
+      idCol: String,
+      textCol: String,
+      shingleLen: Int,
+      rowsPerBand: Int,
+      bands: Int,
+      hash: Hash64,
+  ): DataFrame = {
+    val shingled = docs.select(
+      col(idCol).as("id"),
+      array_distinct(Text.shingles(col(textCol), shingleLen)).as("sh"),
+    )
+    val schema = shingled.schema
+      .add("bands", ArrayType(LongType, containsNull = false), false)
+    shingled.mapPartitions(_.map { r =>
+      val sh = r.getSeq[String](1)
+      val keys =
+        if (sh == null || sh.isEmpty) Array.emptyLongArray
+        else {
+          val mins = Array.fill(rowsPerBand * bands)(Long.MaxValue)
+          sh.foreach { s =>
+            val seeded = hash.seededOf(s)
+            var h = 0
+            while (h < mins.length) {
+              mins(h) = math.min(mins(h), seeded(h))
+              h += 1
+            }
+          }
+          Array.tabulate(bands)(b =>
+            hash.seededOf(
+              mins.slice(b * rowsPerBand, (b + 1) * rowsPerBand)
+                .mkString(","))(b))
+        }
+      Row(r.get(0), sh, keys)
+    })(Encoders.row(schema))
+  }
+
+  /** Per-doc 64-bit SimHash signatures: bit b is set iff the ±1 votes
+    * (bit b of each token's `hash.one`) over the lowercased token
+    * multiset sum above 0. One row-wise pass, no shuffle: the hashes run
+    * in the task through [[Hash64.oneOf]], which equals the column form.
+    * NULL text yields 0. Returns (id, sim) per input row, so ids must be
+    * unique to give one signature per id.
     */
   def simhashSignatures(
       docs: DataFrame,
@@ -140,34 +174,27 @@ object Dedup {
       textCol: String,
       hash: Hash64 = Hash64.Xx,
   ): DataFrame = {
-    // split() of any STRING yields >= 1 token ("" for empty text), so the
-    // explode keeps every non-null document; NULL text explodes to zero
-    // rows, and the left join at the end restores those docs with
-    // signature 0 — matching Text.simhash64(NULL) = 0L exactly (its
-    // per-bit `when(NULL > 0, ...)` takes the otherwise-branch for every
-    // bit) instead of silently dropping the document from the sweep
-    val hashed = docs
-      .select(
-        col(idCol).as("id"),
-        explode(Text.tokens(lower(col(textCol)))).as("t"),
-      )
-      .select(col("id"), hash.one(col("t")).as("h"))
-    val voteCols = (0 until 64).map { b =>
-      sum(
-        when(shiftright(col("h"), b).bitwiseAND(lit(1L)) === 1L, lit(1L))
-          .otherwise(lit(-1L))
-      ).as(s"v$b")
-    }
-    val votes = hashed.groupBy("id").agg(voteCols.head, voteCols.tail: _*)
-    // bit-pack via an OR chain, NOT a sum: 1L << 63 is Long.MinValue and
-    // an ANSI-mode sum would overflow; OR matches Text.simhash64 exactly
-    val sim = (0 until 64)
-      .map(b => when(col(s"v$b") > 0, lit(1L << b)).otherwise(lit(0L)))
-      .reduce(_ bitwiseOR _)
-    docs
-      .select(col(idCol).as("id"))
-      .join(votes.select(col("id"), sim.as("sim")), Seq("id"), "left_outer")
-      .select(col("id"), coalesce(col("sim"), lit(0L)).as("sim"))
+    val toks = docs.select(
+      col(idCol).as("id"),
+      Text.tokens(lower(col(textCol))).as("toks"),
+    )
+    val schema = StructType(Seq(
+      toks.schema("id"), StructField("sim", LongType, nullable = false)))
+    toks.mapPartitions(_.map { r =>
+      val ts = r.getSeq[String](1)
+      val votes = new Array[Int](64)
+      if (ts != null) ts.foreach { t =>
+        val h = hash.oneOf(t)
+        var b = 0
+        while (b < 64) {
+          votes(b) += (if ((h >>> b & 1L) == 1L) 1 else -1)
+          b += 1
+        }
+      }
+      val sim = (0 until 64)
+        .foldLeft(0L)((acc, b) => if (votes(b) > 0) acc | 1L << b else acc)
+      Row(r.get(0), sim)
+    })(Encoders.row(schema))
   }
 
   /** SimHash near-duplicate pairs within a hamming radius. Complete for

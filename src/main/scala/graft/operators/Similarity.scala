@@ -478,10 +478,11 @@ object Similarity {
       asDouble(col(vecCol)).as("vec"),
     )
     // SRP projections on the CODEGEN path: posexplode the vector, then
-    // numBands·bandBits conditional ±x sums — the same explode+agg trick
-    // as [[graft.operators.Dedup.simhashSignatures]] ([[srpBits]]'s
+    // numBands·bandBits conditional ±x sums grouped by id ([[srpBits]]'s
     // nested array lambdas are CodegenFallback; measured ~3x slower on
-    // this operator). Identical semantics: bit i = [round(Σ_d ±vec[d],
+    // this operator). The explode + groupBy regroups rows that never
+    // left their partition: Dedup's sketches replaced the same shape with
+    // one row-wise pass. Identical semantics: bit i = [round(Σ_d ±vec[d],
     // 6) > 0] with the same hash.pair(i, d) hyperplane signs and the
     // same rounded sign test. Docs with NULL/empty vectors drop out of
     // the explode — they could never pass the cosine verify anyway

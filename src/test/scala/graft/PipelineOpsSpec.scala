@@ -2,6 +2,8 @@ package graft
 
 import graft.functions.{Hash64, Text}
 import graft.operators.{Dedup, FakeDecoder, Multimodal, Similarity}
+import graft.oracle.SketchRef
+import graft.oracle.SketchRef.simhash64
 import org.apache.spark.sql.catalyst.expressions.ArrayAggregate
 import org.apache.spark.sql.functions._
 
@@ -106,7 +108,7 @@ class PipelineOpsSpec extends GraftSuite {
 
   test("simhash: hamming(near-dups) small, hamming(random) large; pairs complete") {
     val sigs = docsDf
-      .select(col("doc_id"), Text.simhash64(col("text")).as("s"))
+      .select(col("doc_id"), simhash64(col("text")).as("s"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     def ham(a: Long, b: Long) = java.lang.Long.bitCount(sigs(a) ^ sigs(b))
     assert(sigs(200L) == sigs(201L), "identical text -> identical simhash")
@@ -161,17 +163,16 @@ class PipelineOpsSpec extends GraftSuite {
       val fast = Dedup.simhashSignatures(docsDf, "doc_id", "text", h)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       val slow = docsDf
-        .select(col("doc_id"), Text.simhash64(col("text"), h).as("s"))
+        .select(col("doc_id"), simhash64(col("text"), h).as("s"))
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(fast == slow, s"mode $h")
       if (h == Hash64.Portable)
         // 60-bit hash => bits 60..63 never get a positive vote
         assert(fast.values.forall(s => (s >>> 60) == 0L))
     }
-    // empty / whitespace-only / NULL text must not drop out of the
-    // explode path: NULL explodes to zero rows, and the doc must come
-    // back with signature 0 (= Text.simhash64(NULL), whose per-bit
-    // `when` swallows the NULL), not vanish from the sweep
+    // empty / whitespace-only / NULL text must not drop out: a NULL-text
+    // doc must come back with signature 0 (= simhash64(NULL), whose
+    // per-bit `when` swallows the NULL), not vanish from the sweep
     val edge = Seq((1L, ""), (2L, "   "), (3L, null))
       .toDF("doc_id", "text")
     def sigMap(rows: Array[org.apache.spark.sql.Row]) =
@@ -181,10 +182,74 @@ class PipelineOpsSpec extends GraftSuite {
     val fastE = sigMap(
       Dedup.simhashSignatures(edge, "doc_id", "text").collect())
     val slowE = sigMap(edge
-      .select(col("doc_id"), Text.simhash64(col("text")).as("s"))
+      .select(col("doc_id"), simhash64(col("text")).as("s"))
       .collect())
     assert(fastE == slowE && fastE.size == 3)
     assert(fastE(3L).contains(0L), "NULL text must yield signature 0")
+  }
+
+  test("scalar hashes == column hashes, both hash modes, seeds 0..63") {
+    val r = new scala.util.Random(17)
+    val alphabet = "abcxyz019 ,.#\tüïéñß€中"
+    def rand(n: Int) =
+      Seq.fill(n)(alphabet(r.nextInt(alphabet.length))).mkString
+    val strings = Seq("", " ", "  \t\n ", "ünïcode", "a", "hello world",
+      "tok#7", "42", "-17", "m1,m2,m3#4", "x" * 1024, rand(1024)) ++
+      Seq.fill(30)(rand(r.nextInt(40)))
+    val seeds = 0 until 64
+    for (h <- Seq[Hash64](Hash64.Xx, Hash64.Portable)) {
+      val want = strings.map(s => h.oneOf(s) +: seeds.map(h.seededOf(s)))
+      // literal operands (folded on the driver) ...
+      val lits = spark.range(1)
+        .select(strings.flatMap(s =>
+          h.one(lit(s)) +: seeds.map(k => h.seeded(lit(s), k))): _*)
+        .head().toSeq.map(_.asInstanceOf[Long]).grouped(65).toSeq
+      assert(lits == want, s"mode $h, literal operands")
+      // ... and a column of rows (generated code), as the sketches read
+      val rows = strings.toDF("s").repartition(2)
+        .select(col("s") +: h.one(col("s")) +:
+          seeds.map(k => h.seeded(col("s"), k)): _*)
+        .collect().map(r => r.getString(0) -> r.toSeq.tail).toMap
+      assert(strings.map(rows) == want, s"mode $h, column operands")
+    }
+  }
+
+  test("minhash band keys == explode + min + bandKeys reference, both modes") {
+    val edgeDocs = Seq[(Long, String)](
+      (500L, null), (501L, ""), (502L, "  \t "), (503L, "two words"),
+      (504L, "a b a b a b a b a"), (505L, "ünïcode wörds ärë hërë tóó"))
+      .toDF("doc_id", "text")
+    val in = docsDf.select("doc_id", "text").unionByName(edgeDocs)
+    for {
+      h <- Seq[Hash64](Hash64.Xx, Hash64.Portable)
+      threshold <- Seq(0.5, 0.3)
+    } {
+      val (r, b) = Dedup.lshParams(32, threshold)
+      def sorted(df: org.apache.spark.sql.DataFrame) = df.collect()
+        .map(x => (x.getLong(0), x.getLong(1))).toSeq.sorted
+      val got = sorted(Dedup.minhashBands(in, "doc_id", "text", 3, r, b, h)
+        .select(col("id"), explode(col("bands"))))
+      val want = sorted(
+        SketchRef.minhashBands(in, "doc_id", "text", 3, r, b, h))
+      assert(got == want, s"mode $h, threshold $threshold")
+      // every doc with text has b keys; NULL text has none
+      val perDoc = got.groupBy(_._1).map { case (id, ks) => id -> ks.size }
+      assert(perDoc.size == docs.size + 5 && perDoc.values.forall(_ == b),
+        s"mode $h: $perDoc")
+    }
+  }
+
+  test("sketch plans: one minhash checkpoint, no simhash aggregate or join") {
+    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join}
+    import org.apache.spark.sql.execution.LogicalRDD
+    val pairs = Dedup.minhashPairs(docsDf, "doc_id", "text")
+    val cuts = pairs.queryExecution.analyzed
+      .collect { case l: LogicalRDD => l.rdd.id }.distinct
+    assert(cuts.size == 1, s"checkpoints read: $cuts")
+    val sims = Dedup.simhashSignatures(docsDf, "doc_id", "text")
+      .queryExecution.optimizedPlan
+    assert(sims.collect { case a: Aggregate => a }.isEmpty, sims.toString)
+    assert(sims.collect { case j: Join => j }.isEmpty, sims.toString)
   }
 
   test("jaccard block cap: all-pairs core + representative-only tail") {
