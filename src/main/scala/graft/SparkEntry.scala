@@ -63,6 +63,15 @@ object SparkEntry {
       .as[Edge]
   }
 
+  /** Loud guard for a query whose DuckDB oracle unrolls `unroll` rounds:
+    * a dataset needing more would converge fine in the engine but FREEZE
+    * mid-run in the oracle, so fail naming the cause instead of surfacing
+    * as an opaque hash mismatch.
+    */
+  private def withinUnroll(query: String, rounds: Int, unroll: Int): Unit =
+    require(rounds <= unroll, s"$query: engine took $rounds rounds but the " +
+      s"unrolled oracle covers $unroll — widen the oracle unroll")
+
   /** One HyperBall register chain per (session, dir, hash mode), shared
     * by q_hyperball / q_harmonic / q_neighborhood — the three queries
     * are pure derivations over the same chain (round-4 advice: each
@@ -226,9 +235,13 @@ object SparkEntry {
     // (sf0.01: 935 of 1880 vertices survive after 10 synchronous
     // rounds — measured, well inside the oracle's 32-round unroll)
     "q_kcore" -> { (s, d) =>
-      KCore.run(
+      val res = KCore.run(
         partEdgeDs(s, d).filter(col("weight") >= 2.0),
-        k = 3, distinctCanonical = true).core
+        k = 3, distinctCanonical = true)
+      // `iterations` counts the last round too, which deactivates nobody
+      // unless it empties the graph, so the guard holds one round slack
+      withinUnroll("q_kcore", res.iterations, 32)
+      res.core
     },
     // multi-source BFS hop distance from the vid%10==0 seed set over the
     // same weight>=2 subgraph (the full graph has diameter ~2; the
@@ -240,7 +253,11 @@ object SparkEntry {
       val edges = Superstep
         .cut(partEdgeDs(s, d).filter(col("weight") >= 2.0).toDF()).as[Edge]
       val seeds = Superstep.vertices(edges).where(col("vid") % 10 === 0)
-      Bfs.run(edges, seeds, distinctCanonical = true).dists
+      val res = Bfs.run(edges, seeds, distinctCanonical = true)
+      // `iterations` = max hop + 1 (the last round reaches nothing), so
+      // the guard holds one round slack
+      withinUnroll("q_bfs_hops", res.iterations, 16)
+      res.dists
     },
     // sampled stress centrality (Shimbel 1953) over the same weight>=2
     // subgraph, seeds vid%20==0, T=4 truncation: # shortest paths of
@@ -256,17 +273,20 @@ object SparkEntry {
     },
     // weighted shortest path (delta Bellman-Ford) from the same seed set
     // over the same weight>=2 subgraph: min total co-occurrence weight.
-    // Engine fixpoint measured via AlgoProbe: 3/6/8 rounds at
-    // sf0.001/0.01/0.1 (maxDist 4/10/14) — the 16-round unrolled oracle
-    // carries 2x slack. Weights are integral counts, so distances are
+    // Engine fixpoint measured at 3/6/8 rounds at sf0.001/0.01/0.1
+    // (maxDist 4/10/14) — the 16-round unrolled oracle carries 2x slack,
+    // asserted below. Weights are integral counts, so distances are
     // exact integers in a double → cast BIGINT is lossless on both sides.
     "q_sssp_cost" -> { (s, d) =>
       import s.implicits._
       val edges = Superstep
         .cut(partEdgeDs(s, d).filter(col("weight") >= 2.0).toDF()).as[Edge]
       val seeds = Superstep.vertices(edges).where(col("vid") % 10 === 0)
-      Sssp.run(edges, seeds, distinctCanonical = true).dists
-        .select(col("vid"), col("dist").cast("long").as("dist"))
+      val res = Sssp.run(edges, seeds, distinctCanonical = true)
+      // `iterations` counts the last round too, which improves nobody,
+      // so the guard holds one round slack
+      withinUnroll("q_sssp_cost", res.iterations, 16)
+      res.dists.select(col("vid"), col("dist").cast("long").as("dist"))
     },
     // k-truss (k=3) of the repeat-co-occurrence subgraph: the maximal
     // subgraph where every edge closes >= 1 triangle WITHIN it —
@@ -274,7 +294,12 @@ object SparkEntry {
     // (oracle unrolls 8, stable past convergence like q_kcore);
     // sf0.01: 181 of 3445 edges survive
     "q_ktruss" -> { (s, d) =>
-      KTruss.run(partEdgeDs(s, d).filter(col("weight") >= 2.0), k = 3).edges
+      val res =
+        KTruss.run(partEdgeDs(s, d).filter(col("weight") >= 2.0), k = 3)
+      // `iterations` also counts the trace's closing "fixpoint" row when
+      // edges survive, so the guard then holds one round slack
+      withinUnroll("q_ktruss", res.iterations, 8)
+      res.edges
     },
     // HyperBall 4-round neighborhood sketches over the weight>=2
     // subgraph: per-vertex HLL registers (exact-match integers through
@@ -296,8 +321,8 @@ object SparkEntry {
     // hash priorities) over the weight>=2 subgraph: hash-palette init,
     // then per round every vertex sharing its color with a higher-
     // priority neighbor recolors to the mex of its neighbors' colors.
-    // Engine fixpoint measured via AlgoProbe: 5/3/2 rounds at
-    // sf0.001/0.01/0.1 — the 8-round unrolled oracle carries slack
+    // Engine fixpoint measured at 5/3/2 rounds at sf0.001/0.01/0.1 —
+    // the 8-round unrolled oracle carries slack
     // (a fixpoint is stable: conflict-free rounds are no-ops)
     "q_coloring" -> { (s, d) =>
       val res = Coloring.speculative(
@@ -306,15 +331,9 @@ object SparkEntry {
         hash = sketchHash,
         distinctCanonical = true,
       )
-      // the DuckDB oracle unrolls exactly 8 rounds; a dataset needing
-      // more would converge fine in the engine but FREEZE mid-run in the
-      // oracle — fail loudly naming the cause instead of surfacing as an
-      // opaque hash mismatch (fixpoint measured 5/3/2 rounds across sfs)
-      require(
-        res.rounds <= 8,
-        s"q_coloring: engine took ${res.rounds} rounds but the unrolled " +
-          "oracle covers 8 — widen the oracle unroll",
-      )
+      // `rounds` ends with the first round that finds no conflict and
+      // recolors nobody, so the guard holds one round slack
+      withinUnroll("q_coloring", res.rounds, 8)
       res.colors
     },
     // neighborhood function N(t) + 90%-effective diameter from the same
@@ -359,8 +378,8 @@ object SparkEntry {
     // maximal independent set (Luby, hash priorities) over the weight>=2
     // subgraph: exact-match deterministic through the pluggable hash —
     // the oracle replays every round's (priority, vid) competitions.
-    // Engine fixpoint measured via AlgoProbe: 4/3/2 rounds at
-    // sf0.001/0.01/0.1 — the 8-round unrolled oracle carries 2x slack
+    // Engine fixpoint measured at 4/3/2 rounds at sf0.001/0.01/0.1 —
+    // the 8-round unrolled oracle carries 2x slack
     // (a fixpoint is stable: once active is empty, rounds are no-ops)
     "q_mis" -> { (s, d) =>
       val res = Mis.run(
@@ -368,12 +387,9 @@ object SparkEntry {
         hash = sketchHash,
         distinctCanonical = true,
       )
-      // same loud guard as q_coloring: the oracle unrolls 8 rounds
-      require(
-        res.rounds <= 8,
-        s"q_mis: engine took ${res.rounds} rounds but the unrolled " +
-          "oracle covers 8 — widen the oracle unroll",
-      )
+      // `rounds` ends with the round that settles the last vertex, so
+      // the guard is exact
+      withinUnroll("q_mis", res.rounds, 8)
       res.mis
     },
     // eigenvector centrality: 8 L1-normalized power-iteration steps over
@@ -461,10 +477,8 @@ object SparkEntry {
         lit(1.0).as("weight"),
       ).as[Edge]
       val res = Scc.condense(oriented)
-      require(
-        res.rounds <= 16,
-        s"q_condensation: engine took ${res.rounds} relaxation rounds but " +
-          "the unrolled DuckDB oracle covers 16 — raise the unroll")
+      // `rounds` = DAG depth + 1 (the last round raises no level)
+      withinUnroll("q_condensation", res.rounds, 16)
       res.levels.select(col("scc"), col("level"), col("size"))
     },
     // link prediction: resource-allocation index over non-adjacent pairs

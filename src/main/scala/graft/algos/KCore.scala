@@ -29,8 +29,8 @@ final case class KCoreResult(core: DataFrame, iterations: Int)
   * engine's clique-heavy co-occurrence graphs convergence is fast
   * (measured: <= 12 rounds on every sf corpus). The q_kcore oracle
   * unrolls 32 rounds; a fixpoint is stable, so extra oracle rounds are
-  * harmless, and KCoreSpec pins engine convergence within the unroll
-  * budget on the driver corpora.
+  * harmless, and q_kcore fails loudly when the engine needs more rounds
+  * than the unroll covers.
   *
   * Multi-edges between a pair collapse to ONE undirected edge first
   * (degree = distinct-neighbor count — the standard k-core degree), and

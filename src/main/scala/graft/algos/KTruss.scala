@@ -67,7 +67,7 @@ object KTruss {
     *   drop count d exceeds m / fullRecountFactor (m = round-start edges),
     *   incremental otherwise. 8 is the measured crossover on the testdata
     *   graphs; pass 1 to force incremental always, Long.MaxValue to force
-    *   full always (both used by the equivalence specs and AlgoProbe).
+    *   full always (both used by the equivalence specs).
     */
   def run(
       edges: Dataset[Edge],
@@ -108,10 +108,12 @@ object KTruss {
         trace += KTrussRound(0L, m, "fixpoint")
       d == 0 || m == 0
     }
-    // seed: one full support pass over the whole graph
-    val seed = withSupports(base, p)
-    Internals.release(base)
-    val done = settled(seed.agg(peelStats.head, peelStats.tail: _*).head(), 0)
+    // seed: one full support pass over the whole graph, cut and counted
+    // by one job; then `base` and the pass's builder leaves are freed
+    val seedPlan = withSupports(base, p)
+    val (seed, seedRow) = Superstep.cutAndAgg(seedPlan, 0L, peelStats)
+    Internals.release(seedPlan)
+    val done = settled(seedRow, 0)
     val (cur, _) = Superstep.iterate(
       Nil, seed, 0L, if (done) 0 else maxIter,
       stats = peelStats,
@@ -204,7 +206,11 @@ object KTruss {
   /** Full per-edge support over `es` (canonical (a,b) rows): the seeded
     * triangle pass — degree-ordered orientation, sorted-adjacency
     * intersection, supports exploded in-pass; edges in no triangle get
-    * sup 0 via the final left join.
+    * sup 0 via the final left join. Lazy: the oriented edges and their
+    * adjacency are lazy checkpoints, each computed once by the caller's
+    * one action (a round's cut) and freed with the other leaves of the
+    * returned plan ([[Superstep.iterate]]'s release rule, or the seed's
+    * explicit release).
     */
   private def withSupports(es: DataFrame, p: Int): DataFrame = {
     val deg = es.select(col("a").as("vid"))
@@ -220,10 +226,10 @@ object KTruss {
         when(lower, col("b")).otherwise(col("a")).as("v"),
       )
       .repartition(p, col("u"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .localCheckpoint(false, StorageLevel.MEMORY_AND_DISK)
     val adj = oriented.groupBy(col("u"))
       .agg(sort_array(collect_list(col("v"))).as("nbrs"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .localCheckpoint(false, StorageLevel.MEMORY_AND_DISK)
     // supports explode out of the intersection pass as canonical pair
     // rows — adjacency order is by (deg, vid), so least/greatest
     // re-canonicalizes each credited edge
@@ -258,20 +264,12 @@ object KTruss {
       )
       .select(col("t.pa").as("a"), col("t.pb").as("b"), col("t.c").as("c"))
       .groupBy("a", "b").agg(sum("c").as("sup"))
-    // cut EAGERLY (localCheckpoint materializes) before dropping the
-    // builder caches — unpersisting first would recompute `oriented`
-    // four times through the lazy plan
-    val out = Superstep.cut(
-      es
-        .join(sup, Seq("a", "b"), "left_outer")
-        .select(
-          col("a"),
-          col("b"),
-          coalesce(col("sup"), lit(0L)).as("sup"),
-        )
-    )
-    oriented.unpersist(false)
-    adj.unpersist(false)
-    out
+    es
+      .join(sup, Seq("a", "b"), "left_outer")
+      .select(
+        col("a"),
+        col("b"),
+        coalesce(col("sup"), lit(0L)).as("sup"),
+      )
   }
 }

@@ -67,8 +67,8 @@ class ReleaseSpec extends GraftSuite {
       Seq(r.levels, r.scc.comps, r.scc.edgesCut)
     }),
     ("stress", 14, e => Seq(Stress.run(e, seeds(g)).scores)),
-    ("ktruss incr", 17, e => Seq(KTruss.run(e, 3, fullRecountFactor = 1L).edges)),
-    ("ktruss full", 23,
+    ("ktruss incr", 11, e => Seq(KTruss.run(e, 3, fullRecountFactor = 1L).edges)),
+    ("ktruss full", 7,
       e => Seq(KTruss.run(e, 3, fullRecountFactor = Long.MaxValue).edges)),
   )
 
