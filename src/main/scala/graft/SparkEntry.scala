@@ -28,14 +28,16 @@ object SparkEntry {
 
   /** Parallelize heavy per-row work after a narrow scan (guide §2.5,
     * "input skew: one huge unsplittable file"): the testdata parquet
-    * files are single row-group, so every scan is ONE task and the
-    * expensive per-row stages (tokenize / shingle / minhash signatures /
-    * SRP projections / regex) that run before the first exchange would
-    * execute single-threaded. When the scan yields materially fewer
-    * partitions than the session's shuffle parallelism, one round-robin
-    * repartition spreads the rows first; production multi-file scans
-    * already arrive parallel and pass through untouched (the condition
-    * is derived from the observed scan layout, never a constant).
+    * files are one file of one row group each, so every scan is ONE task
+    * and the expensive per-row stages (tokenize / shingle / minhash
+    * signatures / SRP projections / regex) that run before the first
+    * exchange would execute single-threaded. When the scan reads
+    * materially fewer files than the session's shuffle parallelism, one
+    * round-robin repartition spreads the rows first; production
+    * multi-file scans already arrive parallel and pass through untouched
+    * (the condition is derived from the scan's file list, never a
+    * constant). The file list comes from the optimized logical plan, so
+    * the gate plans no physical scan (`df.rdd` would).
     * Results are unaffected: every downstream contract in this file is
     * partitioning-independent by design (exact-integer or per-row
     * surfaces — the cross-engine hash-match requirement already forbids
@@ -43,7 +45,7 @@ object SparkEntry {
     */
   private def spread(df: DataFrame): DataFrame = {
     val p = df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
-    if (df.rdd.getNumPartitions * 2 < p) df.repartition(p) else df
+    if (df.inputFiles.length * 2 < p) df.repartition(p) else df
   }
 
   /** [[spread]] + one materialization for queries whose plan consumes

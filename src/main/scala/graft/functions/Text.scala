@@ -15,6 +15,12 @@ import org.apache.spark.sql.functions._
   * ELEMENT, and these lambdas are interpreted (CodegenFallback), so
   * nothing shares the work. Bind such a value with [[let]] first and use
   * the bound variable inside the lambda.
+  *
+  * One scalar form rides along: [[shinglesOf]] computes [[shingles]] over
+  * a row's tokens inside a task. Use it only where an operator already
+  * runs a `mapPartitions` over `tokens(lower(text))` and would otherwise
+  * pay for the interpreted window lambda; everywhere else (and in every
+  * DuckDB-mirrored query) the column form stays.
   */
 object Text {
 
@@ -116,6 +122,27 @@ object Text {
             i => concat_ws(" ", slice(toks, i + 1, lit(n))),
           )
         )
+    }
+
+  /** [[shingles]] over tokens already in a task: the same windows joined
+    * by " ", and fewer than `n` tokens give the one re-joined shingle.
+    * Null tokens give null. For operators that sketch each row inside a
+    * `mapPartitions` over the codegen'd `tokens(lower(text))`, where the
+    * column form would be an interpreted window lambda. `TextSpec` pins
+    * it to [[shingles]]; the two must not drift apart.
+    */
+  private[graft] def shinglesOf(tokens: Seq[String], n: Int): Array[String] =
+    if (tokens == null) null
+    else if (tokens.length < n) Array(tokens.mkString(" "))
+    else Array.tabulate(tokens.length - n + 1) { i =>
+      val sb = new java.lang.StringBuilder
+      var j = i
+      while (j < i + n) {
+        if (j > i) sb.append(' ')
+        sb.append(tokens(j))
+        j += 1
+      }
+      sb.toString
     }
 
   /** Split a 64-bit simhash into `chunks` equal bit-chunks; two docs within

@@ -1,13 +1,15 @@
 package graft.operators
 
 import graft.functions.{Hash64, Text}
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Corpus-level training-data operators: deterministic sampling and
   * term-weight statistics. Like the rest of the layer, built-in
-  * expressions only, deterministic outputs, DuckDB-mirrorable.
+  * expressions (but [[qualitySignals]]' bigram counts, a row-wise task
+  * pass), deterministic outputs, DuckDB-mirrorable.
   */
 object Corpus {
 
@@ -88,12 +90,15 @@ object Corpus {
     * templated text). `keep` applies the thresholds to the ROUNDED
     * metrics, so the flag is reproducible anywhere the metrics are.
     *
-    * Scale shape: everything but the bigram aggregate is a per-row
-    * codegen expression (the token-length sum rides
+    * Scale shape: one row-wise pass, no shuffle. The rounded metrics and
+    * `keep` are codegen expressions (the token-length sum rides
     * `length(concat_ws("", toks))` — no interpreted array lambda); the
-    * bigram top-share is a two-level (doc, bigram) count whose partial
-    * aggregate collapses each doc's repeats map-side, then a per-doc
-    * max/sum — grouped on doc id, so no corpus-hot key exists.
+    * bigram counts run in the task: [[Text.shinglesOf]]`(toks, 2)` into
+    * a per-doc hash map, giving the top count and the total.
+    *
+    * One row per input row with non-null text (NULL text has no tokens
+    * and no row). That equals a per-id result whenever ids are unique,
+    * as they are for every caller (`doc_id`).
     */
   def qualitySignals(
       docs: DataFrame,
@@ -107,6 +112,7 @@ object Corpus {
     val toks = Text.tokens(lower(col(textCol)))
     val base = docs
       .select(col(idCol).as("id"), toks.as("toks"))
+      .where(col("toks").isNotNull)
       .select(
         col("id"),
         size(col("toks")).cast("long").as("n_words"),
@@ -120,21 +126,33 @@ object Corpus {
             / size(col("toks")),
           6,
         ).as("distinct_word_frac"),
+        col("toks"),
       )
-    val topBigram = docs
+    // (top, total) bigram counts replace the trailing toks column
+    val schema = StructType(base.schema.init ++ Seq(
+      StructField("top_bigram", LongType, nullable = false),
+      StructField("bigrams", LongType, nullable = false),
+    ))
+    val counted = base.mapPartitions(_.map { r =>
+      val grams = Text.shinglesOf(r.getSeq[String](4), 2)
+      val counts = scala.collection.mutable.HashMap.empty[String, Int]
+      var top = 0
+      grams.foreach { g =>
+        val c = counts.getOrElse(g, 0) + 1
+        counts(g) = c
+        top = math.max(top, c)
+      }
+      Row.fromSeq(r.toSeq.init :+ top.toLong :+ grams.length.toLong)
+    })(Encoders.row(schema))
+    counted
       .select(
-        col(idCol).as("id"),
-        explode(Text.shingles(col(textCol), 2)).as("g"),
+        col("id"),
+        col("n_words"),
+        col("mean_word_len"),
+        col("distinct_word_frac"),
+        round(col("top_bigram").cast("double") / col("bigrams"), 6)
+          .as("top_bigram_frac"),
       )
-      .groupBy("id", "g")
-      .agg(count(lit(1)).as("c"))
-      .groupBy("id")
-      .agg(
-        round(max(col("c")).cast("double") / sum(col("c")), 6)
-          .as("top_bigram_frac")
-      )
-    base
-      .join(topBigram, Seq("id"))
       .select(
         col("*"),
         (col("n_words") >= minWords &&

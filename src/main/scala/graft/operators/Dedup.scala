@@ -5,16 +5,19 @@ import graft.functions.{Hash64, Text}
 import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, LongType, StructField, StructType}
+import org.apache.spark.sql.types.{
+  ArrayType, DoubleType, LongType, StringType, StructField, StructType}
 
 /** Deduplication operators for the training-data pipeline layer.
   *
   * Four families (exact, MinHash+LSH, SimHash, token-set Jaccard), all
-  * deterministic, all built-in expressions but the two per-doc sketches,
-  * each one row-wise pass of [[Hash64]]'s scalar forms. The LSH variants
-  * are the 100 TB designs: no stage is all-pairs over the corpus —
-  * candidates come from equality joins on band/chunk keys, so cost
-  * scales with the duplicate density, not |C|².
+  * deterministic, all built-in expressions but three row-wise task
+  * passes: the two per-doc sketches (shingles through
+  * [[Text.shinglesOf]], hashes through [[Hash64]]'s scalar forms) and
+  * the minhash Jaccard verify (one merge of two sorted shingle sets).
+  * The LSH variants are the 100 TB designs: no stage is all-pairs over
+  * the corpus — candidates come from equality joins on band/chunk keys,
+  * so cost scales with the duplicate density, not |C|².
   */
 object Dedup {
 
@@ -53,7 +56,9 @@ object Dedup {
     * [[lshParams]]; see [[minhashBands]]) → explode → ids-only self-join
     * on band key → distinct pairs → exact Jaccard verify (shingle sets
     * re-joined per side — the wide arrays never ride the candidate
-    * shuffle). Returns (id_a, id_b, jaccard), id_a < id_b.
+    * shuffle — and their sorted intersection counted in the task).
+    * Returns (id_a, id_b, jaccard), id_a < id_b, with jaccard =
+    * |a ∩ b| / |a ∪ b| as a double.
     *
     * Recall contract: the verify step makes precision exact (only pairs
     * with jaccard >= threshold are returned), while LSH banding makes
@@ -76,11 +81,7 @@ object Dedup {
     val (rowsPerBand, bands) = lshParams(numHashes, threshold)
     // materialized ONCE (eager cut): read four times downstream — the
     // band explode of each self-join side plus one verify fetch per pair
-    // side. Shingling is the operator's costliest step: its window
-    // lambda is interpreted (CodegenFallback) and reads the tokens once
-    // per window, so Text.shingles binds them once per row (Text.let).
-    // Re-split per window, 3-shingles of 6,000 40-word docs took 1.1 s
-    // instead of 0.31 s (local[4] on 4 cores, warm)
+    // side
     val sketched = Superstep.cut(
       minhashBands(docs, idCol, textCol, shingleLen, rowsPerBand, bands,
         hash))
@@ -96,26 +97,50 @@ object Dedup {
     val verified = cand
       .join(sh.select(col("id").as("id_a"), col("sh").as("sh_a")), "id_a")
       .join(sh.select(col("id").as("id_b"), col("sh").as("sh_b")), "id_b")
-    val inter = size(array_intersect(col("sh_a"), col("sh_b")))
-    val union = size(col("sh_a")) + size(col("sh_b")) - inter
-    verified
-      .select(
-        col("id_a"),
-        col("id_b"),
-        (inter.cast("double") / union.cast("double")).as("jaccard"),
-      )
-      .where(col("jaccard") >= threshold)
+      .select("id_a", "id_b", "sh_a", "sh_b")
+    // the verify runs in the task: both shingle sets are sorted
+    // (minhashBands), so one merge counts their intersection
+    val schema = StructType(Seq(
+      verified.schema("id_a"),
+      verified.schema("id_b"),
+      StructField("jaccard", DoubleType),
+    ))
+    verified.mapPartitions(_.flatMap { r =>
+      val a = r.getSeq[String](2)
+      val b = r.getSeq[String](3)
+      val inter = sortedOverlap(a, b)
+      val jaccard = inter.toDouble / (a.length + b.length - inter).toDouble
+      if (jaccard >= threshold) Some(Row(r.get(0), r.get(1), jaccard))
+      else None
+    })(Encoders.row(schema))
+  }
+
+  /** Size of the intersection of two sorted, duplicate-free arrays. */
+  private def sortedOverlap(a: Seq[String], b: Seq[String]): Int = {
+    var i = 0
+    var j = 0
+    var n = 0
+    while (i < a.length && j < b.length) {
+      val c = a(i).compareTo(b(j))
+      if (c <= 0) i += 1
+      if (c >= 0) j += 1
+      if (c == 0) n += 1
+    }
+    n
   }
 
   /** Per-doc distinct shingles and LSH band keys: (id, sh, bands).
     *
-    * One narrow pass per input row, no shuffle: signature entry h is the
+    * One narrow pass per input row, no shuffle. `sh` is the row's
+    * distinct [[Text.shingles]], built in the task by [[Text.shinglesOf]]
+    * over the codegen'd `Text.tokens(lower(text))` and stored SORTED:
+    * [[minhashPairs]]' verify merges two of them. Signature entry h is the
     * minimum over the row's shingles of `hash.seeded(shingle, h)`, and
     * band b's key is `hash.seeded(join(",", entries of band b), b)` over
     * its `rowsPerBand` consecutive entries as decimal strings (one form
     * for both hash modes; band keys are internal, only their equality
     * matters). Docs sharing ANY band key are near-duplicate candidates.
-    * A null or empty `sh` has no bands. The hashes run in the task
+    * NULL text has a null `sh` and no bands. The hashes run in the task
     * through [[Hash64.seededOf]], which equals the column form.
     *
     * Sketches are per input row: equal to a per-id aggregate whenever
@@ -132,16 +157,21 @@ object Dedup {
       bands: Int,
       hash: Hash64,
   ): DataFrame = {
-    val shingled = docs.select(
+    val toks = docs.select(
       col(idCol).as("id"),
-      array_distinct(Text.shingles(col(textCol), shingleLen)).as("sh"),
+      Text.tokens(lower(col(textCol))).as("toks"),
     )
-    val schema = shingled.schema
-      .add("bands", ArrayType(LongType, containsNull = false), false)
-    shingled.mapPartitions(_.map { r =>
-      val sh = r.getSeq[String](1)
+    val schema = StructType(Seq(
+      toks.schema("id"),
+      StructField("sh", ArrayType(StringType, containsNull = false)),
+      StructField("bands", ArrayType(LongType, containsNull = false),
+        nullable = false),
+    ))
+    toks.mapPartitions(_.map { r =>
+      val sh = Option(Text.shinglesOf(r.getSeq[String](1), shingleLen))
+        .map(_.distinct.sorted).orNull
       val keys =
-        if (sh == null || sh.isEmpty) Array.emptyLongArray
+        if (sh == null) Array.emptyLongArray
         else {
           val mins = Array.fill(rowsPerBand * bands)(Long.MaxValue)
           sh.foreach { s =>
@@ -353,7 +383,7 @@ object Dedup {
       .select(col("id"), col("pos"), hash.one(col("g")).as("fp"))
     // materialized ONCE: both the duplicate-fingerprint aggregate and the
     // position fetch read it, and the gram window lambda is interpreted
-    // (CodegenFallback) — same pattern as minhashPairs' shingles
+    // (CodegenFallback)
     val g = Superstep.cut(grams)
     val dupFp = g.groupBy("fp")
       .agg(count(lit(1)).as("cnt"))

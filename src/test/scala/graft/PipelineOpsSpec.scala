@@ -214,11 +214,15 @@ class PipelineOpsSpec extends GraftSuite {
     }
   }
 
+  /** Sketch edge cases: NULL, empty, whitespace-only, short, repeated
+    * and unicode text.
+    */
+  private lazy val edgeDocs = Seq[(Long, String)](
+    (500L, null), (501L, ""), (502L, "  \t "), (503L, "two words"),
+    (504L, "a b a b a b a b a"), (505L, "ünïcode wörds ärë hërë tóó"))
+    .toDF("doc_id", "text")
+
   test("minhash band keys == explode + min + bandKeys reference, both modes") {
-    val edgeDocs = Seq[(Long, String)](
-      (500L, null), (501L, ""), (502L, "  \t "), (503L, "two words"),
-      (504L, "a b a b a b a b a"), (505L, "ünïcode wörds ärë hërë tóó"))
-      .toDF("doc_id", "text")
     val in = docsDf.select("doc_id", "text").unionByName(edgeDocs)
     for {
       h <- Seq[Hash64](Hash64.Xx, Hash64.Portable)
@@ -236,6 +240,63 @@ class PipelineOpsSpec extends GraftSuite {
       val perDoc = got.groupBy(_._1).map { case (id, ks) => id -> ks.size }
       assert(perDoc.size == docs.size + 5 && perDoc.values.forall(_ == b),
         s"mode $h: $perDoc")
+    }
+  }
+
+  test("minhash pairs == array_intersect verify reference, both modes") {
+    // plus a block of 30 identical docs: 435 pairs at jaccard 1.0
+    val block = (600L until 630L)
+      .map(i => (i, "one shared text for the whole identical block"))
+      .toDF("doc_id", "text")
+    val in = docsDf.select("doc_id", "text")
+      .unionByName(edgeDocs).unionByName(block)
+    for {
+      h <- Seq[Hash64](Hash64.Xx, Hash64.Portable)
+      threshold <- Seq(0.5, 0.3)
+    } {
+      def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
+        .map(x => (x.getLong(0), x.getLong(1), x.getDouble(2))).toSeq.sorted
+      val got = rows(Dedup.minhashPairs(in, "doc_id", "text", 3, 32,
+        threshold, h))
+      val want = rows(SketchRef.minhashPairs(in, "doc_id", "text", 3, 32,
+        threshold, h))
+      assert(got == want, s"mode $h, threshold $threshold")
+      assert(got.count(p => p._1 >= 600L && p._3 == 1.0) == 435,
+        s"mode $h, threshold $threshold")
+      assert(got.exists(_._3 < 1.0), s"mode $h, threshold $threshold")
+    }
+  }
+
+  test("quality signals == explode + groupBy bigram reference on edge docs") {
+    import graft.operators.Corpus
+    val in = docsDf.select("doc_id", "text").unionByName(edgeDocs)
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getDouble(3),
+        r.getDouble(4), r.getBoolean(5)))
+      .toSeq.sortBy(_._1)
+    val got = rows(Corpus.qualitySignals(in, "doc_id", "text",
+      minWords = 20, meanWordLen = (3.0, 6.0), maxTopBigramFrac = 0.1))
+    val want = rows(SketchRef.qualitySignals(in, "doc_id", "text",
+      minWords = 20, meanWordLen = (3.0, 6.0), maxTopBigramFrac = 0.1))
+    assert(got == want)
+    // one row per doc with text; NULL text (500) has none
+    assert(got.map(_._1) == (docs.map(_._1) ++ (501L to 505L)).sorted)
+    assert(got.exists(_._6) && got.exists(!_._6))
+  }
+
+  test("minhash plans: no ArrayIntersect, no lambda function") {
+    import org.apache.spark.sql.catalyst.expressions.{ArrayIntersect, LambdaFunction}
+    val (r, b) = Dedup.lshParams(32, 0.5)
+    for (df <- Seq(
+      Dedup.minhashPairs(docsDf, "doc_id", "text"),
+      Dedup.minhashBands(docsDf, "doc_id", "text", 3, r, b, Hash64.Xx),
+    )) {
+      val plan = df.queryExecution.optimizedPlan
+      val found = plan.flatMap(_.expressions.flatMap(_.collect {
+        case e: ArrayIntersect => e
+        case e: LambdaFunction => e
+      }))
+      assert(found.isEmpty, plan.toString)
     }
   }
 

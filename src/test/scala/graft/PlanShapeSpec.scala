@@ -246,8 +246,9 @@ class PlanShapeSpec extends GraftSuite {
   }
 
   test("quality signals: scalar metrics ride the scan shuffle-free") {
-    // doc_id must not be provably unique (Range ids are — Spark 4 then
-    // elides the aggregation exchanges; the IVF pin has the same note)
+    // doc_id is not provably unique (Range ids are — Spark 4 would elide
+    // a per-id aggregation's exchanges; the IVF pin has the same note),
+    // so the 0 below is the operator's shape, not Spark's elision
     val df = spark.range(500)
       .select((col("id") % 1000).as("doc_id"),
         concat(lit("w"), (col("id") % 9).cast("string"), lit(" x y"))
@@ -255,13 +256,13 @@ class PlanShapeSpec extends GraftSuite {
     val plan = graft.operators.Corpus
       .qualitySignals(df, "doc_id", "text")
       .queryExecution.executedPlan.toString
-    // exactly the bigram path's two aggregation exchanges — the per-row
-    // metrics (word count, mean length, distinct fraction) must NOT add
-    // a third: they are computed in the projection feeding the join, and
-    // the token-length sum is length(concat_ws(...)), not an interpreted
-    // array-aggregate lambda
+    // no exchange at all: the per-row metrics (word count, mean length,
+    // distinct fraction) are codegen projections over the scan, the
+    // token-length sum is length(concat_ws(...)), not an interpreted
+    // array-aggregate lambda, and the bigram top/total counts run in one
+    // row-wise task pass, not as a (doc, bigram) aggregate joined back
     val shuffles = "Exchange hashpartitioning".r.findAllIn(plan).length
-    assert(shuffles == 2, s"expected 2 shuffles, got $shuffles:\n$plan")
+    assert(shuffles == 0, s"expected 0 shuffles, got $shuffles:\n$plan")
     assert(!plan.contains("CodegenFallback"), plan)
   }
 

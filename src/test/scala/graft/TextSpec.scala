@@ -6,6 +6,7 @@ import org.apache.spark.sql.catalyst.expressions.StringSplit
 import org.apache.spark.sql.functions._
 
 /** `Text.shingles` and `Text.langGuess` against plain-Scala references,
+  * `Text.shinglesOf` (the scalar form) against `Text.shingles`,
   * plus the plan property that keeps them cheap: the text is tokenized
   * once per row, not once per window (a `Column` used inside a lambda is
   * evaluated again for every element).
@@ -97,6 +98,21 @@ class TextSpec extends GraftSuite {
       assert(got(id) == ref(text), s"text=$text")
     }
     assert(got.values.toSet == Set("unknown", "en", "de", "fr", "es"))
+  }
+
+  test("shinglesOf over the row's tokens == shingles for n in {1, 2, 3, 13}") {
+    for (n <- Seq(1, 2, 3, 13)) {
+      docsDf
+        .select(col("id"), Text.tokens(lower(col("text"))),
+          Text.shingles(col("text"), n))
+        .collect()
+        .foreach { r =>
+          val got = Option(Text.shinglesOf(r.getSeq[String](1), n))
+            .map(_.toSeq)
+          val want = Option(r.getSeq[String](2)).map(_.toSeq)
+          assert(got == want, s"n=$n, id=${r.getLong(0)}")
+        }
+    }
   }
 
   test("shingles and langGuess tokenize each row once (one StringSplit)") {
