@@ -75,14 +75,15 @@ object SparkEntry {
       s"unrolled oracle covers $unroll — widen the oracle unroll")
 
   /** One HyperBall register chain per (session, dir, hash mode), shared
-    * by q_hyperball / q_harmonic / q_neighborhood — the three queries
-    * are pure derivations over the same chain (round-4 advice: each
-    * used to rebuild and re-run the identical 4-round scatter chain,
-    * tripling its cost per sweep). Results are unchanged — the chain's
-    * cut states are deterministic and session-stable — so per-query
-    * independence is preserved in OUTPUT; only the redundant recompute
-    * is gone. The memo is tiny (a handful of checkpointed |V|-row
-    * frames) and keyed on the sketch-hash mode because Verify flips it.
+    * by q_hyperball / q_harmonic / q_neighborhood / q_closeness — the
+    * four queries are pure derivations over the same chain (round-4
+    * advice: each used to rebuild and re-run the identical 4-round
+    * scatter chain). Results are unchanged — the chain's cut state is
+    * deterministic and session-stable — so per-query independence is
+    * preserved in OUTPUT; only the redundant recompute is gone. The memo
+    * holds one checkpointed |V|-row frame per key (registers plus every
+    * round's estimate), keyed on the sketch-hash mode because Verify
+    * flips it.
     */
   private val hbMemo = new java.util.concurrent.ConcurrentHashMap[
     (SparkSession, String, Boolean), graft.algos.HyperBallChain]

@@ -6,7 +6,6 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
 final case class HyperBallResult(
-    sketches: DataFrame, // (vid, idx, val) — sparse HLL registers
     estimates: DataFrame, // (vid, present, s_scaled, est_e7)
     rounds: Int,
 )
@@ -19,18 +18,16 @@ final case class HarmonicResult(
     scale: Long, // L — divide hc_scaled by L·1e7 for the real-valued HC
 )
 
-/** One materialized HyperBall register chain: the final sparse state
-  * plus the per-round estimate frames (t = 0..rounds, each
-  * (vid, present, s_scaled, est_e7) over that round's CUT state).
-  * Every HyperBall product — final estimates, harmonic centrality, the
-  * neighborhood function — is a cheap derivation over these frames, so
-  * callers that need several products build the chain ONCE and derive
-  * (the round-4 advice: the three driver queries used to re-run the
-  * identical 4-round scatter chain each).
+/** One materialized HyperBall register chain: one checkpointed row per
+  * vertex, (vid, r0..r15, e0..e<rounds>), holding its 16 registers after
+  * the last round and its est_e7 after every round t = 0..rounds.
+  * Every HyperBall product — final estimates, harmonic centrality,
+  * closeness, the neighborhood function — is one projection or one
+  * aggregate over this frame, so callers that need several products
+  * build the chain ONCE and derive.
   */
 final case class HyperBallChain(
     state: DataFrame,
-    perRound: Vector[DataFrame],
     rounds: Int,
 )
 
@@ -53,22 +50,23 @@ final case class HyperBallChain(
   *   S_scaled(v) = Σ_j 2^(58 − reg_j)   (empty register ⇒ 2^58),
   *   est(v)      = α₁₆·m² / Σ 2^(−reg_j) = 172.288 · 2^58 / S_scaled
   *
-  * with reg values in [1, 57] so every 2^(58−reg) is an exact BIGINT
-  * and S_scaled ≤ 16·2^57 < 2^63. The raw HLL estimator is used
+  * with reg values in [1, 57], and 0 for an empty register, so every
+  * term is an exact BIGINT and S_scaled ≤ 16·2^58 < 2^63. The raw HLL estimator is used
   * deliberately — the standard small-range linear-counting correction
   * needs ln(), which is not bit-portable across engines; the register
   * table itself is the exact-match surface, the estimate a derived
   * column.
   *
-  * Execution shape: registers are SPARSE (vid, idx, val) rows — a
-  * vertex's absent registers are zero, so a fresh vertex carries ONE
-  * row, and a t-ball sketch at most 16. One superstep = scatter the
-  * rows along edges + union the previous state + ONE repartition by
-  * vid; the (vid, idx) max-aggregate needs no further exchange because
-  * hash(vid) already clusters (vid, idx) — the exact plan shape of the
-  * label-propagation superstep. The chain keeps its own round loop,
-  * not [[Superstep.iterate]]: its result reads every round's state
-  * (`perRound`), and `iterate`'s release rule would free those states.
+  * Execution shape: the state is DENSE, one row per vertex carrying its
+  * 16 registers as INT columns r0..r15 and its per-round estimates as
+  * BIGINT columns e0..e<rounds> (null until their round runs). One
+  * superstep = scatter the registers along edges + union the previous
+  * state + ONE repartition by vid + a `max` per column (fixed-width
+  * buffers, so a codegen'd HashAggregate), then the round's estimate
+  * from the merged registers into the first null e_t — the plan shape
+  * of the label-propagation superstep, run by [[Superstep.iterate]].
+  * Every product reads only the last state, since it carries every
+  * round's estimate.
   */
 object HyperBall {
 
@@ -76,6 +74,9 @@ object HyperBall {
   val Registers = 16
   val Alpha16 = 0.673
   val MaxRho = 57 // 56 payload bits after the 4 index bits, +1 sentinel
+
+  private val registers = (0 until Registers).map(j => col(s"r$j"))
+  private def estimate(t: Int): Column = col(s"e$t")
 
   /** rho(q) = 1 + trailing zeros of q, capped for q = 0 — a when-chain of
     * pure integer masks so DuckDB evaluates it bit-identically.
@@ -90,10 +91,26 @@ object HyperBall {
     }.otherwise(lit(MaxRho))
   }
 
-  /** Run the register chain ONCE: T supersteps, each round's state cut
-    * (materialized), with the per-round estimate frames collected lazily
-    * over those cut states (they cost nothing until an action reads
-    * them). All public products derive from the returned chain.
+  /** S_scaled = Σ_j 2^(58 − r_j) over the register columns; an empty
+    * register (0) adds 2^58 with no special case.
+    */
+  private def sScaled: Column = registers
+    // shiftleft(Column, Int) has no column-shift overload — SQL form
+    .map(r => expr(s"shiftleft(CAST(1 AS BIGINT), 58 - $r)"))
+    .reduce(_ + _)
+
+  /** est_e7 from S_scaled: α₁₆·m²/Σ2^-reg = 0.673·256·2^58/S_scaled;
+    * 256·2^58 = 2^66 is exact in double, and the op order (fold α·2^66,
+    * divide, scale) mirrors the oracle SQL token-for-token.
+    */
+  private def estE7(s: Column): Column = round(
+    lit(Alpha16) * lit((1L << 58).toDouble * 256.0) / s.cast("double") * 1e7,
+    0,
+  ).cast("long")
+
+  /** Run the register chain ONCE: T supersteps through
+    * [[Superstep.iterate]], each round's state cut. All public products
+    * derive from the returned chain.
     */
   def chain(
       edges: Dataset[Edge],
@@ -106,45 +123,60 @@ object HyperBall {
     // (two-direction inputs, multi-edges) cannot change any register,
     // the same argument as Wcc's min (round 6)
     val base = EdgeBuilder.symmetrizeDistinct(edges)
-    // per-superstep message volume is ~Registers·|E| (one row per
-    // (register, out-edge)); size the loop's partitions to that
+    // a round's message row carries all 16 registers of one out-edge,
+    // about the bytes of up to 16 one-register rows; size p to that
     Superstep.onGraph(base, Csr.WeightMode.One, rowsPerEntry = Registers) { g =>
-    // vertex universe from the packed blocks: exchange-free, ~|V| rows
-    // instead of a 2|E| union+distinct (see Superstep.verticesFromAdj)
-    val nVerts = Superstep.verticesFromAdj(g.adj).count()
-
     // each vertex inserts ITSELF into its own sketch: index = low 4 hash
     // bits, rho over the remaining bits (shift, not divide — a double
     // division would lose bits past 2^53). Portable hashes are >= 0;
     // xxhash64 can be negative, so mask to 60 bits first on BOTH paths.
     val h = hash.one(col("vid")).bitwiseAND(lit((1L << 60) - 1L))
-    var state: DataFrame = Superstep.cut(
-      Superstep.verticesFromAdj(g.adj)
-        .select(
-          col("vid"),
-          h.bitwiseAND(lit(15L)).cast("int").as("idx"),
-          rho(shiftright(h, 4)).as("val"),
-        ),
-      nVerts,
+    // rho gets its own projection, so its 57-branch CASE is evaluated
+    // once per vertex, not inlined into all 16 register columns
+    val seeded = Superstep.verticesFromAdj(g.adj).select(
+      col("vid"),
+      h.bitwiseAND(lit(15L)).cast("int").as("idx"),
+      rho(shiftright(h, 4)).as("rho"),
     )
-    var perRound = Vector(estimateFrame(state))
-    var iter = 0
-    while (iter < rounds) {
-      val msgs = Superstep
-        .scatter(g.adj, state)
-        .select(col("vid"), col("idx"), col("val"))
-      val merged = msgs
-        .unionByName(state)
-        .repartition(g.p, col("vid")) // the ONE exchange of the superstep
-        .groupBy("vid", "idx") // hash(vid) clusters (vid, idx): no re-exchange
-        .agg(max("val").as("val"))
-      state = Superstep.cut(merged, nVerts * Registers)
-      iter += 1
-      perRound :+= estimateFrame(state)
-    }
-    // every round's state stays: the perRound frames read them lazily
-    HyperBallChain(state, perRound, rounds)
+    val regs = seeded.select(col("vid") +: registers.indices.map { j =>
+      when(col("idx") === j, col("rho")).otherwise(0).as(s"r$j")
+    }: _*)
+    val init = Superstep.cut(
+      regs.select((col("vid") +: registers :+ estE7(sScaled).as("e0")) ++
+        (1 to rounds).map(t => lit(null).cast("long").as(s"e$t")): _*),
+      g.entries,
+    )
+    val (state, _) = Superstep.iterate(Seq(g.adj), init, g.entries, rounds)(
+      (state, _) => superstep(g.adj, state, g.p))
+    HyperBallChain(state, rounds)
     } // onGraph
+  }
+
+  /** One round of the chain: (vid, r0..r15, e0..) state in, next state
+    * out, with the round's estimate from the merged registers in the
+    * first null e_t. Package-visible so the plan-shape suite can pin its
+    * one exchange and HashAggregate without running the loop.
+    */
+  private[graft] def superstep(
+      adj: Dataset[AdjBlock],
+      state: DataFrame,
+      p: Int,
+  ): DataFrame = {
+    val maxes = state.columns.toSeq.filter(_ != "vid").map(c => max(c).as(c))
+    // the round's estimate fills the first null e_t: no expression names
+    // the round, so every round reuses one set of generated classes
+    val es = state.columns.toSeq.filter(_.startsWith("e"))
+    val filled = es.sliding(2).map { case Seq(prev, e) =>
+      coalesce(col(e), when(col(prev).isNotNull, col("est"))).as(e)
+    }.toSeq
+    Superstep.scatter(adj, state.select(col("vid") +: registers: _*))
+      .drop("w")
+      .unionByName(state, allowMissingColumns = true)
+      .repartition(p, col("vid")) // the ONE exchange of the superstep
+      .groupBy("vid")
+      .agg(maxes.head, maxes.tail: _*)
+      .withColumn("est", estE7(sScaled))
+      .select((col("vid") +: registers :+ col(es.head)) ++ filled: _*)
   }
 
   def run(
@@ -153,40 +185,19 @@ object HyperBall {
       hash: Hash64 = Hash64.Xx,
   ): HyperBallResult = estimatesOf(chain(edges, rounds, hash))
 
-  /** Final-round estimates from an existing chain (no new supersteps). */
-  def estimatesOf(c: HyperBallChain): HyperBallResult =
-    HyperBallResult(c.state, c.perRound.last, c.rounds)
-
-  /** Ball-size estimate per vertex from a sparse register state:
-    * (vid, present, s_scaled, est_e7). Exact integer arithmetic up to
+  /** Final-round estimates from an existing chain (no new supersteps):
+    * (vid, present, s_scaled, est_e7), exact integer arithmetic up to
     * the one double division (see the object Scaladoc).
     */
-  private def estimateFrame(state: DataFrame): DataFrame = state
-    .groupBy("vid")
-    .agg(
-      count(lit(1)).as("present"),
-      // shiftleft(Column, Int) has no column-shift overload — SQL form
-      sum(expr("shiftleft(CAST(1 AS BIGINT), 58 - val)")).as("sp"),
-    )
-    .select(
+  def estimatesOf(c: HyperBallChain): HyperBallResult = HyperBallResult(
+    c.state.select(
       col("vid"),
-      col("present"),
-      (col("sp") + (lit(16L) - col("present")) * lit(1L << 58))
-        .as("s_scaled"),
-    )
-    .select(
-      col("vid"),
-      col("present"),
-      col("s_scaled"),
-      // α₁₆·m²/Σ2^-reg = 0.673·256·2^58/S_scaled; 256·2^58 = 2^66 is
-      // exact in double, and the op order (fold α·2^66, divide, scale)
-      // mirrors the oracle SQL token-for-token
-      round(
-        lit(Alpha16) * lit((1L << 58).toDouble * 256.0) /
-          col("s_scaled").cast("double") * 1e7,
-        0,
-      ).cast("long").as("est_e7"),
-    )
+      registers.map(r => (r > 0).cast("long")).reduce(_ + _).as("present"),
+      sScaled.as("s_scaled"),
+      estimate(c.rounds).as("est_e7"),
+    ),
+    c.rounds,
+  )
 
   /** Harmonic centrality — THE application HyperBall was built for
     * (Boldi & Vigna 2013, §4: "Geometric Centralities"):
@@ -207,14 +218,12 @@ object HyperBall {
     *   c_0 = −L, c_t = L/t − L/(t+1) (0<t<T), c_T = L/T
     *
     * so hc_scaled is EXACT cross-engine (commutative BIGINT adds; true
-    * HC ≈ hc_scaled / (L·1e7)). Safe while ball estimates stay below
+    * HC ≈ hc_scaled / (L·1e7)). Safe as long as ball estimates stay below
     * ~9e11 (est_e7·L under 2^63) — at 10^12 vertices switch L out for a
     * double sum and a tolerance contract.
     *
-    * Cost on top of [[run]]: one |V|-row estimate aggregate per round —
-    * O(T·|V|) next to the scatter's O(T·|E|), and each aggregate reads a
-    * state that is already hash-partitioned by vid (no extra exchange
-    * for the grouping's first key).
+    * Cost on top of [[run]]: one projection over the chain's state,
+    * which already carries every round's estimate.
     */
   def harmonic(
       edges: Dataset[Edge],
@@ -222,29 +231,15 @@ object HyperBall {
       hash: Hash64 = Hash64.Xx,
   ): HarmonicResult = harmonicOf(chain(edges, rounds, hash))
 
-  /** Harmonic centrality from an existing chain: one union-aggregate
-    * over the already-cut per-round frames — no new supersteps.
-    */
+  /** Harmonic centrality from an existing chain — no new supersteps. */
   def harmonicOf(c: HyperBallChain): HarmonicResult = {
     val rounds = c.rounds
     val l = (1 to rounds).foldLeft(1L)((acc, t) => lcm(acc, t.toLong))
-    def coef(t: Int): Long =
+    val centralities = telescoped(c, "hc_scaled") { t =>
       if (t == 0) -l
       else if (t == rounds) l / rounds
       else l / t - l / (t + 1)
-    val centralities = c.perRound.zipWithIndex.map { case (f, t) =>
-      f.select(
-        col("vid"),
-        col("est_e7"),
-        lit(coef(t)).as("c"),
-        lit(t).as("t"),
-      )
-    }.reduce(_ unionByName _)
-      .groupBy("vid")
-      .agg(
-        max(when(col("t") === rounds, col("est_e7"))).as("ball_e7"),
-        sum(col("est_e7") * col("c")).as("hc_scaled"),
-      )
+    }
     HarmonicResult(centralities, rounds, l)
   }
 
@@ -265,8 +260,8 @@ object HyperBall {
     * ball_e7²/(1e7·sumdist_e7) (Lin) — divisions the CALLER performs, so
     * no engine-internal float ordering crosses the contract. Registers
     * only grow, so est_e7 is non-decreasing per round and sumdist_e7 is
-    * always ≥ 0 (spec-pinned). Cost: one |V|-row aggregate over the
-    * already-cut frames — no new supersteps.
+    * always ≥ 0 (spec-pinned). Cost: one projection over the chain's
+    * state — no new supersteps.
     */
   def closeness(
       edges: Dataset[Edge],
@@ -274,23 +269,19 @@ object HyperBall {
       hash: Hash64 = Hash64.Xx,
   ): DataFrame = closenessOf(chain(edges, rounds, hash))
 
-  def closenessOf(c: HyperBallChain): DataFrame = {
-    val rounds = c.rounds
-    def coef(t: Int): Long = if (t == rounds) rounds.toLong else -1L
-    c.perRound.zipWithIndex.map { case (f, t) =>
-      f.select(
-        col("vid"),
-        col("est_e7"),
-        lit(coef(t)).as("c"),
-        lit(t).as("t"),
-      )
-    }.reduce(_ unionByName _)
-      .groupBy("vid")
-      .agg(
-        max(when(col("t") === rounds, col("est_e7"))).as("ball_e7"),
-        sum(col("est_e7") * col("c")).as("sumdist_e7"),
-      )
-  }
+  def closenessOf(c: HyperBallChain): DataFrame =
+    telescoped(c, "sumdist_e7")(t => if (t == c.rounds) c.rounds.toLong else -1L)
+
+  /** (vid, ball_e7, `name`) with `name` = Σ_{t=0..T} coef(t)·est_e7(t),
+    * exact BIGINT arithmetic over the chain's per-round estimates.
+    */
+  private def telescoped(c: HyperBallChain, name: String)(
+      coef: Int => Long,
+  ): DataFrame = c.state.select(
+    col("vid"),
+    estimate(c.rounds).as("ball_e7"),
+    (0 to c.rounds).map(t => estimate(t) * lit(coef(t))).reduce(_ + _).as(name),
+  )
 
   /** Approximate NEIGHBORHOOD FUNCTION and effective diameter — the
     * other headline HyperBall application (Boldi & Vigna 2013, §5;
@@ -306,9 +297,9 @@ object HyperBall {
     * float crosses a decision boundary. Registers only grow, so N(t) is
     * non-decreasing in t (spec-pinned).
     *
-    * Cost on top of [[run]]: one |V|-row sum per round over a state
-    * that is already hash-partitioned by vid — O(T·|V|) next to the
-    * scatter's O(T·|E|). The output is T+1 rows regardless of scale.
+    * Cost on top of [[run]]: one global aggregate over the chain's
+    * state — O(|V|) next to the scatter's O(T·|E|). The output is T+1
+    * rows regardless of scale (none on an empty graph).
     *
     * @return (t, nf_e7, reach90) for t = 0..rounds; the effective
     *         diameter is `min t with reach90` (t=rounds always
@@ -321,24 +312,21 @@ object HyperBall {
   ): DataFrame = neighborhoodOf(chain(edges, rounds, hash))
 
   /** Neighborhood function + 90% reach test from an existing chain:
-    * one |V|-row sum per round over the already-cut frames.
+    * one global sum per round's estimate column.
     */
-  def neighborhoodOf(c: HyperBallChain): DataFrame = {
-    val nf = c.perRound.zipWithIndex.map { case (f, t) =>
-      f.select(lit(t).as("t"), col("est_e7"))
-    }.reduce(_ unionByName _)
-      .groupBy("t")
-      .agg(sum(col("est_e7")).as("nf_e7"))
-    val last = nf.where(col("t") === c.rounds)
-      .select(col("nf_e7").as("nf_last"))
-    nf
-      .join(broadcast(last))
-      .select(
-        col("t"),
-        col("nf_e7"),
-        (col("nf_e7") * 10L >= col("nf_last") * 9L).as("reach90"),
-      )
-  }
+  def neighborhoodOf(c: HyperBallChain): DataFrame = c.state
+    .agg(array((0 to c.rounds).map(t => sum(estimate(t))): _*).as("nf"))
+    // a global aggregate emits one (null) row even over an empty state
+    .where(col("nf")(0).isNotNull)
+    .select(
+      posexplode(col("nf")).as(Seq("t", "nf_e7")),
+      col("nf")(c.rounds).as("nf_last"),
+    )
+    .select(
+      col("t"),
+      col("nf_e7"),
+      (col("nf_e7") * 10L >= col("nf_last") * 9L).as("reach90"),
+    )
 
   private def lcm(a: Long, b: Long): Long = {
     @annotation.tailrec def gcd(x: Long, y: Long): Long =

@@ -554,14 +554,16 @@ class GraphExtrasSpec extends GraftSuite {
 
   // ---- HyperBall neighborhood sketches ----
 
-  /** Plain-Scala HyperBall: same portable hash, same register init
-    * (idx = low 4 bits, rho = 1 + trailing zeros), max-merge rounds over
-    * N(v) ∪ {v}. Returns vid -> (present, s_scaled).
+  /** Plain-Scala HyperBall register states per round t = 0..rounds: the
+    * engine's register init over `hash` (masked to 60 bits; idx = low 4
+    * bits, rho = 1 + trailing zeros of the rest), max-merge rounds over
+    * N(v) ∪ {v}. `hash` mirrors the engine's [[graft.functions.Hash64]]
+    * on a vid.
     */
-  /** Register states per round t = 0..rounds. */
   private def hyperballRegsPerRound(
       g: Seq[(Long, Long, Double)],
       rounds: Int,
+      hash: Long => Long = v => md5PortableHash(v.toString),
   ): Vector[Map[Long, Map[Int, Int]]] = {
     val adj = g
       .flatMap { case (a, b, _) =>
@@ -570,7 +572,7 @@ class GraphExtrasSpec extends GraftSuite {
       .distinct.groupBy(_._1).map { case (v, ns) => v -> ns.map(_._2) }
     val verts = adj.keySet
     var regs: Map[Long, Map[Int, Int]] = verts.map { v =>
-      val h = md5PortableHash(v.toString) & ((1L << 60) - 1)
+      val h = hash(v) & ((1L << 60) - 1)
       val idx = (h & 15L).toInt
       val q = h >> 4
       val rho =
@@ -597,32 +599,51 @@ class GraphExtrasSpec extends GraftSuite {
   private def sScaled(m: Map[Int, Int]): Long =
     m.values.map(r => 1L << (58 - r)).sum + (16L - m.size) * (1L << 58)
 
+  /** Plain-Scala HyperBall's final registers: vid -> (present, s_scaled). */
   private def hyperballOracle(
       g: Seq[(Long, Long, Double)],
       rounds: Int,
+      hash: Long => Long,
   ): Map[Long, (Long, Long)] =
-    hyperballRegsPerRound(g, rounds).last.map { case (v, m) =>
+    hyperballRegsPerRound(g, rounds, hash).last.map { case (v, m) =>
       v -> (m.size.toLong, sScaled(m))
     }
 
-  test("hyperball (portable hash) registers match the plain-Scala oracle") {
-    Seq(67L, 83L).foreach { seed =>
+  test("hyperball registers match the plain-Scala oracle") {
+    import graft.functions.Hash64
+    // xxhash64 of a long vid is XXH64.hashLong from seed 42, often
+    // negative: the Xx case covers the 60-bit mask
+    val hashes = Seq[(Hash64, Long => Long)](
+      Hash64.Portable -> (v => md5PortableHash(v.toString)),
+      Hash64.Xx -> (v =>
+        org.apache.spark.sql.catalyst.expressions.XXH64.hashLong(v, 42L)),
+    )
+    for ((mode, hash) <- hashes; seed <- Seq(67L, 83L)) {
       val g = seededRandomGraph(seed, 30, 80)
-      val r = graft.algos.HyperBall
-        .run(edgeDs(g), rounds = 3, graft.functions.Hash64.Portable)
+      val r = graft.algos.HyperBall.run(edgeDs(g), rounds = 3, mode)
       val got = r.estimates.collect()
         .map(row => row.getLong(0) -> (row.getLong(1), row.getLong(2), row.getLong(3)))
         .toMap
-      val want = hyperballOracle(g, 3)
-      assert(got.keySet == want.keySet, s"seed $seed vertex sets")
+      val want = hyperballOracle(g, 3, hash)
+      assert(got.keySet == want.keySet, s"$mode seed $seed vertex sets")
       want.foreach { case (v, (present, s)) =>
         val (gp, gs, ge) = got(v)
-        assert(gp == present && gs == s, s"seed $seed vid $v registers")
+        assert(gp == present && gs == s, s"$mode seed $seed vid $v registers")
         val est = math.round(
           0.673 * ((1L << 58).toDouble * 256.0) / s.toDouble * 1e7)
-        assert(math.abs(ge - est) <= 1, s"seed $seed vid $v est")
+        assert(math.abs(ge - est) <= 1, s"$mode seed $seed vid $v est")
       }
     }
+  }
+
+  test("hyperball products return no rows on the empty graph") {
+    val empty = edgeDs(Seq.empty)
+    val hb = graft.algos.HyperBall
+    assert(hb.run(empty, rounds = 2).estimates.count() == 0L)
+    assert(hb.harmonic(empty, rounds = 2).centralities.count() == 0L)
+    assert(hb.closeness(empty, rounds = 2).count() == 0L)
+    // a global aggregate over no rows still emits one row
+    assert(hb.neighborhoodFunction(empty, rounds = 2).count() == 0L)
   }
 
   test("harmonic centrality matches the telescoped plain-Scala oracle") {

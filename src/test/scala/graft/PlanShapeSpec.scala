@@ -106,6 +106,33 @@ class PlanShapeSpec extends GraftSuite {
     }
   }
 
+  test("hyperball superstep = one exchange, HashAggregate only") {
+    withConf(
+      "spark.sql.adaptive.enabled" -> "false",
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+    ) {
+      val edges = edgeDs(Fixtures.powerlaw1k)
+      val p = spark.conf.get("spark.sql.shuffle.partitions").toInt
+      val adj = Csr.build(edges, p, Csr.WeightMode.One).localCheckpoint(true)
+      // the chain's dense state: 16 INT registers, then one BIGINT
+      // estimate per round (null until its round runs)
+      val regs = (0 until 16).map(j => (col("vid") % 3).cast("int").as(s"r$j"))
+      val state = Superstep.vertices(edges)
+        .localCheckpoint(true)
+        .select(col("vid") +: regs :+ lit(0L).as("e0") :+
+          lit(null).cast("long").as("e1"): _*)
+      val next = graft.algos.HyperBall.superstep(adj, state, p)
+      val plan = next.queryExecution.executedPlan.toString
+      val exchanges = "Exchange".r.findAllIn(plan).length
+      assert(exchanges == 1, s"expected 1 exchange, got $exchanges:\n$plan")
+      // fixed-width max buffers: a register array or any object-typed
+      // buffer would fall back to a sort- or object-based aggregate
+      assert(plan.contains("HashAggregate"), plan)
+      assert(!plan.contains("SortAggregate") &&
+        !plan.contains("ObjectHashAggregate"), plan)
+    }
+  }
+
   test("edge-build scan never reads content (column pruning to the scan)") {
     val src = spark.createDataset(
       (0L until 50L).map(Synth.rowAt(_, 50L)))
